@@ -377,6 +377,9 @@ class Table:
         replaced by ``df`` (which must contain exactly those buckets' rows);
         every other bucket's files carry over untouched — a 10-row update
         on a 1M-row store rewrites a handful of files, not the table.
+        This is the distributed form: one Spark write job. Row lists the
+        driver already holds commit through commit_arrow_buckets instead,
+        with the same invariants and no job.
         (This is the merge-on-read/delete-manifest seam: with the Iceberg
         jar present it becomes MERGE INTO with bucket(n, col) partitioning.)
         Raises ValueError if legacy unbucketed files exist — those may hold
@@ -396,6 +399,64 @@ class Table:
         for f in files:
             if self._file_bucket(f) not in buckets:
                 raise ValueError(f"replacement row landed outside {buckets}: {f}")
+        snap = Snapshot(
+            self._next_id(parent),
+            keep + files,
+            counters or {},
+            parent.snapshot_id if parent else None,
+        )
+        self._publish(snap)
+        return snap
+
+    def commit_arrow_buckets(
+        self,
+        tables: dict,
+        replace: bool,
+        counters: dict[str, int] | None = None,
+    ) -> Snapshot:
+        """Driver-side bucketed commit WITHOUT a Spark job — the Arrow
+        sibling of append_pylist (no job) and replace_buckets (bucket
+        scope). ``tables`` maps bucket id → pyarrow Table of that bucket's
+        rows; each non-empty one becomes ONE ``_bucket=K/part-0.parquet``.
+        ``replace=True`` drops the listed buckets' current files (an empty
+        table then empties its bucket); ``replace=False`` appends.
+
+        Files match what Spark writes for the same rows: INT96 timestamps
+        and no stored Arrow or Spark row schema, so a ``mergeSchema`` read
+        derives every file's types from the same parquet physical schema.
+        Same invariants as replace_buckets: refuses a table with legacy
+        unbucketed files, and raises ValueError for any row whose
+        ``pmod(hash(col), n)`` is not the bucket it is filed under."""
+        import pyarrow.parquet as pq
+
+        from crawl4ai_llm_spark.frontier.hashing import spark_hash_str
+
+        col, n = self.bucket_by
+        parent = self.current_snapshot()
+        old = parent.files if parent else []
+        if any(self._file_bucket(f) is None for f in old):
+            raise ValueError(
+                "commit_arrow_buckets on a table with unbucketed files — compact first"
+            )
+        for k, t in tables.items():
+            for key in t.column(col).to_pylist():
+                if spark_hash_str(key) % n != k:
+                    raise ValueError(f"row {key!r} does not belong in bucket {k}")
+        out_dir = os.path.join(self.data_dir, f"commit-{uuid.uuid4().hex}")
+        files = []
+        for k, t in sorted(tables.items()):
+            if t.num_rows == 0:
+                continue
+            path = os.path.join(out_dir, f"_bucket={k}", "part-0.parquet")
+            os.makedirs(os.path.dirname(path))
+            pq.write_table(
+                t.replace_schema_metadata(None),
+                path,
+                use_deprecated_int96_timestamps=True,
+                store_schema=False,
+            )
+            files.append(path)
+        keep = [f for f in old if self._file_bucket(f) not in tables] if replace else old
         snap = Snapshot(
             self._next_id(parent),
             keep + files,

@@ -347,6 +347,10 @@ _SIG_ROWS_COUNTER = None
 # instead of DRAM; same element-wise arithmetic, so signatures are
 # bit-identical to the full-width form (128 = one block = that old form)
 _SIG_BLOCK = int(os.environ.get("SPARK_GRAFT_SIG_BLOCK", "8"))
+if not 1 <= _SIG_BLOCK <= 128:
+    # 0 would make the block loop's range() step raise inside every
+    # signing task; above 128 is one block anyway
+    raise ValueError(f"SPARK_GRAFT_SIG_BLOCK must be in 1..128, got {_SIG_BLOCK}")
 
 
 def _blocked_minhash(A, B, shift, gh, starts):
@@ -416,8 +420,9 @@ def with_minhash_sig(shingles: DataFrame) -> DataFrame:
             gh = pd.util.hash_array(flat, hash_key="crawl4ai_spark42", categorize=False)
             # multiply-shift, IN-PLACE: `(A*gh + B) % P` here cost
             # 1.4 s/partition in integer division + 0.9 s in temporaries
-            # (three (128, n_grams) allocations); this form is one
-            # allocation and zero divisions — 0.065 s for the same input
+            # (three (128, n_grams) allocations); this form makes one
+            # (_SIG_BLOCK, n_grams) temporary per block and zero divisions
+            # — 0.065 s for the same input
             starts = np.zeros(len(lens), dtype=np.int64)
             np.cumsum(lens[:-1], out=starts[1:])
             mins = _blocked_minhash(A, B, SHIFT, gh, starts)  # (128, n_docs)

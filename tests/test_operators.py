@@ -549,3 +549,26 @@ def test_blocked_minhash_kernel_matches_full_width():
     got = dedup._blocked_minhash(A, B, shift, gh, starts)
     assert got.dtype == np.uint64
     assert np.array_equal(got, expected)
+
+
+@pytest.mark.parametrize("value,ok", [("0", False), ("129", False), ("-8", False), ("1", True), ("128", True)])
+def test_sig_block_env_validated_at_import(value, ok):
+    """SPARK_GRAFT_SIG_BLOCK outside 1..128 fails the import with a clear
+    ValueError instead of crashing every signing task later."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", "import crawl4ai_llm_spark.operators.dedup"],
+        cwd=root,
+        env={**os.environ, "SPARK_GRAFT_SIG_BLOCK": value},
+        capture_output=True,
+        text=True,
+    )
+    if ok:
+        assert proc.returncode == 0, proc.stderr
+    else:
+        assert proc.returncode != 0
+        assert "ValueError: SPARK_GRAFT_SIG_BLOCK must be in 1..128" in proc.stderr

@@ -1,0 +1,367 @@
+"""ProductStore's two write tiers: the driver tier (pyarrow reads of the
+touched buckets + one Arrow commit, no Spark job) and the Spark tier it
+falls through to. Both must give the same answers, the same errors and
+files Spark reads back like its own.
+"""
+
+from __future__ import annotations
+
+import random
+import uuid
+
+import pytest
+
+from crawl4ai_llm_spark.errors import DuplicateProductError, ProductNotFoundError
+
+
+def _spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched)."""
+    sc = spark.sparkContext
+    group = f"tiers-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _product(rng: random.Random, k: int) -> dict:
+    """Explicit, store_sku and url ids in turn; every value a non-empty
+    str / float / list / map, so the driver tier can type it."""
+    p = {
+        "title": f"title {rng.randrange(50):02d}",
+        "price": rng.randrange(100, 10000) / 100.0,
+        "category": rng.choice(["a", "b", "c"]),
+        "tags": [rng.choice(["x", "y", "z"]) for _ in range(rng.randrange(1, 3))],
+        "attributes": {"color": rng.choice(["red", "blue"]), "size": str(k % 4)},
+    }
+    if k % 3 == 0:
+        p["id"] = f"e{k:03d}"
+    elif k % 3 == 1:
+        p.update(store_name="S", sku=f"K{k:03d}")
+    else:
+        p["url"] = f"https://shop.example/p/{k}"
+    return p
+
+
+def _seeded_store(spark, path, n=24, n_buckets=4):
+    """A store whose every bucket holds files (the first save runs on Spark:
+    an empty store has no schema to type against)."""
+    from crawl4ai_llm_spark.storage import ProductStore
+
+    st = ProductStore(spark, str(path), n_buckets=n_buckets)
+    rng = random.Random(7)
+    ids = st.save_products([_product(rng, k) for k in range(n)])
+    assert st.tiers == {"spark:empty": 1}
+    assert {st.table._file_bucket(f) for f in st.table.current_snapshot().files} == set(
+        range(n_buckets)
+    )
+    return st, ids
+
+
+def _norm(recs: list[dict]) -> list[dict]:
+    """Stamps → their dense rank within ``recs``: two runs never share
+    clock values, but they must agree on which stamps are equal and on
+    their order."""
+    stamps = sorted({v for r in recs for v in r["metadata"].values()})
+    rank = {s: i for i, s in enumerate(stamps)}
+    return [{**r, "metadata": {k: rank[v] for k, v in r["metadata"].items()}} for r in recs]
+
+
+def _outcome(fn):
+    try:
+        return ("ok", fn())
+    except DuplicateProductError as e:
+        return ("dup", e.dup_ids, e.truncated)
+    except ProductNotFoundError as e:
+        return ("missing", e.missing_ids)
+
+
+def _run_mix(st, ids: list[str], seed: int) -> list:
+    """A seeded mix of saves, updates (explicit None and repeated ids
+    included), deletes and error cases; returns every outcome plus the
+    final table as seen by get_products and list_products."""
+    rng = random.Random(seed)
+    live = list(ids)
+    next_k = 100
+    trace = []
+    for _ in range(40):
+        op = rng.choice(
+            ["save", "save", "save_dup", "save_intra", "update", "update", "update",
+             "update_missing", "delete", "delete_missing", "get_many"]
+        )
+        if op in ("save", "save_dup", "save_intra"):
+            batch = [_product(rng, next_k + j) for j in range(rng.randrange(1, 4))]
+            next_k += len(batch)
+            if op == "save_dup":
+                batch.append({"id": rng.choice(live), "title": "clash"})
+            if op == "save_intra":
+                batch.append(dict(batch[0]))
+            out = _outcome(lambda: st.save_products(batch))
+            if out[0] == "ok":
+                live += out[1]
+        elif op in ("update", "update_missing"):
+            targets = rng.sample(live, rng.randrange(1, 3))
+            if rng.random() < 0.3:
+                targets.append(targets[0])  # repeated id: folds in order
+            payload = []
+            for t in targets:
+                u = {"id": t}
+                for f in rng.sample(["title", "price", "category", "tags", "attributes"], 2):
+                    u[f] = None if rng.random() < 0.25 else _product(rng, 0)[f]
+                payload.append(u)
+            if op == "update_missing":
+                payload.append({"id": "ghost", "title": "x"})
+            out = _outcome(lambda: st.update_products(payload))
+        elif op == "delete":
+            gone = rng.sample(live, 1 if len(live) < 10 else 2)
+            out = _outcome(lambda: st.delete_products(gone))
+            live = [i for i in live if i not in gone]
+        elif op == "delete_missing":
+            out = _outcome(lambda: st.delete_products([rng.choice(live), "ghost"]))
+        else:
+            want = rng.sample(live, 3) + (["ghost"] if rng.random() < 0.3 else [])
+            out = _outcome(lambda: _norm(st.get_products(want)))
+        trace.append((op, out))
+    trace.append(("final_get", _norm(st.get_products(sorted(live)))))
+    listed = st.list_products(page_size=1000, sort_by="title")
+    trace.append(("final_list", listed.total, _norm(listed.products)))
+    return trace
+
+
+def test_driver_tier_writes_run_no_spark_jobs(spark, tmp_path):
+    st, ids = _seeded_store(spark, tmp_path / "wh")
+    rng = random.Random(3)
+    saved, jobs = _spark_jobs(spark, lambda: st.save_products([_product(rng, 90)]))
+    assert jobs == 0
+    n, jobs = _spark_jobs(spark, lambda: st.update_products([{"id": ids[0], "price": 1.25}]))
+    assert (n, jobs) == (1, 0)
+    n, jobs = _spark_jobs(spark, lambda: st.delete_products([ids[1]]))
+    assert (n, jobs) == (1, 0)
+    _, jobs = _spark_jobs(spark, lambda: st.get_products([ids[0], saved[0]]))
+    assert jobs == 0
+    assert st.tiers == {"spark:empty": 1, "driver": 3}
+    assert st.get_product(ids[0])["price"] == 1.25
+    assert st.list_products().total == len(ids)
+
+
+def test_tier_parity_seeded_mix(spark, tmp_path):
+    """The same seeded mix on the driver tier and on the Spark tier (forced
+    by a zero file budget, as in test_point_lookup_arrow_path_matches_spark)
+    returns equal results, raises equal errors and leaves equal tables."""
+    driver, ids = _seeded_store(spark, tmp_path / "driver")
+    via_driver = _run_mix(driver, ids, seed=11)
+    assert set(driver.tiers) == {"spark:empty", "driver"}
+
+    forced, ids2 = _seeded_store(spark, tmp_path / "spark")
+    forced.ARROW_LOOKUP_MAX_FILES = 0
+    via_spark = _run_mix(forced, ids2, seed=11)
+    assert "driver" not in forced.tiers
+
+    assert ids == ids2
+    ops = {t[0] for t in via_driver}
+    assert {"save_dup", "save_intra", "update_missing", "delete_missing"} <= ops
+    for a, b in zip(via_driver, via_spark):
+        assert a == b, a[0]
+    assert len(via_driver) == len(via_spark)
+
+
+@pytest.mark.parametrize("tier", ["driver", "spark"])
+def test_update_repeated_id_folds_in_order(spark, tmp_path, tier):
+    """A batch naming one id twice applies both payloads in order
+    ({**existing, **u1, **u2}) to ONE row — it used to duplicate the row."""
+    st, ids = _seeded_store(spark, tmp_path / tier)
+    if tier == "spark":
+        st.ARROW_LOOKUP_MAX_FILES = 0
+    before = st.get_product(ids[0])
+    n = st.update_products(
+        [
+            {"id": ids[0], "title": "x", "category": "first"},
+            {"id": ids[0], "title": "y", "price": None},
+        ]
+    )
+    assert n == 2
+    assert st.tiers[tier if tier == "driver" else "spark:files"] == 1
+    got = st.get_product(ids[0])
+    assert (got["title"], got["category"], got["price"]) == ("y", "first", None)
+    assert got["tags"] == before["tags"]
+    listed = st.list_products(page_size=100)
+    assert listed.total == len(ids)
+    assert [p["title"] for p in listed.products if p["id"] == ids[0]] == ["y"]
+
+
+def _bulk_store(spark, path, n=24, n_buckets=4):
+    """A store bulk-loaded through save_products_df, whose ``_seq`` Spark
+    writes as int64 (a save-started store gets int32)."""
+    from crawl4ai_llm_spark.storage import ProductStore
+
+    st = ProductStore(spark, str(path), n_buckets=n_buckets)
+    rng = random.Random(7)
+    rows = [{**_product(rng, k), "id": f"b{k:03d}"} for k in range(n)]
+    cols = ("id", "title", "price", "category", "tags", "attributes")
+    df = spark.createDataFrame(
+        [tuple(r[c] for c in cols) for r in rows],
+        "id string, title string, price double, category string, "
+        "tags array<string>, attributes map<string,string>",
+    )
+    assert st.save_products_df(df) == n
+    return st, [r["id"] for r in rows]
+
+
+@pytest.mark.parametrize("origin,seq_type", [("save", "INT32"), ("bulk", "INT64")])
+def test_driver_written_files_read_back_through_spark(spark, tmp_path, origin, seq_type):
+    """Files committed by the driver tier are read by Spark like its own:
+    list_products' mergeSchema read, compact(), the bulk tier's duplicate
+    check and get_product all agree, and the parquet physical schema is
+    Spark's (INT96 stamps, the store's ``_seq`` width, no stored Arrow or
+    Spark schema)."""
+    import pyarrow.parquet as pq
+
+    make = _seeded_store if origin == "save" else _bulk_store
+    st, ids = make(spark, tmp_path / "wh")
+    spark_files = set(st.table.current_snapshot().files)
+    rng = random.Random(5)
+    # both origins store these keys (the bulk load has no sku / url)
+    keys = ("title", "price", "category", "tags", "attributes")
+    new_ids = st.save_products(
+        [{"id": f"n{k}", **{c: _product(rng, k)[c] for c in keys}} for k in range(3)]
+    )
+    st.update_products(
+        [{"id": ids[2], "title": None, "tags": ["q"]}, {"id": new_ids[0], "price": 2.5}]
+    )
+    st.delete_products([ids[3]])
+    assert st.tiers["driver"] == 3
+
+    live = sorted(set(ids + new_ids) - {ids[3]})
+    by_get = st.get_products(live)
+    listed = st.list_products(page_size=100, sort_by="title")
+    assert listed.total == len(live)
+    assert sorted(listed.products, key=lambda r: r["id"]) == by_get
+
+    def physical(f):
+        s = pq.ParquetFile(f).schema
+        return {s.column(i).path: s.column(i).physical_type for i in range(len(s))}
+
+    spark_types: dict[str, str] = {}
+    for f in spark_files:
+        spark_types.update(physical(f))
+    driver_files = set(st.table.current_snapshot().files) - spark_files
+    assert driver_files and all(f.endswith("/part-0.parquet") for f in driver_files)
+    for f in driver_files:
+        types = physical(f)
+        assert types["metadata.created_at"] == types["metadata.updated_at"] == "INT96"
+        assert types["_seq"] == seq_type
+        assert {p: spark_types[p] for p in types} == types
+        assert pq.ParquetFile(f).metadata.metadata is None
+
+    df = spark.createDataFrame([(new_ids[1], "t")], "id string, title string")
+    with pytest.raises(DuplicateProductError) as ei:
+        st.save_products_df(df)
+    assert ei.value.dup_ids == [new_ids[1]]
+
+    st.compact()
+    assert st.get_products(live) == by_get
+    after = st.list_products(page_size=100, sort_by="title")
+    assert after.products == listed.products
+    assert st.get_product(ids[2])["tags"] == ["q"]
+
+
+def test_commit_arrow_buckets_refuses_misplaced_rows_and_legacy_files(spark, tmp_path):
+    """replace_buckets' invariants hold for the Arrow commit: a row filed
+    under a bucket its id does not hash to, or a table holding legacy
+    unbucketed files, raises before anything is written or published."""
+    import pyarrow as pa
+
+    st, ids = _seeded_store(spark, tmp_path / "wh")
+    home = st._buckets_of([ids[0]]).pop()
+    row = pa.table({"id": [ids[0]], "title": ["t"]})
+    head = st.table.current_snapshot().snapshot_id
+    with pytest.raises(ValueError, match="does not belong in bucket"):
+        st.table.commit_arrow_buckets({(home + 1) % 4: row}, replace=True)
+    assert st.table.current_snapshot().snapshot_id == head
+    _legacy_layout(spark, st)
+    head = st.table.current_snapshot().snapshot_id
+    with pytest.raises(ValueError, match="compact first"):
+        st.table.commit_arrow_buckets({home: row}, replace=False)
+    assert st.table.current_snapshot().snapshot_id == head
+
+
+def _legacy_layout(spark, st):
+    from crawl4ai_llm_spark.catalog import Catalog
+
+    raw = Catalog(spark, st.catalog.warehouse).table("products", merge_schema=True)
+    raw.overwrite(st.table.read(), counters=st.table.current_snapshot().counters)
+
+
+def _schema_split(spark, st):
+    # caller metadata in one file of a bucket: a struct pyarrow will not
+    # unify with the plain {created_at, updated_at} one (Spark merges it)
+    st.save_products([{"id": "m0", "title": "t", "metadata": {"source": "s"}}])
+
+
+# reason → (store set-up, the write that must fall through, its check)
+FALLBACKS = {
+    "empty": (
+        None,
+        lambda st, ids: st.save_products([{"id": "n0", "title": "t"}]),
+        lambda st, ids: st.get_product("n0")["title"] == "t",
+    ),
+    "files": (
+        lambda spark, st: setattr(st, "ARROW_LOOKUP_MAX_FILES", 0),
+        lambda st, ids: st.update_products([{"id": ids[0], "title": "u"}]),
+        lambda st, ids: st.get_product(ids[0])["title"] == "u",
+    ),
+    "legacy": (
+        _legacy_layout,
+        lambda st, ids: st.save_products([{"id": "n0", "title": "t"}]),
+        lambda st, ids: st.get_product("n0")["title"] == "t",
+    ),
+    "schema": (
+        _schema_split,
+        lambda st, ids: st.update_products([{"id": ids[0], "title": "u"}]),
+        lambda st, ids: st.get_product(ids[0])["title"] == "u",
+    ),
+    "key": (
+        None,
+        lambda st, ids: st.update_products([{"id": ids[0], "brand_new": "v"}]),
+        lambda st, ids: st.get_product(ids[0])["brand_new"] == "v",
+    ),
+    "metadata": (
+        None,
+        lambda st, ids: st.save_products([{"id": "n0", "title": "t", "metadata": {"source": "s"}}]),
+        lambda st, ids: st.get_product("n0")["metadata"]["source"] == "s",
+    ),
+    "id": (
+        None,
+        lambda st, ids: st.save_products([{"title": "no id, sku or url"}]),
+        lambda st, ids: st.list_products(filters={"title": "no id, sku or url"}).total == 1,
+    ),
+    "type": (
+        None,
+        lambda st, ids: st.update_products([{"id": ids[0], "price": 5}]),
+        lambda st, ids: st.get_product(ids[0])["price"] == 5.0,
+    ),
+}
+
+
+@pytest.mark.parametrize("reason", sorted(FALLBACKS))
+def test_fallback_runs_spark_tier(spark, tmp_path, reason):
+    """Each case the driver tier cannot reproduce exactly falls through to
+    the Spark tier — it runs Spark jobs, gives the right result, and is
+    counted as ``spark:<reason>``."""
+    from crawl4ai_llm_spark.storage import ProductStore
+
+    prepare, write, check = FALLBACKS[reason]
+    if reason == "empty":
+        st, ids = ProductStore(spark, str(tmp_path / "wh"), n_buckets=4), []
+    else:
+        st, ids = _seeded_store(spark, tmp_path / "wh", n=8, n_buckets=1)
+    if prepare is not None:
+        prepare(spark, st)
+    before = st.tiers.copy()
+    _, jobs = _spark_jobs(spark, lambda: write(st, ids))
+    assert jobs > 0
+    assert st.tiers - before == {f"spark:{reason}": 1}
+    assert check(st, ids)
