@@ -20,20 +20,25 @@ update_products batch merge, all-or-nothing pre-validation; the touched
                 buckets are read, merged and rewritten (D4)
 delete_product  rewrite of the id's bucket without the row (D5)
 delete_products batch form, all-or-nothing (D6)
-list_products   filter → sort → paginate → hydrate pipeline (Q1-Q7)
+list_products   filter → sort → paginate → hydrate pipeline (Q1-Q7):
+                driver tier: one pyarrow scan of the live files with the
+                filters pushed down, sort + page on the driver, only the
+                page's rows hydrated; Spark tier: list_products_df
 ==============  ============================================================
 
-Two tiers. Row-list writes (save/update/delete) and point reads first
-try the DRIVER tier: pyarrow reads the touched buckets' files, the checks
-and the merge run in Arrow/Python, and ``Table.commit_arrow_buckets``
-commits one file per touched bucket — no Spark job at all (a one-row
-write as Spark jobs costs 4-8 jobs and ~0.5-1 s of scheduling). Whatever
-that tier cannot reproduce exactly — an empty store or bucket, a legacy
-or over-budget bucket, unifiable-schema failures, new keys, caller
-metadata, content-hash ids, values it does not type like Spark — falls
-through to the SPARK tier, one distributed job per commit. ``tiers``
-counts which tier each write took (``driver`` / ``spark:<reason>``).
-The bulk tier (save_products_df) and list_products always run on Spark.
+Two tiers. Row-list writes (save/update/delete), point reads and
+list_products first try the DRIVER tier: pyarrow reads the touched
+buckets' files (the whole table for a list), the checks, the merge or
+the sort run in Arrow/Python, and ``Table.commit_arrow_buckets`` commits
+one file per touched bucket — no Spark job at all (a one-row write as
+Spark jobs costs 4-8 jobs and ~0.5-1 s of scheduling; a list, 4 jobs and
+~0.35 s). Whatever that tier cannot reproduce exactly — an empty store or
+bucket, a legacy or over-budget bucket or table, unifiable-schema
+failures, new keys, caller metadata, content-hash ids, values it does
+not type like Spark, dotted filter or sort paths, non-string sort keys —
+falls through to the SPARK tier. ``tiers`` counts which tier each write
+and each list took (``driver`` / ``spark:<reason>``). The bulk tier
+(save_products_df) always runs on Spark.
 The reference's O(index) read-modify-write per call
 (json_storage.py:195-221) is what capped it at ~356 rec/s (BASELINE.md).
 
@@ -214,8 +219,8 @@ class ProductStore:
         # reference falls back to uuid4 (json_storage.py:90); deterministic
         # mode derives the id from a content hash instead so runs replay.
         self.deterministic_ids = deterministic_ids
-        # which tier each save/update/delete took: "driver" or
-        # "spark:<reason>" — a silent fallback shows up as a count
+        # which tier each save/update/delete and each list_products took:
+        # "driver" or "spark:<reason>" — a silent fallback shows up as a count
         self.tiers: Counter[str] = Counter()
 
     # ------------------------------------------------------------------ reads
@@ -327,11 +332,17 @@ class ProductStore:
     def _ensure_id_and_stamps(
         self,
         df: DataFrame,
-        next_seq: int,
-        bulk: bool = False,
+        next_seq: int | None,
         preserve_stamps: bool = False,
+        seq_type: T.DataType | None = None,
     ) -> DataFrame:
         """E1 id hierarchy + E4 timestamps + save-order sequence.
+
+        ``_seq`` is ``next_seq`` + the row's input position, cast to
+        ``seq_type`` (the stored width; parquet schema merging refuses to
+        mix int32 and int64 files). ``next_seq=None`` (the bulk tier)
+        leaves the raw partition-embedded position instead —
+        save_products_df densifies it once the batch is cached.
 
         id precedence (verified ref behavior, json_storage.py:61-90):
         explicit id → "{store_name}_{sku}" → url-hash id → random.
@@ -393,15 +404,12 @@ class ProductStore:
             "metadata",
             F.struct(*meta_fields, created.alias("created_at"), updated.alias("updated_at")),
         )
-        if bulk:
+        if next_seq is None:
             # bulk tier: no meaningful insertion order — a partition-embedded
             # monotonic id avoids the single-partition ranking window
-            out = out.withColumn("_seq", F.lit(next_seq) + F.monotonically_increasing_id())
-        else:
-            out = out.withColumn(
-                "_seq", F.lit(next_seq) + F.row_number().over(self._save_order_window()) - 1
-            )
-        return out
+            return out.withColumn("_seq", F.monotonically_increasing_id())
+        seq = F.lit(next_seq) + F.row_number().over(self._save_order_window()) - 1
+        return out.withColumn("_seq", seq if seq_type is None else seq.cast(seq_type))
 
     @staticmethod
     def _save_order_window():
@@ -483,7 +491,7 @@ class ProductStore:
         # preserve_metadata_stamps = migration mode: original
         # created_at/updated_at survive (sources/reference_json)
         batch = self._ensure_id_and_stamps(
-            batch, self._next_seq(), bulk=True, preserve_stamps=preserve_metadata_stamps
+            batch, None, preserve_stamps=preserve_metadata_stamps
         ).cache()
         # every per-call cache lands here and is unpersisted on exit — the
         # content tier's match plans are unique per save and would leak
@@ -515,12 +523,26 @@ class ProductStore:
                 batch, prepared = self._content_dup_tier(
                     batch, existing, reject_near_dups, near_dup_tau, on_near_dup, caches
                 )
-            n, max_seq = batch.agg(
-                F.count("*").alias("n"), F.max("_seq").alias("m")
-            ).collect()[0]
+            # dense _seq from _next_seq(): the partition-embedded position
+            # (partition << 33 | row) becomes next_seq + the slots of the
+            # earlier partitions + row, in the stored width — a bulk load
+            # into a save-started store stays int32, and max_seq stays small
+            part, row = F.shiftright("_seq", 33), F.col("_seq").bitwiseAND((1 << 33) - 1)
+            sizes = batch.groupBy(part.alias("p")).agg(
+                F.count("*").alias("n"), F.max(row).alias("m")
+            ).collect()
+            n = sum(r["n"] for r in sizes)
             if n == 0:
                 return 0  # every row skipped as a near-dup: nothing to commit
-            self.table.append(batch, counters={"max_seq": int(max_seq)})
+            offsets, next_seq = [], self._next_seq()
+            for r in sorted(sizes, key=lambda r: r["p"]):
+                offsets += [F.lit(r["p"]).cast("long"), F.lit(next_seq).cast("long")]
+                next_seq += r["m"] + 1  # "skip" mode leaves gaps: count slots
+            seq_type = existing.schema["_seq"].dataType if existing is not None else T.LongType()
+            batch = batch.withColumn(
+                "_seq", (F.create_map(*offsets)[part] + row).cast(seq_type)
+            )
+            self.table.append(batch, counters={"max_seq": next_seq - 1})
             if reject_near_dups is not None:
                 # maintain the index: the committed batch's band keys append.
                 # text_col_crc must ride along — sync_documents requires it
@@ -622,16 +644,24 @@ class ProductStore:
         if not products:
             return []
         products = self._normalize_caller_metadata(products)
+        # a key that is None in every record has no inferable Spark type
+        # (CANNOT_DETERMINE_TYPE): drop it before either tier, absent ≡ None
+        present = {k for p in products for k, v in p.items() if v is not None}
+        products = [{k: v for k, v in p.items() if k in present} for p in products]
         ids = self._driver_save(products)
         if ids is not None:
             return ids
+        existing = self._df()
         batch = self._rows_df(products)  # schema-on-read inference
-        batch = self._ensure_id_and_stamps(batch, self._next_seq())
+        batch = self._ensure_id_and_stamps(
+            batch,
+            self._next_seq(),
+            seq_type=existing.schema["_seq"].dataType if existing is not None else None,
+        )
         batch = batch.cache()
         try:
             ids = [r["id"] for r in batch.select("id").collect()]
             _raise_intra_batch_dups(ids)
-            existing = self._df()
             if existing is not None:
                 # dup-vs-existing = semi-join of the (small) batch against
                 # the table; Catalyst broadcasts the batch side.
@@ -672,9 +702,22 @@ class ProductStore:
     # stops paying (footer scans grow linearly; a store that hot needs
     # compact() anyway) — the one gate of every driver-tier read and write
     ARROW_LOOKUP_MAX_FILES = 64
+    # live rows above which list_products leaves the driver: its whole-table
+    # scan holds every filtered row in driver memory and sorts them there.
+    # Measured on the store bench's rows (BENCH.md "list_products tiers"):
+    # an unfiltered list loses to Spark between 500k and 1M rows, and peaks
+    # at ~128 B/row of Arrow memory — 250k rows keeps a 2x margin on the
+    # crossover and the memory under 32 MB
+    ARROW_LIST_MAX_ROWS = 250_000
 
-    def _arrow_scan(self, ids: list[str], whole_buckets: bool = False, write: bool = False):
-        """Bucket-scoped driver-side pyarrow read — (fallback reason, data).
+    def _arrow_scan(
+        self,
+        ids: list[str] | None,
+        whole_buckets: bool = False,
+        write: bool = False,
+        where=None,
+    ):
+        """Driver-side pyarrow read — (fallback reason, data).
 
         Reads only the files of the ids' buckets (plus legacy unbucketed
         files, which may hold any id): the footers' schemas unify (the
@@ -685,11 +728,17 @@ class ProductStore:
         needs). ``write`` declines legacy layouts, which no bucket-scoped
         commit may touch. data is None when no file can hold the ids.
 
+        ``ids=None`` is the whole-table mode of list_products: every live
+        file, the footers' row counts summed against ARROW_LIST_MAX_ROWS,
+        and ``where(schema)`` — given the whole table's unified schema —
+        returns (reason, filter expression) for one pushed-down scan.
+
         A bucket-pruned read through Spark is still ~40 per-query
         overheads (~0.2 s); this read is a few ms. Reasons to decline —
         the caller then runs its Spark tier: ``empty`` (no snapshot),
         ``legacy``, ``files`` (over ARROW_LOOKUP_MAX_FILES), ``schema``
-        (footers don't unify, or a file pyarrow can't open)."""
+        (footers don't unify, or a file pyarrow can't open), ``rows``
+        (over ARROW_LIST_MAX_ROWS), or whatever ``where`` returns."""
         import pyarrow as pa
         import pyarrow.dataset as ds
         import pyarrow.parquet as pq
@@ -699,19 +748,25 @@ class ProductStore:
             return "empty", None
         if write and any(Table._file_bucket(f) is None for f in snap.files):
             return "legacy", None
-        buckets = self._buckets_of(ids)
-        files = [
-            f
-            for f in snap.files
-            if (b := Table._file_bucket(f)) is None or b in buckets
-        ]
+        files = snap.files
+        if ids is not None:
+            buckets = self._buckets_of(ids)
+            files = [f for f in files if (b := Table._file_bucket(f)) is None or b in buckets]
         if len(files) > self.ARROW_LOOKUP_MAX_FILES:
             return "files", None
         if not files:
             return None, None
         try:
-            schema = pa.unify_schemas([pq.read_schema(f) for f in files])
+            footers = [pq.read_metadata(f) for f in files]
+            schema = pa.unify_schemas([m.schema.to_arrow_schema() for m in footers])
             dataset = ds.dataset(files, format="parquet", schema=schema)
+            if ids is None:
+                if sum(m.num_rows for m in footers) > self.ARROW_LIST_MAX_ROWS:
+                    return "rows", None
+                reason, expr = where(schema)
+                if reason is not None:
+                    return reason, None
+                return None, dataset.to_table(filter=expr)
             if not whole_buckets:
                 return None, dataset.to_table(filter=ds.field("id").isin(ids))
             parts: dict[int, list] = {}
@@ -727,14 +782,14 @@ class ProductStore:
             return "schema", None
 
     @staticmethod
-    def _records(tbl) -> dict[str, dict[str, Any]]:
-        """Arrow rows → {id: record} in Row.asDict(recursive) shape."""
-        cols = [(n, c) for n, c in zip(tbl.schema.names, tbl.columns) if n != "_seq"]
-        recs: dict[str, dict[str, Any]] = {}
-        for i in range(tbl.num_rows):
-            rec = {n: _arrow_cell(c[i].as_py(), c.type) for n, c in cols}
-            recs[rec["id"]] = rec
-        return recs
+    def _rows(tbl) -> list[dict[str, Any]]:
+        """Arrow rows → records in Row.asDict(recursive) shape, in order."""
+        cols = [
+            (n, c.type, c.to_pylist())
+            for n, c in zip(tbl.schema.names, tbl.columns)
+            if n != "_seq"
+        ]
+        return [{n: _arrow_cell(v[i], t) for n, t, v in cols} for i in range(tbl.num_rows)]
 
     def _spark_tier(self, reason: str) -> None:
         self.tiers[f"spark:{reason}"] += 1
@@ -762,10 +817,9 @@ class ProductStore:
         file written is the one the Spark tier would write: columns in
         createDataFrame's sorted-key order, id, a ``{created_at,
         updated_at}`` struct stamped with one ``now``, ``_seq`` in input
-        order. ``_seq`` keeps the stored integer width: the Spark tier's
-        ``F.lit`` makes it int32 in a store begun by small saves and int64
-        after a bulk load, and parquet schema merging refuses to mix the
-        two."""
+        order. ``_seq`` keeps the stored integer width, as the Spark tiers
+        do: int32 in a store begun by save_products, int64 in one begun by
+        a bulk load (parquet schema merging refuses to mix the two)."""
         import pyarrow as pa
 
         from crawl4ai_llm_spark.frontier.hashing import spark_hash_str
@@ -918,7 +972,7 @@ class ProductStore:
         read as a Spark scan."""
         reason, tbl = self._arrow_scan(ids)
         if reason is None:
-            return self._records(tbl) if tbl is not None else {}
+            return {r["id"]: r for r in self._rows(tbl)} if tbl is not None else {}
         df = self._df_for_ids(ids)
         if df is None:
             return {}
@@ -1248,7 +1302,9 @@ class ProductStore:
         sort_by: str | None = None,
         sort_order: str = "asc",
     ) -> tuple[DataFrame, int]:
-        """The Q1-Q6 pipeline as a DataFrame (page_df, total).
+        """The Q1-Q6 pipeline as a DataFrame (page_df, total) — the Spark
+        tier of list_products, which runs it for whatever _driver_list
+        declines.
 
         filter → sort → offset/limit. Late materialization (ref
         json_storage.py:674-678) is Catalyst column pruning — nothing to
@@ -1290,6 +1346,85 @@ class ProductStore:
         page_df = df.offset(start).limit(page_size).drop("_seq")
         return page_df, total
 
+    def _list_where(self, schema, filters: dict[str, Any] | None, sort_by: str | None):
+        """(reason, expression) for the driver-tier list scan: the filters
+        as one pyarrow expression under the whole table's unified schema,
+        row for row what list_products_df keeps — or why this tier cannot
+        say (``filter`` / ``sort`` / ``schema``)."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        if "_seq" not in schema.names:
+            return "schema", None
+        if sort_by and ("." in sort_by or (
+            sort_by in schema.names and not pa.types.is_string(schema.field(sort_by).type)
+        )):
+            # struct/map paths, and Spark's cast-to-string of a number,
+            # which formats floats unlike Python
+            return "sort", None
+        preds = []
+        for field, v in (filters or {}).items():
+            if (
+                "." in field
+                or isinstance(v, list)
+                or (isinstance(v, float) and math.isnan(v))  # Spark: NaN = NaN
+                or (isinstance(v, int) and not -(2**63) <= v < 2**63)
+            ):
+                return "filter", None
+            if field not in schema.names or not self._filterable(field):
+                preds.append(ds.scalar(False))  # unknown, or unindexed in compat mode
+                continue
+            typ = schema.field(field).type
+            if pa.types.is_string(typ):
+                ok = isinstance(v, str)
+            elif pa.types.is_integer(typ) or pa.types.is_floating(typ):
+                ok = isinstance(v, (int, float)) and not isinstance(v, bool)
+            elif pa.types.is_boolean(typ):
+                ok = isinstance(v, bool)
+            else:
+                return "filter", None
+            # a type mismatch matches nothing, as _type_compatible rules on
+            # Spark; so does None (col = NULL is never true)
+            preds.append(ds.field(field) == v if ok else ds.scalar(False))
+        return None, reduce(lambda a, b: a & b, preds) if preds else None
+
+    def _driver_list(
+        self,
+        filters: dict[str, Any] | None,
+        page: int,
+        page_size: int,
+        sort_by: str | None,
+        sort_order: str,
+    ) -> ListResult | None:
+        """list_products without a Spark job; None when declined. One
+        whole-table _arrow_scan with the filters pushed down gives
+        ``total``; the rows sort as list_products_df sorts them
+        (``coalesce(key, "")``, then ``_seq`` ascending — a column absent
+        from the table sorts by ``_seq`` alone), and only the page's rows
+        are hydrated."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        reason, tbl = self._arrow_scan(
+            None, where=lambda schema: self._list_where(schema, filters, sort_by)
+        )
+        if reason not in (None, "empty"):
+            return self._spark_tier(reason)
+        self.tiers["driver"] += 1
+        total = tbl.num_rows if tbl is not None else 0
+        start = (page - 1) * page_size
+        products: list[dict[str, Any]] = []
+        if start < total:
+            cols = {"_seq": tbl.column("_seq")}
+            order = [("_seq", "ascending")]
+            if sort_by and sort_by in tbl.schema.names:
+                cols["key"] = pc.coalesce(tbl.column(sort_by), pa.scalar(""))
+                desc = sort_order.lower() == "desc"
+                order.insert(0, ("key", "descending" if desc else "ascending"))
+            idx = pc.sort_indices(pa.table(cols), sort_keys=order)
+            products = self._rows(tbl.take(idx[start : start + page_size]))
+        return ListResult(products, total, page, page_size, max(1, math.ceil(total / page_size)))
+
     def list_products(
         self,
         filters: dict[str, Any] | None = None,
@@ -1299,13 +1434,15 @@ class ProductStore:
         sort_order: str = "asc",
     ) -> ListResult:
         """Q7 — full envelope, contract-identical to the reference
-        (base.py:189-196): total_pages = ceil(total/page_size), minimum 1."""
+        (base.py:189-196): total_pages = ceil(total/page_size), minimum 1.
+        The driver tier (_driver_list) runs first; list_products_df is the
+        Spark tier for what it declines. ``page`` and ``page_size`` below
+        1 raise ValueError on both."""
+        if page < 1 or page_size < 1:
+            raise ValueError(f"page and page_size must be >= 1 (got {page}, {page_size})")
+        res = self._driver_list(filters, page, page_size, sort_by, sort_order)
+        if res is not None:
+            return res
         page_df, total = self.list_products_df(filters, page, page_size, sort_by, sort_order)
         products = [r.asDict(recursive=True) for r in page_df.collect()]
-        return ListResult(
-            products=products,
-            total=total,
-            page=page,
-            page_size=page_size,
-            total_pages=max(1, math.ceil(total / page_size)),
-        )
+        return ListResult(products, total, page, page_size, max(1, math.ceil(total / page_size)))

@@ -1,7 +1,8 @@
-"""ProductStore's two write tiers: the driver tier (pyarrow reads of the
-touched buckets + one Arrow commit, no Spark job) and the Spark tier it
-falls through to. Both must give the same answers, the same errors and
-files Spark reads back like its own.
+"""ProductStore's two tiers for writes and lists: the driver tier (pyarrow
+reads of the touched buckets + one Arrow commit, or one whole-table scan
+for a list; no Spark job) and the Spark tier it falls through to. Both
+must give the same answers, the same errors and files Spark reads back
+like its own.
 """
 
 from __future__ import annotations
@@ -365,3 +366,275 @@ def test_fallback_runs_spark_tier(spark, tmp_path, reason):
     assert jobs > 0
     assert st.tiers - before == {f"spark:{reason}": 1}
     assert check(st, ids)
+
+
+# --------------------------------------------------------------- list tiers
+
+
+def _list_product(k: int) -> dict:
+    return {
+        "id": f"i{k:02d}",
+        "title": f"t{k % 5}",
+        "category": "abc"[k % 3],
+        "qty": k % 4,
+        "price": [2.5, 12.0, 7.25][k % 3],
+        "active": k % 2 == 0,
+        "tags": ["x", "y"] if k % 2 else ["x"],
+        "attributes": {"color": "red" if k % 2 else "blue"},
+    }
+
+
+@pytest.fixture(scope="module")
+def list_store(spark, tmp_path_factory):
+    """A store holding Spark-written and driver-written files, with string,
+    int, float, bool, list and map columns, a missing title and a ``rank``
+    column that only some buckets' files carry."""
+    from crawl4ai_llm_spark.storage import ProductStore
+
+    st = ProductStore(spark, str(tmp_path_factory.mktemp("list") / "wh"), n_buckets=4)
+    st.save_products([_list_product(k) for k in range(12)])
+    st.save_products([_list_product(k) for k in range(12, 20)])
+    st.update_products([{"id": "i03", "title": None}, {"id": "i14", "category": "a"}])
+    st.save_products([{**_list_product(k), "rank": f"r{k % 3}"} for k in (20, 21)])
+    st.save_products([_list_product(k) for k in range(22, 26)])
+    assert st.tiers == {"spark:empty": 1, "driver": 3, "spark:key": 1}
+    return st
+
+
+def _same_table(st, forced: bool = True, **kw):
+    """A second store over the same table; ``forced`` makes its driver
+    tier always decline (a zero file budget)."""
+    from crawl4ai_llm_spark.storage import ProductStore
+
+    other = ProductStore(st.spark, st.catalog.warehouse, n_buckets=st.n_buckets, **kw)
+    if forced:
+        other.ARROW_LOOKUP_MAX_FILES = 0
+    return other
+
+
+LIST_FILTERS = {
+    "all": None,
+    "str": {"category": "a"},
+    "int": {"qty": 2},
+    "int_by_float": {"qty": 2.0},
+    "int_by_fraction": {"qty": 2.5},
+    "float": {"price": 12.0},
+    "float_by_int": {"price": 12},
+    "bool": {"active": True},
+    "two_keys": {"category": "b", "active": False},
+    "none_value": {"category": None},
+    "unknown_field": {"nope": "x"},
+    "some_buckets": {"rank": "r2"},
+    "mismatch_str": {"category": 5},
+    "mismatch_int": {"qty": "2"},
+    "mismatch_bool": {"active": 1},
+    "dotted": {"attributes.color": "red"},
+    "list_value": {"tags": ["x", "y"]},
+}
+LIST_SORTS = [
+    (None, "asc"),
+    ("title", "asc"),  # one title missing: sorts as ""
+    ("title", "desc"),
+    ("rank", "desc"),  # absent from most files
+    ("absent", "asc"),  # no such column: save order
+    ("category", "desc"),  # equal keys: _seq breaks the ties
+    ("price", "asc"),  # numeric: Spark's cast-to-string order
+]
+LIST_PAGES = [(1, 4), (2, 4), (9, 4)]  # first, middle, past the end
+
+
+def _list_reason(filters, sort_by) -> str | None:
+    if sort_by == "price":
+        return "sort"
+    if filters in (LIST_FILTERS["dotted"], LIST_FILTERS["list_value"]):
+        return "filter"
+    return None
+
+
+@pytest.mark.parametrize("name", sorted(LIST_FILTERS))
+def test_list_tier_parity(spark, list_store, name):
+    """Every sort and page of one filter: the driver tier returns exactly
+    the ListResult of the Spark tier, product order included, with no
+    Spark job — or declines, counted, and runs the Spark tier."""
+    filters = LIST_FILTERS[name]
+    forced = _same_table(list_store)
+    shift = sorted(LIST_FILTERS).index(name)  # every sort meets every page
+    for i, (sort_by, order) in enumerate(LIST_SORTS):
+        page, size = LIST_PAGES[(i + shift) % len(LIST_PAGES)]
+        kw = dict(filters=filters, page=page, page_size=size, sort_by=sort_by, sort_order=order)
+        before = list_store.tiers.copy()
+        got, jobs = _spark_jobs(spark, lambda: list_store.list_products(**kw))
+        want = forced.list_products(**kw)
+        assert got == want, (sort_by, order, page)
+        reason = _list_reason(filters, sort_by)
+        if reason is None:
+            assert (list_store.tiers - before, jobs) == ({"driver": 1}, 0)
+        else:
+            assert list_store.tiers - before == {f"spark:{reason}": 1}
+            assert jobs > 0
+    assert set(forced.tiers) == {"spark:files"}
+
+
+def test_list_tier_parity_covers_the_cases(spark, list_store):
+    """The parity matrix reaches what it claims: pages past the end, ties,
+    missing sort values, columns only some files carry, and every filter
+    kind that matches rows."""
+    everything = list_store.list_products(page_size=100)
+    assert everything.total == 26
+    recs = {p["id"]: p for p in everything.products}
+    assert recs["i03"]["title"] is None and recs["i00"]["rank"] is None
+    assert recs["i20"]["rank"] == "r2"
+    assert list_store.list_products(page=9, page_size=4).products == []
+    for name in ("str", "int", "int_by_float", "float", "float_by_int", "bool", "some_buckets"):
+        assert list_store.list_products(filters=LIST_FILTERS[name]).total > 0, name
+    assert list_store.list_products(filters={"qty": 2.5}).total == 0
+    ties = list_store.list_products(page_size=100, sort_by="category")
+    assert [p["id"] for p in ties.products if p["category"] == "a"] == [
+        f"i{k:02d}" for k in (0, 3, 6, 9, 12, 14, 15, 18, 21, 24)
+    ]
+
+
+def test_list_tier_parity_compat_mode(spark, list_store):
+    """compat_mode narrows the filter surface on both tiers alike: a field
+    outside the reference's index matches nothing, on the driver."""
+    compat = _same_table(list_store, forced=False, compat_mode=True)
+    forced = _same_table(list_store, compat_mode=True)
+    for filters, tier in (
+        ({"category": "a"}, "driver"),
+        ({"title": "t1"}, "driver"),
+        ({"metadata.source": "s"}, "spark:filter"),
+    ):
+        got, jobs = _spark_jobs(spark, lambda: compat.list_products(filters=filters, sort_by="title"))
+        assert got == forced.list_products(filters=filters, sort_by="title")
+        assert (jobs == 0) == (tier == "driver")
+    assert compat.list_products(filters={"category": "a"}).total == 0
+    assert compat.list_products(filters={"title": "t1"}).total == 5
+    assert compat.tiers == {"driver": 4, "spark:filter": 1}
+
+
+def test_list_empty_store_runs_no_spark_job(spark, tmp_path):
+    from crawl4ai_llm_spark.storage import ProductStore
+
+    st = ProductStore(spark, str(tmp_path / "wh"))
+    res, jobs = _spark_jobs(spark, lambda: st.list_products(filters={"a": 1}, sort_by="b"))
+    assert (res.products, res.total, res.total_pages, jobs) == ([], 0, 1, 0)
+    assert st.tiers == {"driver": 1}
+
+
+@pytest.mark.parametrize("tier", ["driver", "spark"])
+def test_list_rejects_bad_page_arguments(spark, tmp_path, tier):
+    """page or page_size below 1 raise ValueError on both tiers (they used
+    to raise AnalysisException or ZeroDivisionError)."""
+    st, _ = _seeded_store(spark, tmp_path / tier, n=8, n_buckets=1)
+    if tier == "spark":
+        st.ARROW_LOOKUP_MAX_FILES = 0
+    before = st.tiers.copy()
+    for kw in ({"page": 0}, {"page": -1}, {"page_size": 0}, {"page_size": -3}):
+        with pytest.raises(ValueError, match="page"):
+            st.list_products(**kw)
+    assert st.tiers == before
+
+
+def _over_budget_rows(spark, st):
+    st.ARROW_LIST_MAX_ROWS = 7  # the store holds 8
+
+
+# reason → (store set-up, the list call that must fall through)
+LIST_FALLBACKS = {
+    "files": (lambda spark, st: setattr(st, "ARROW_LOOKUP_MAX_FILES", 0), {}),
+    "schema": (lambda spark, st: _schema_split(spark, st), {}),
+    "rows": (_over_budget_rows, {}),
+    "filter": (None, {"filters": {"attributes.color": "red"}}),
+    "sort": (None, {"sort_by": "price"}),
+}
+
+
+@pytest.mark.parametrize("reason", sorted(LIST_FALLBACKS))
+def test_list_fallback_runs_spark_tier(spark, tmp_path, reason):
+    """Each list the driver tier cannot answer exactly runs on Spark, gives
+    the Spark tier's result and is counted as ``spark:<reason>``."""
+    prepare, kw = LIST_FALLBACKS[reason]
+    st, ids = _seeded_store(spark, tmp_path / "wh", n=8, n_buckets=1)
+    if prepare is not None:
+        prepare(spark, st)
+    before = st.tiers.copy()
+    got, jobs = _spark_jobs(spark, lambda: st.list_products(page_size=5, **kw))
+    assert jobs > 0
+    assert st.tiers - before == {f"spark:{reason}": 1}
+    page_df, total = st.list_products_df(page_size=5, **kw)
+    assert got.total == total > 0
+    assert got.products == [r.asDict(recursive=True) for r in page_df.collect()]
+
+
+# --------------------------------------------------------- save regressions
+
+
+def _seq_types(st) -> set:
+    import pyarrow.parquet as pq
+
+    return {
+        str(pq.read_schema(f).field("_seq").type) for f in st.table.current_snapshot().files
+    }
+
+
+def _read_back_on_both_tiers(st, ids: list[str]) -> None:
+    forced = _same_table(st)
+    for reader in (st, forced):
+        assert [r["id"] for r in reader.get_products(ids)] == ids
+        listed = reader.list_products(page_size=100, sort_by="title")
+        assert listed.total == len(ids)
+    assert listed == st.list_products(page_size=100, sort_by="title")
+
+
+def test_bulk_load_into_save_started_store_keeps_seq_width(spark, tmp_path):
+    """save_products then save_products_df used to leave int32 and int64
+    ``_seq`` files, after which every read raised CANNOT_MERGE_SCHEMAS."""
+    st, ids = _seeded_store(spark, tmp_path / "wh", n=8, n_buckets=1)
+    df = spark.createDataFrame(
+        [(f"b{k:02d}", f"bulk {k}", float(k)) for k in range(20)],
+        "id string, title string, price double",
+    )
+    assert st.save_products_df(df) == 20
+    assert _seq_types(st) == {"int32"}
+    assert st.table.current_snapshot().counters["max_seq"] == 28
+    ids += [f"b{k:02d}" for k in range(20)]
+    _read_back_on_both_tiers(st, ids)
+    before = st.tiers.copy()
+    ids += st.save_products([{"id": "after", "title": "t", "price": 1.0}])
+    assert st.tiers - before == {"driver": 1}
+    _read_back_on_both_tiers(st, ids)
+    seqs = [r["_seq"] for r in st.table.read().select("_seq").collect()]
+    assert sorted(seqs) == list(range(1, 30))
+
+
+def test_spark_save_into_bulk_started_store_keeps_seq_width(spark, tmp_path):
+    """A Spark-tier save after a bulk load writes int64 ``_seq`` like the
+    bulk files (the dense bulk numbering leaves next_seq small enough that
+    an uncast literal would be int32)."""
+    st, ids = _bulk_store(spark, tmp_path / "wh", n=24)
+    assert _seq_types(st) == {"int64"}
+    assert st.table.current_snapshot().counters["max_seq"] == 24
+    ids += st.save_products([{"id": "new", "title": "t", "brand": "b"}])
+    assert st.tiers == {"spark:key": 1}
+    assert _seq_types(st) == {"int64"}
+    _read_back_on_both_tiers(st, ids)
+
+
+@pytest.mark.parametrize("origin", ["empty", "seeded"])
+def test_save_drops_all_none_keys(spark, tmp_path, origin):
+    """A key that is None in every record is dropped before either tier
+    (absent ≡ None): it used to raise CANNOT_DETERMINE_TYPE on Spark, and
+    a seeded store now takes the driver tier."""
+    from crawl4ai_llm_spark.storage import ProductStore
+
+    if origin == "empty":
+        st = ProductStore(spark, str(tmp_path / "wh"), n_buckets=4)
+    else:
+        st, _ = _seeded_store(spark, tmp_path / "wh", n=8, n_buckets=1)
+    before = st.tiers.copy()
+    assert st.save_products(
+        [{"id": "a", "title": "t", "brand": None}, {"id": "b", "title": None, "brand": None}]
+    ) == ["a", "b"]
+    assert st.tiers - before == {"spark:empty" if origin == "empty" else "driver": 1}
+    got = st.get_products(["a", "b"])
+    assert [(g["title"], g.get("brand")) for g in got] == [("t", None), (None, None)]
