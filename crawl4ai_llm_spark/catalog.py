@@ -185,8 +185,20 @@ class Table:
         m = re.search(r"/_bucket=(\d+)/", path)
         return int(m.group(1)) if m else None
 
-    def _next_id(self, parent: Snapshot | None) -> int:
-        return (parent.snapshot_id + 1) if parent else 1
+    def _commit(
+        self, files: list[str], counters: dict[str, int] | None, parent: Snapshot | None
+    ) -> Snapshot:
+        """Publish ``files`` as the live set of a new child of ``parent``
+        (the snapshot the caller read before writing) — every commit but
+        rollback goes through here."""
+        snap = Snapshot(
+            parent.snapshot_id + 1 if parent else 1,
+            files,
+            counters or {},
+            parent.snapshot_id if parent else None,
+        )
+        self._publish(snap)
+        return snap
 
     def _write_pylist(self, rows: list[dict], schema=None) -> str:
         import pyarrow as pa
@@ -211,49 +223,21 @@ class Table:
         when Spark jobs also write this table (physical-type parity)."""
         path = self._write_pylist(rows, schema=schema)
         parent = self.current_snapshot()
-        snap = Snapshot(
-            self._next_id(parent),
-            (parent.files if parent else []) + [path],
-            counters or {},
-            parent.snapshot_id if parent else None,
-        )
-        self._publish(snap)
-        return snap
+        return self._commit((parent.files if parent else []) + [path], counters, parent)
 
     def overwrite_pylist(
         self, rows: list[dict], counters: dict[str, int] | None = None
     ) -> Snapshot:
-        path = self._write_pylist(rows)
-        parent = self.current_snapshot()
-        snap = Snapshot(
-            self._next_id(parent), [path], counters or {}, parent.snapshot_id if parent else None
-        )
-        self._publish(snap)
-        return snap
+        return self._commit([self._write_pylist(rows)], counters, self.current_snapshot())
 
     def append(self, df: DataFrame, counters: dict[str, int] | None = None) -> Snapshot:
         parent = self.current_snapshot()
         files = self._write_files(df)
-        snap = Snapshot(
-            self._next_id(parent),
-            (parent.files if parent else []) + files,
-            counters or {},
-            parent.snapshot_id if parent else None,
-        )
-        self._publish(snap)
-        return snap
+        return self._commit((parent.files if parent else []) + files, counters, parent)
 
     def overwrite(self, df: DataFrame, counters: dict[str, int] | None = None) -> Snapshot:
         parent = self.current_snapshot()
-        files = self._write_files(df)
-        snap = Snapshot(
-            self._next_id(parent),
-            files,
-            counters or {},
-            parent.snapshot_id if parent else None,
-        )
-        self._publish(snap)
-        return snap
+        return self._commit(self._write_files(df), counters, parent)
 
     def truncate(self, counters: dict[str, int] | None = None) -> Snapshot:
         """Publish an empty snapshot — the rollback target for 'before any
@@ -261,13 +245,7 @@ class Table:
         leaves a snapshot no rollback() can rewind past (there is no
         earlier snapshot id); resume() truncates such tables instead, so a
         re-run wave never double-appends."""
-        parent = self.current_snapshot()
-        snap = Snapshot(
-            self._next_id(parent), [], counters or {},
-            parent.snapshot_id if parent else None,
-        )
-        self._publish(snap)
-        return snap
+        return self._commit([], counters, self.current_snapshot())
 
     def compact(self, target_partitions: int = 8, counters: dict[str, int] | None = None) -> Snapshot | None:
         """Rewrite the live file set into ``target_partitions`` files — the
@@ -278,10 +256,9 @@ class Table:
         current = self.read()
         if current is None:
             return None
-        snap = self.current_snapshot()
         return self.overwrite(
             current.coalesce(target_partitions),
-            counters=counters or (snap.counters if snap else {}),
+            counters=counters or self.current_snapshot().counters,
         )
 
     def expire_snapshots(self, keep_last: int = 10) -> dict[str, int]:
@@ -328,9 +305,7 @@ class Table:
         parent = self.current_snapshot()
         if parent is None:
             return None
-        snap = Snapshot(self._next_id(parent), parent.files, counters, parent.snapshot_id)
-        self._publish(snap)
-        return snap
+        return self._commit(parent.files, counters, parent)
 
     def rollback(self, snapshot_id: int) -> Snapshot:
         """Reset HEAD to an earlier snapshot (Iceberg rollback analog).
@@ -339,8 +314,8 @@ class Table:
         (json_storage.py:134-136); the engine's policy is explicit rollback
         instead (SURVEY.md §4).
         """
-        snap = self.snapshot(snapshot_id)
-        child = Snapshot(self._next_id(self.current_snapshot()), snap.files, snap.counters, snapshot_id)
+        snap, head = self.snapshot(snapshot_id), self.current_snapshot()
+        child = Snapshot(head.snapshot_id + 1 if head else 1, snap.files, snap.counters, snapshot_id)
         self._publish(child)
         return child
 
@@ -399,14 +374,7 @@ class Table:
         for f in files:
             if self._file_bucket(f) not in buckets:
                 raise ValueError(f"replacement row landed outside {buckets}: {f}")
-        snap = Snapshot(
-            self._next_id(parent),
-            keep + files,
-            counters or {},
-            parent.snapshot_id if parent else None,
-        )
-        self._publish(snap)
-        return snap
+        return self._commit(keep + files, counters, parent)
 
     def commit_arrow_buckets(
         self,
@@ -457,14 +425,7 @@ class Table:
             )
             files.append(path)
         keep = [f for f in old if self._file_bucket(f) not in tables] if replace else old
-        snap = Snapshot(
-            self._next_id(parent),
-            keep + files,
-            counters or {},
-            parent.snapshot_id if parent else None,
-        )
-        self._publish(snap)
-        return snap
+        return self._commit(keep + files, counters, parent)
 
     def is_empty(self) -> bool:
         snap = self.current_snapshot()

@@ -67,9 +67,15 @@ from crawl4ai_llm_spark.schemas import SPAN_TYPE
 # Env-overridable for bigger/smaller driver hosts.
 import os as _os_env  # noqa: E402
 
-DRIVER_TEXT_READ_BYTE_BUDGET = int(
-    _os_env.environ.get("SPARK_GRAFT_DRIVER_TEXT_READ_BYTES", str(256 * 1024 * 1024))
-)
+_TEXT_READ_BYTES = _os_env.environ.get("SPARK_GRAFT_DRIVER_TEXT_READ_BYTES", str(256 * 1024 * 1024))
+if not _TEXT_READ_BYTES.strip().isdecimal():
+    # int() would raise without naming the variable, and a negative
+    # budget would silently send every wave's text read to Spark
+    raise ValueError(
+        "SPARK_GRAFT_DRIVER_TEXT_READ_BYTES must be a non-negative integer, "
+        f"got {_TEXT_READ_BYTES!r}"
+    )
+DRIVER_TEXT_READ_BYTE_BUDGET = int(_TEXT_READ_BYTES)
 
 FETCH_RESULT_SCHEMA = T.StructType(
     [
@@ -708,8 +714,10 @@ class FrontierEngine:
             dup_caches.append(wave_prepared)
             stored = self.docs.read()
             if stored is not None and not idx.minhash_bands.is_empty():
+                # wave rides along: a recrawled doc_id resolves to its
+                # max-wave row on every orig-text path (_read_doc_texts)
                 stored_text = stored.select(
-                    "doc_id", self._spans_text(F.col("spans")).alias("text")
+                    "doc_id", self._spans_text(F.col("spans")).alias("text"), "wave"
                 )
                 # Driver tier first (VERDICT r06 #1): three map-only jobs
                 # + driver numpy, vs the distributed verify's ~6-stage

@@ -318,7 +318,8 @@ class DedupIndex:
         equi-joined on (band, key); verification re-derives grams only for
         the stored docs that MATCHED (semi-join into ``stored_docs``, which
         at scale is bucket/pushdown-pruned — candidates ∝ true dups).
-        ``batch``/``stored_docs``: (doc_id, text).
+        ``batch``/``stored_docs``: (doc_id, text); any other column of
+        ``stored_docs`` is ignored.
 
         RECALL is the banding curve, not 1.0: a true pair at Jaccard J is
         missed by every band with probability (1 − J⁴)³² — ~1.5e-15 at
@@ -586,8 +587,9 @@ class DedupIndex:
         # via the caller's driver-side reader when given (pyarrow pushdown
         # over the stored table's parquet — no Spark job), else one
         # pushdown-pruned Spark scan. On a table with multiple rows per
-        # doc_id (recrawl before rebuild_content_index) the last row read
-        # wins — append order, i.e. the latest fetch.
+        # doc_id (recrawl before rebuild_content_index) the max-wave row
+        # wins when ``stored_docs`` carries ``wave`` — the latest fetch,
+        # as the caller's reader rules.
         new_pd = (
             prepared.where(F.col("doc_id").isin(need_new))
             .select("doc_id", "text")
@@ -600,11 +602,12 @@ class DedupIndex:
             # the caller's driver-side reader declined (corpus footprint
             # above its byte budget, VERDICT r07 #2) or none was given:
             # ONE distributed pushdown-pruned scan, bounded by matched ids
-            orig_pd = (
-                stored_docs.where(F.col("doc_id").isin(need_orig))
-                .select("doc_id", "text")
-                .toPandas()
-            )
+            cols = ["doc_id", "text"] + (["wave"] if "wave" in stored_docs.columns else [])
+            orig_pd = stored_docs.where(F.col("doc_id").isin(need_orig)).select(*cols).toPandas()
+            if "wave" in cols:  # the scan is unordered: sort, keep the last
+                orig_pd = orig_pd.sort_values("wave", na_position="first").drop_duplicates(
+                    "doc_id", keep="last"
+                )
             orig_text = dict(zip(orig_pd["doc_id"], orig_pd["text"]))
         mark("orig_texts")
 

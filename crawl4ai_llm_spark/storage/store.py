@@ -36,7 +36,10 @@ Spark jobs costs 4-8 jobs and ~0.5-1 s of scheduling; a list, 4 jobs and
 bucket, a legacy or over-budget bucket or table, unifiable-schema
 failures, new keys, caller metadata, content-hash ids, values it does
 not type like Spark, dotted filter or sort paths, non-string sort keys —
-falls through to the SPARK tier. ``tiers`` counts which tier each write
+falls through to the SPARK tier: for saves, a distributed append; for
+updates and deletes, one _spark_rewrite of the touched buckets, whose
+merge types each payload with ``from_json`` against the stored columns;
+for lists, list_products_df. ``tiers`` counts which tier each write
 and each list took (``driver`` / ``spark:<reason>``). The bulk tier
 (save_products_df) always runs on Spark.
 The reference's O(index) read-modify-write per call
@@ -51,6 +54,7 @@ deterministically here; filter surface is all columns, with
 
 from __future__ import annotations
 
+import json
 import math
 from collections import Counter
 from dataclasses import dataclass
@@ -192,6 +196,13 @@ def _raise_intra_batch_dups(ids: list[str]) -> None:
         raise DuplicateProductError(intra[:20], truncated=len(intra) > 20)
 
 
+def _payload_json(v: Any) -> str:
+    """An update payload as JSON. Other values (datetimes, decimals) go as
+    their str(), which from_json parses by the target type — a timestamp
+    in the session time zone — or rejects like any other mismatch."""
+    return json.dumps(v, default=str)
+
+
 def _utc_now() -> datetime:
     """One batch stamp, as the naive UTC wall clock pyarrow stores."""
     return datetime.now(timezone.utc).replace(tzinfo=None)
@@ -238,12 +249,6 @@ class ProductStore:
 
     def _df_for_ids(self, ids: list[str]) -> DataFrame | None:
         return self.table.read(buckets=self._buckets_of(ids))
-
-    def _require_df(self) -> DataFrame:
-        df = self._df()
-        if df is None:
-            raise ProductNotFoundError(["<empty store>"])
-        return df
 
     def _resolve(self, df: DataFrame, field: str) -> Column | None:
         """Resolve a (possibly dotted) field name against the live schema.
@@ -1021,14 +1026,15 @@ class ProductStore:
 
         Validation order matches the reference (json_storage.py:460-471):
         every payload must carry an id, then every id must exist, before any
-        write. One shared timestamp per batch (ref :478). Realized as the
-        MERGE-equivalent: full-table join against the update batch with
-        per-column "was this key provided?" resolution — exact
-        ``{**existing, **update}`` semantics including explicit nulls.
-        Repeated ids fold in payload order (``{**existing, **u1, **u2}``);
-        the return value still counts payloads. The driver tier
-        (_driver_rewrite) runs first; _spark_update handles what it
-        declines.
+        write. One shared timestamp per batch (ref :478). Exact
+        ``{**existing, **update}`` semantics, explicit None included, over
+        the touched buckets only; a provided ``metadata`` replaces the
+        stored struct wholesale. Repeated ids fold in payload order
+        (``{**existing, **u1, **u2}``); the return value still counts
+        payloads. A value its stored column cannot hold (2.5 into an
+        integer column) raises ValueError and nothing is written; the
+        column is never widened. The driver tier (_driver_rewrite) runs
+        first; _spark_rewrite handles what it declines.
         """
         if not updates:
             return 0
@@ -1039,7 +1045,7 @@ class ProductStore:
         for u in updates:
             folded[u["id"]] = {**folded.get(u["id"], {}), **u}
         if not self._driver_rewrite(list(folded), folded):
-            self._spark_update(list(folded.values()))
+            self._spark_rewrite(list(folded), folded)
         # an update can EDIT text the content-dedup index has band keys
         # for, at an unchanged row count — invisible to any count probe.
         # Flag the index; the next checked save rebuilds it once
@@ -1053,212 +1059,111 @@ class ProductStore:
             self._content_index().mark_stale()
         return len(updates)
 
-    def _spark_update(self, updates: list[dict[str, Any]]) -> None:
-        """The distributed D4 merge over distinct-id payloads."""
-        # A provided 'metadata' follows the reference's wholesale-replace-
-        # then-stamp semantics (json_storage.py:410-413): the struct is
-        # rebuilt from the payload (created_at kept only if the caller
-        # supplied it — exactly what {**existing, **update} does) and
-        # updated_at is stamped. Caller keys already present in the stored
-        # struct schema (save-path metadata merge) are representable and
-        # accepted; BRAND-NEW keys are rejected loudly — the one documented
-        # divergence from the reference's schemaless JSON (a typed struct
-        # cannot grow inside an O(touched-buckets) update; introduce new
-        # metadata keys via a save).
-        updates = [dict(u) for u in updates]
-        metas: dict[int, dict[str, Any]] = {}
-        for i, u in enumerate(updates):
-            if "metadata" not in u:
-                continue
-            meta = u.pop("metadata")
-            if not isinstance(meta, dict):
-                raise ValueError(f"update at position {i}: metadata must be a dict")
-            metas[i] = meta
-            u["_meta_created_at"] = meta.get("created_at")
-            u["_meta_provided"] = True
-        upd_ids = [u["id"] for u in updates]
-        # O(changed-data): every id lives in its hash bucket, so both the
-        # existence pre-check and the merge read ONLY the touched buckets
-        touched = self._buckets_of(upd_ids)
-        df = self._df_for_ids(upd_ids)
-        if df is None:
-            raise ProductNotFoundError(sorted(set(upd_ids)))
-        existing_ids = {
-            r["id"] for r in df.where(F.col("id").isin(upd_ids)).select("id").collect()
+    def _spark_rewrite(
+        self, ids: list[str], updates: dict[str, dict[str, Any]] | None
+    ) -> None:
+        """The Spark tier of _driver_rewrite, step for step: a bucket-pruned
+        read, the all-or-nothing existence check, then the ids' rows dropped
+        (``updates`` None) or merged, and one replace_buckets.
+
+        The merge joins each folded payload as one JSON string, next to
+        ``_provided`` (its keys, so an explicit None still overwrites), and
+        types it with ``from_json`` against the stored columns: a new key
+        takes the type createDataFrame infers; a provided ``metadata``
+        parses as the stored struct and replaces it wholesale (ref
+        json_storage.py:410-413; new metadata keys arrive via a save).
+        ``metadata.updated_at`` is stamped on every merged row. A value its
+        column cannot hold raises ValueError naming the id and key before
+        anything is written, and FAILFAST keeps the merge itself from ever
+        storing it as null or widening the column."""
+        df = self._df_for_ids(ids)
+        found = set() if df is None else {
+            r["id"] for r in df.where(F.col("id").isin(ids)).select("id").collect()
         }
-        missing = sorted(set(upd_ids) - existing_ids)
+        missing = sorted(set(ids) - found)
         if missing:
             raise ProductNotFoundError(missing)
+        if updates is None:
+            out = df.where(~F.col("id").isin(ids))
+        else:
+            out = self._spark_merge(df, updates)
+        self.table.replace_buckets(
+            out, self._buckets_of(ids), counters=self.table.current_snapshot().counters
+        )
 
-        # caller metadata keys must be representable in the STORED struct
-        # schema (stamps + whatever keys past saves merged in)
-        meta_dtype = (
-            df.schema["metadata"].dataType if "metadata" in df.columns else None
-        )
-        meta_extra_fields = (
-            [
-                f
-                for f in meta_dtype.fields
-                if f.name not in ("created_at", "updated_at")
-            ]
-            if isinstance(meta_dtype, T.StructType)
-            else []
-        )
-        representable = {"created_at", "updated_at"} | {f.name for f in meta_extra_fields}
-        for i, meta in metas.items():
-            bad = sorted(set(meta) - representable)
+    def _spark_merge(self, df: DataFrame, updates: dict[str, dict[str, Any]]) -> DataFrame:
+        """``{**existing, **update}`` over the touched buckets' rows ``df``
+        (see _spark_rewrite)."""
+        payloads = {
+            i: {k: v for k, v in u.items() if k != "id" and not k.startswith("_")}
+            for i, u in updates.items()
+        }
+        stored = {f.name: f.dataType for f in df.schema}
+        held = stored["metadata"].fieldNames()
+        for i, u in payloads.items():
+            meta = u.get("metadata", {})
+            if not isinstance(meta, dict):
+                raise ValueError(f"update for id {i!r}: metadata must be a dict")
+            bad = sorted(set(meta) - set(held))
             if bad:
                 raise ValueError(
-                    f"update at position {i}: metadata keys {bad} are not "
+                    f"update for id {i!r}: metadata keys {bad} are not "
                     f"representable in this store's typed metadata struct "
-                    f"({sorted(representable)}); introduce new metadata keys "
-                    "via a save"
+                    f"({sorted(held)}); introduce new metadata keys via a save"
                 )
-        # annotate per-extra-field payload columns (wholesale replace: a key
-        # absent from a provided metadata dict becomes null). Columns that
-        # would be all-None are skipped — createDataFrame cannot infer them,
-        # and the in-plan fallback literal is null anyway.
-        for fld in meta_extra_fields:
-            vals = {i: metas[i].get(fld.name) for i in metas}
-            if any(v is not None for v in vals.values()):
-                for i, u in enumerate(updates):
-                    if i in metas:
-                        u[f"_meta_x_{fld.name}"] = vals[i]
-
-        # normalize the payload created_at to an ISO string so the batch
-        # column infers cleanly (cast back to timestamp in the plan)
-        has_meta_created = False
-        for u in updates:
-            v = u.get("_meta_created_at")
-            if v is not None:
-                u["_meta_created_at"] = v.isoformat() if hasattr(v, "isoformat") else str(v)
-                has_meta_created = True
-        if not has_meta_created:  # avoid an un-inferable all-None column
-            for u in updates:
-                u.pop("_meta_created_at", None)
-
-        # annotate each update dict with the set of keys it provides, as a
-        # JSON array string ("metadata" is re-listed explicitly: it was
-        # popped into the _meta_* annotations above). A string always
-        # infers; an array column that is empty in every row would not.
-        import json
-
-        upd_rows = [
-            {
-                **u,
-                "_provided": json.dumps(
-                    sorted(
-                        [k for k in u if k != "id" and not k.startswith("_")]
-                        + (["metadata"] if u.get("_meta_provided") else [])
-                    )
-                ),
-            }
-            for u in updates
+        types = {k: stored[k] for u in payloads.values() for k in u if k in stored}
+        # a new key set to None in every payload stays absent
+        new = sorted(
+            {k for u in payloads.values() for k, v in u.items() if k not in stored and v is not None}
+        )
+        if new:
+            inferred = self._rows_df([{k: u.get(k) for k in new} for u in payloads.values()])
+            types.update((f.name, f.dataType) for f in inferred.schema)
+        schema = T.StructType([T.StructField(k, t) for k, t in sorted(types.items())])
+        # one row per provided (id, key): a row that does not parse names
+        # the culprit, where FAILFAST in the merge would only abort the job
+        probe = [
+            (i, k, _payload_json({k: v}))
+            for i, u in payloads.items()
+            for k, v in u.items()
+            if v is not None and k in types
         ]
-        # a key that is None in EVERY payload has no inferable type either:
-        # it joins as an untyped null, which the per-column when() below
-        # coerces to the stored column's type (explicit None is a value)
-        null_keys = {
-            k for u in updates for k in u if all(v.get(k) is None for v in updates)
-        }
-        upd = self._rows_df(
-            [{k: v for k, v in r.items() if k not in null_keys} for r in upd_rows]
-        )
-        for k in sorted(null_keys):
-            upd = upd.withColumn(k, F.lit(None))
-        upd = upd.select(
-            [F.col(c).alias(f"_u_{c}") if c != "id" else F.col(c) for c in upd.columns]
-        )
-
-        merged = df.join(F.broadcast(upd), "id", "left")
-        provided = F.coalesce(
-            F.from_json(F.col("_u__provided"), "array<string>"),
-            F.array().cast("array<string>"),
-        )
-        matched = F.col("_u__provided").isNotNull()
-
-        out_cols: list[Column] = [F.col("id")]
-        base_cols = [c for c in df.columns if c != "id"]
-        upd_only = [
-            c[3:]
-            for c in upd.columns
-            if c.startswith("_u_")
-            and c != "_u__provided"
-            and not c[3:].startswith("_")  # engine-internal annotations
-            and c[3:] not in df.columns
-            and c[3:] not in null_keys  # a new field set to None stays absent
-        ]
-        meta_provided = (
-            F.coalesce(F.col("_u__meta_provided"), F.lit(False))
-            if "_u__meta_provided" in upd.columns
-            else F.lit(False)
-        )
-        meta_created_payload = (
-            F.col("_u__meta_created_at").cast("timestamp")
-            if "_u__meta_created_at" in upd.columns
-            else F.lit(None).cast("timestamp")
-        )
-        # every branch rebuilds the struct with ONE field order (extra
-        # fields in schema order, then the stamps) — when/otherwise branches
-        # must type-match exactly, and merged-on-read schemas don't
-        # guarantee a stable field order across files
-        def _meta_payload_field(fld) -> Column:
-            cname = f"_u__meta_x_{fld.name}"
-            if cname in upd.columns:
-                return F.col(cname).cast(fld.dataType).alias(fld.name)
-            return F.lit(None).cast(fld.dataType).alias(fld.name)
-
-        meta_x_payload = [_meta_payload_field(f) for f in meta_extra_fields]
-        meta_x_existing = [
-            F.col("metadata").getField(f.name).alias(f.name) for f in meta_extra_fields
-        ]
-        for c in base_cols:
-            if c == "metadata":
-                # caller-provided metadata: wholesale replace + stamp
-                # (ref :410-413); otherwise bump only updated_at (ref :412)
-                out_cols.append(
-                    F.when(
-                        matched & meta_provided,
-                        F.struct(
-                            *meta_x_payload,
-                            meta_created_payload.alias("created_at"),
-                            F.current_timestamp().alias("updated_at"),
-                        ),
-                    )
-                    .when(
-                        matched,
-                        F.struct(
-                            *meta_x_existing,
-                            F.col("metadata.created_at").alias("created_at"),
-                            F.current_timestamp().alias("updated_at"),
-                        ),
-                    )
-                    .otherwise(
-                        F.struct(
-                            *meta_x_existing,
-                            F.col("metadata.created_at").alias("created_at"),
-                            F.col("metadata.updated_at").alias("updated_at"),
-                        )
-                    )
-                    .alias("metadata")
-                )
-            elif f"_u_{c}" in upd.columns:
-                out_cols.append(
-                    F.when(F.array_contains(provided, c), F.col(f"_u_{c}"))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                )
-            else:
-                out_cols.append(F.col(c))
-        for c in upd_only:  # brand-new fields introduced by the update
-            out_cols.append(
-                F.when(F.array_contains(provided, c), F.col(f"_u_{c}")).alias(c)
+        if probe:
+            flagged = T.StructType(schema.fields + [T.StructField("_bad", T.StringType())])
+            parsed = F.from_json("j", flagged, {"columnNameOfCorruptRecord": "_bad"})
+            bad = (
+                self.spark.createDataFrame(probe, "id string, key string, j string")
+                .where(parsed.getField("_bad").isNotNull())
+                .orderBy("id", "key")
+                .limit(1)
+                .collect()
             )
-        self.table.replace_buckets(
-            merged.select(out_cols),
-            touched,
-            counters=self.table.current_snapshot().counters,
+            if bad:
+                i, k = bad[0]["id"], bad[0]["key"]
+                raise ValueError(
+                    f"update for id {i!r}: {k}={payloads[i][k]!r} does not fit the "
+                    f"stored column type {types[k].simpleString()}"
+                )
+        upd = self.spark.createDataFrame(
+            [(i, _payload_json(u), sorted(u)) for i, u in payloads.items()],
+            "id string, _payload string, _provided array<string>",
+        ).select(
+            "id",
+            "_provided",
+            F.from_json("_payload", schema, {"mode": "FAILFAST"}).alias("_u"),
         )
+        cols: list[Column] = []
+        for c in df.columns + new:
+            col = F.col(c) if c in stored else F.lit(None)
+            if c in types:
+                col = F.when(F.array_contains("_provided", c), F.col("_u").getField(c)).otherwise(col)
+            if c == "metadata":
+                col = F.when(
+                    F.col("_provided").isNotNull(),
+                    col.withField("updated_at", F.current_timestamp()),
+                ).otherwise(F.col(c))
+            cols.append(col.alias(c))
+        return df.join(F.broadcast(upd), "id", "left").select(cols)
 
     # ------------------------------------------------------------------ deletes
 
@@ -1272,24 +1177,8 @@ class ProductStore:
         ref test_json_storage_batch.py:288-301); empty ⇒ 0."""
         if not product_ids:
             return 0
-        if self._driver_rewrite(product_ids, None):
-            return len(product_ids)
-        # O(changed-data): only the ids' buckets are read and rewritten
-        touched = self._buckets_of(product_ids)
-        df = self._df_for_ids(product_ids)
-        if df is None:
-            raise ProductNotFoundError(sorted(set(product_ids)))
-        existing = {
-            r["id"]
-            for r in df.where(F.col("id").isin(product_ids)).select("id").collect()
-        }
-        missing = sorted(set(product_ids) - existing)
-        if missing:
-            raise ProductNotFoundError(missing)
-        remaining = df.where(~F.col("id").isin(product_ids))
-        self.table.replace_buckets(
-            remaining, touched, counters=self.table.current_snapshot().counters
-        )
+        if not self._driver_rewrite(product_ids, None):
+            self._spark_rewrite(product_ids, None)
         return len(product_ids)
 
     # ------------------------------------------------------------------ query

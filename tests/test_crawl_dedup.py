@@ -408,6 +408,53 @@ def test_read_doc_texts_max_wave_wins(spark, tmp_path, flag_run):
     assert got[some] == "sentinel-latest"
 
 
+def test_orig_text_fallback_max_wave_wins(spark, flag_run, monkeypatch):
+    """With the engine's driver-side text reader declined, the distributed
+    orig-text read behind match_documents_driver resolves a recrawled
+    doc_id by max wave, as _read_doc_texts does — not by whichever row
+    its unordered scan returns last."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from crawl4ai_llm_spark.frontier import engine as eng_mod
+
+    monkeypatch.setattr(eng_mod, "DRIVER_TEXT_READ_BYTE_BUDGET", 0)
+    eng = flag_run
+    rows = eng.docs.read().select("doc_id", "spans", "wave").collect()
+    counts: dict = {}
+    for r in rows:
+        counts[r["doc_id"]] = counts.get(r["doc_id"], 0) + 1
+    texts = {r["doc_id"]: _doc_text(r["spans"]) for r in rows if counts[r["doc_id"]] == 1}
+    some = max(d for d, t in texts.items() if len(t.split()) >= 10)
+    wave = next(r["wave"] for r in rows if r["doc_id"] == some)
+    toks = texts[some].split()
+    latest = " ".join(toks[:-1] + ["recrawled"])  # a near-copy: Jaccard < 1
+    schema = pq.ParquetFile(eng.docs.current_snapshot().files[0]).schema_arrow
+    span = {"kind": "text", "text": None, "media_ref": None, "offset": 0}
+    # the max-wave row first, then an older-wave decoy appended after it
+    for text, w in ((latest, wave + 5), ("decoy stale text", wave + 1)):
+        eng.docs.append_pylist(
+            [{"doc_id": some, "spans": [{**span, "text": text}], "wave": w}], schema=schema
+        )
+    assert eng._read_doc_texts([some]) is None
+    idx = eng.dedup_index()
+    prepared = idx.prepare_batch(
+        spark.createDataFrame([("probe", texts[some])], "doc_id string, text string")
+    ).cache()
+    stored_text = eng.docs.read().select(
+        "doc_id", eng._spans_text(F.col("spans")).alias("text"), "wave"
+    )
+    pairs = idx.match_documents_driver(
+        stored_text, tau=TAU, prepared=prepared, n_batch=1, orig_texts=eng._read_doc_texts
+    )
+    prepared.unpersist()
+    got = {p["orig_id"]: p["jaccard"] for p in pairs}
+    a, b = _grams(texts[some]), _grams(latest)
+    want = len(a & b) / len(a | b)
+    assert TAU <= want < 1.0
+    assert got[some] == pytest.approx(want, abs=1e-6)
+
+
 def test_crawl_dedup_distributed_fallback_matches_driver_tier(
     spark, tmp_path, flag_run, monkeypatch
 ):

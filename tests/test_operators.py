@@ -572,3 +572,28 @@ def test_sig_block_env_validated_at_import(value, ok):
     else:
         assert proc.returncode != 0
         assert "ValueError: SPARK_GRAFT_SIG_BLOCK must be in 1..128" in proc.stderr
+
+
+@pytest.mark.parametrize(
+    "value,ok", [("abc", False), ("-1", False), ("1.5", False), ("0", True), ("1048576", True)]
+)
+def test_driver_text_read_bytes_env_validated_at_import(value, ok):
+    """SPARK_GRAFT_DRIVER_TEXT_READ_BYTES that is not a non-negative
+    integer fails the engine import with a ValueError naming it."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", "import crawl4ai_llm_spark.frontier.engine"],
+        cwd=root,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_TEXT_READ_BYTES": value},
+        capture_output=True,
+        text=True,
+    )
+    if ok:
+        assert proc.returncode == 0, proc.stderr
+    else:
+        assert proc.returncode != 0
+        assert "ValueError: SPARK_GRAFT_DRIVER_TEXT_READ_BYTES must be a non-negative" in proc.stderr

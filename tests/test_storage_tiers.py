@@ -638,3 +638,37 @@ def test_save_drops_all_none_keys(spark, tmp_path, origin):
     assert st.tiers - before == {"spark:empty" if origin == "empty" else "driver": 1}
     got = st.get_products(["a", "b"])
     assert [(g["title"], g.get("brand")) for g in got] == [("t", None), (None, None)]
+
+
+# ------------------------------------------------------- update regressions
+
+
+@pytest.mark.parametrize("tier", ["default", "spark"])
+def test_update_never_widens_a_stored_column(spark, tmp_path, tier):
+    """A value its stored column cannot hold (2.5 or True into an int64
+    column, "abc" into a double one) raises ValueError naming the id and
+    key, and publishes nothing. Such an update used to rewrite its bucket
+    with a widened column, after which list_products, list_products_df and
+    compact() all raised CANNOT_MERGE_SCHEMAS. A value the column can hold
+    (5 into a double column) is still stored in the column's type."""
+    from crawl4ai_llm_spark.storage import ProductStore
+
+    st = ProductStore(spark, str(tmp_path / "wh"))
+    ids = st.save_products(
+        [{"id": f"w{k}", "title": f"t{k}", "qty": k, "price": 1.5 * k} for k in range(6)]
+    )
+    if tier == "spark":
+        st.ARROW_LOOKUP_MAX_FILES = 0
+    for key, value in (("qty", 2.5), ("price", "abc"), ("qty", True)):
+        head = st.table.current_snapshot().snapshot_id
+        with pytest.raises(ValueError, match=f"'{ids[1]}'.*{key}="):
+            st.update_products([{"id": ids[1], key: value}])
+        assert st.table.current_snapshot().snapshot_id == head
+    assert st.update_products([{"id": ids[1], "price": 5}]) == 1
+    got = st.get_product(ids[1])
+    assert (got["qty"], got["price"]) == (1, 5.0) and type(got["price"]) is float
+    assert st.list_products(page_size=10).total == 6
+    page_df, total = st.list_products_df(page_size=10)
+    assert (total, page_df.count()) == (6, 6)
+    st.compact()
+    assert st.get_products(ids)[1] == got

@@ -36,15 +36,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def _cpu_jiffies() -> tuple[int, int]:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    return int(parts[1]) + int(parts[2]), int(parts[3])
-
-
 def run_leg(spark, scale: int, dedup_on: bool, latency_ms: float = 0.0) -> dict:
     from crawl4ai_llm_spark.frontier import webgraph as wg
     from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
+    from tools.boxstate import InRun
 
     # same family as bench.py's crawl_throughput graph; hosts (and seeds)
     # scale together so the BFS depth profile — and therefore the wave
@@ -78,11 +73,9 @@ def run_leg(spark, scale: int, dedup_on: bool, latency_ms: float = 0.0) -> dict:
     )
     with tempfile.TemporaryDirectory() as tmp:
         eng = FrontierEngine(spark, tmp, cfg)
-        u0, s0 = _cpu_jiffies()
-        t0 = time.time()
-        waves = eng.run(seeds=wg.seed_urls(spec, n_seeds=1000 * scale))
-        wall = time.time() - t0
-        u1, s1 = _cpu_jiffies()
+        with InRun() as box:
+            waves = eng.run(seeds=wg.seed_urls(spec, n_seeds=1000 * scale))
+        wall = box.wall
         n_urls = eng.schedule.read().count()
         n_docs = eng.docs.read().count()
         n_pairs = (
@@ -98,7 +91,6 @@ def run_leg(spark, scale: int, dedup_on: bool, latency_ms: float = 0.0) -> dict:
         commit_wall = sum(
             m.get("table_commits+filter_delta", 0.0) for m in eng.wave_marks.values()
         )
-    du, ds = u1 - u0, s1 - s0
     return {
         "scale": scale,
         "content_dedup": dedup_on,
@@ -113,7 +105,7 @@ def run_leg(spark, scale: int, dedup_on: bool, latency_ms: float = 0.0) -> dict:
         "match_wall_sec": round(match_wall, 1),
         "match_ms_per_doc": round(1000 * match_wall / max(1, n_docs), 3),
         "commit_wall_sec": round(commit_wall, 1),
-        "run_sys_frac": round(ds / max(1, du + ds), 3),
+        "run_sys_frac": box.sys_frac,
     }
 
 

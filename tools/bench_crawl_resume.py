@@ -20,30 +20,9 @@ import json
 import os
 import sys
 import tempfile
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-
-def _cpu_jiffies() -> tuple[int, int]:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    return int(parts[1]) + int(parts[2]), int(parts[3])
-
-
-class _InRun:
-    def __enter__(self):
-        self.u0, self.s0 = _cpu_jiffies()
-        self.t0 = time.time()
-        return self
-
-    def __exit__(self, *exc):
-        u1, s1 = _cpu_jiffies()
-        self.wall = round(time.time() - self.t0, 1)
-        du, ds = u1 - self.u0, s1 - self.s0
-        self.sys_frac = round(ds / max(1, du + ds), 3)
-        return False
 
 
 def pair_set(eng) -> set:
@@ -61,6 +40,7 @@ def main() -> None:
     from crawl4ai_llm_spark.frontier import webgraph as wg
     from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
     from crawl4ai_llm_spark.session import get_spark
+    from tools.boxstate import InRun
 
     quick = "--quick" in sys.argv
     spark = get_spark(app_name="bench_crawl_resume")
@@ -89,19 +69,19 @@ def main() -> None:
     with tempfile.TemporaryDirectory() as ref_tmp, tempfile.TemporaryDirectory() as tmp:
         # uninterrupted reference (the oracle for the resumed run)
         ref = FrontierEngine(spark, ref_tmp, CrawlConfig(**base, max_waves=8))
-        with _InRun() as m_ref:
+        with InRun() as m_ref:
             ref.run(seeds=seeds)
         ref_pairs = pair_set(ref)
         ref_docs = ref.docs.read().count()
-        print(json.dumps({"phase": "reference", "wall_sec": m_ref.wall,
+        print(json.dumps({"phase": "reference", "wall_sec": round(m_ref.wall, 1),
                           "sys_frac": m_ref.sys_frac, "dup_pairs": len(ref_pairs),
                           "docs": ref_docs}), flush=True)
 
         # crawl to wave 5 (compaction fires at wave 3), then "crash"
         eng = FrontierEngine(spark, tmp, CrawlConfig(**base, max_waves=5))
-        with _InRun() as m_pre:
+        with InRun() as m_pre:
             eng.run(seeds=seeds)
-        print(json.dumps({"phase": "pre_kill_5_waves", "wall_sec": m_pre.wall,
+        print(json.dumps({"phase": "pre_kill_5_waves", "wall_sec": round(m_pre.wall, 1),
                           "sys_frac": m_pre.sys_frac}), flush=True)
 
         # forge the torn wave-6 at realistic size: a full wave's worth of
@@ -142,29 +122,29 @@ def main() -> None:
 
         # resume: rollback the torn index + pair appends, verify counters
         eng2 = FrontierEngine(spark, tmp, CrawlConfig(**base, max_waves=8))
-        with _InRun() as m_res:
+        with InRun() as m_res:
             start = eng2.resume()
         idx2 = eng2.dedup_index()
         rewound = int(idx2.minhash_bands.current_snapshot().counters["n_docs"])
         assert start == 5, start
         assert rewound == committed, (rewound, committed)
-        print(json.dumps({"phase": "resume_rewind", "wall_sec": m_res.wall,
+        print(json.dumps({"phase": "resume_rewind", "wall_sec": round(m_res.wall, 1),
                           "sys_frac": m_res.sys_frac, "resumed_at_wave": start,
                           "index_docs_rewound_to": rewound}), flush=True)
 
         # finish waves 6-8 and compare against the uninterrupted oracle
-        with _InRun() as m_fin:
+        with InRun() as m_fin:
             eng2.run(seeds=None)
         got = pair_set(eng2)
         ok = got == ref_pairs and not any("torn" in p[1] for p in got)
-        print(json.dumps({"phase": "finish_6_to_8", "wall_sec": m_fin.wall,
+        print(json.dumps({"phase": "finish_6_to_8", "wall_sec": round(m_fin.wall, 1),
                           "sys_frac": m_fin.sys_frac, "dup_pairs": len(got)}),
               flush=True)
         print(json.dumps({
             "summary": {
                 "pairs_equal_uninterrupted": ok,
-                "resume_rewind_sec": m_res.wall,
-                "reference_wall_sec": m_ref.wall,
+                "resume_rewind_sec": round(m_res.wall, 1),
+                "reference_wall_sec": round(m_ref.wall, 1),
                 "interrupted_total_sec": round(m_pre.wall + m_res.wall + m_fin.wall, 1),
                 "worst_sys_frac": max(m_ref.sys_frac, m_pre.sys_frac,
                                       m_res.sys_frac, m_fin.sys_frac),

@@ -134,7 +134,7 @@ def main() -> None:
 {N_LOOKUP} matched ids per lookup (wave-sized). The pyarrow driver read
 scans every live byte (doc_id predicates do not prune wave-ordered row
 groups); the Spark path pays ~1 job of scheduling but scans distributed.
-The gate `DRIVER_TEXT_READ_BYTE_BUDGET` (default 512 MB,
+The gate `DRIVER_TEXT_READ_BYTE_BUDGET` (default 256 MB,
 `SPARK_GRAFT_DRIVER_TEXT_READ_BYTES`) hands the lookup to the
 distributed path above the budget — sized from this table: the driver
 read's advantage erodes with bytes while the Spark wall stays flat.

@@ -39,12 +39,6 @@ sys.path.insert(0, REPO)
 VOCAB_N = 65536
 
 
-def _cpu_jiffies():
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    return int(parts[1]) + int(parts[2]), int(parts[3])
-
-
 def make_docs(spark, n, base, dup_every=50):
     """Deterministic synthetic docs; every ``dup_every``-th batch doc is a
     near-copy of a stored doc so both paths do real verify work."""
@@ -73,28 +67,25 @@ def make_docs(spark, n, base, dup_every=50):
 
 def run_leg(spark, idx, stored_docs, batch, n_batch, force: str) -> dict:
     from crawl4ai_llm_spark.operators import dedup_store as ds
+    from tools.boxstate import InRun
 
     old = ds.BROADCAST_BAND_ROW_BUDGET
     ds.BROADCAST_BAND_ROW_BUDGET = 10**12 if force == "probe" else 0
     try:
         prepared = idx.prepare_batch(batch).cache()
-        u0, s0 = _cpu_jiffies()
-        t0 = time.time()
-        pairs = idx.match_documents(
-            batch, stored_docs, prepared=prepared, n_batch=n_batch
-        )
-        n_pairs = pairs.count()
-        wall = time.time() - t0
-        u1, s1 = _cpu_jiffies()
+        with InRun() as box:
+            pairs = idx.match_documents(
+                batch, stored_docs, prepared=prepared, n_batch=n_batch
+            )
+            n_pairs = pairs.count()
         prepared.unpersist()
-        du, dsy = u1 - u0, s1 - s0
         return {
             "path": force,
             "n_batch": n_batch,
             "band_rows": n_batch * 32,
-            "wall_sec": round(wall, 2),
+            "wall_sec": round(box.wall, 2),
             "pairs": n_pairs,
-            "run_sys_frac": round(dsy / max(1, du + dsy), 3),
+            "run_sys_frac": box.sys_frac,
         }
     finally:
         ds.BROADCAST_BAND_ROW_BUDGET = old

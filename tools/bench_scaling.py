@@ -85,34 +85,23 @@ spark.stop()
 """
 
 
-def _cpu_jiffies() -> tuple[int, int, int, int]:
-    """(user+nice, system, steal, total) jiffies across all cpus —
-    /proc/stat line 1. STEAL (field 8) is time the hypervisor ran someone
-    else on our vCPUs: invisible to sys_frac (VERDICT r07 #1 — the r07
-    scaling run read 0.73/0.77 at in-run sys 0.07-0.11 because a 10%
-    steal storm doesn't show up as system time)."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:]]
-    return vals[0] + vals[1], vals[2], vals[7] if len(vals) > 7 else 0, sum(vals)
-
-
 # Acceptance bar for the hypervisor-steal share of a level's wall
 # (VERDICT r07 #1: "accept only levels with steal ≤ ~2%").
 STEAL_FRAC_MAX = 0.02
 
 
 def run_level(cpus: int, quick: bool, transport: str = "broadcast") -> dict:
+    from tools.boxstate import InRun
+
     script = CHILD.format(repo=REPO)
-    u0, s0, st0, t0 = _cpu_jiffies()
-    out = subprocess.run(
-        [sys.executable, "-c", script, str(cpus), "1" if quick else "0", transport],
-        capture_output=True,
-        text=True,
-        timeout=3600,
-        env={**os.environ, "SPARK_GRAFT_CPUS": str(cpus)},
-    )
-    u1, s1, st1, t1 = _cpu_jiffies()
+    with InRun() as box:
+        out = subprocess.run(
+            [sys.executable, "-c", script, str(cpus), "1" if quick else "0", transport],
+            capture_output=True,
+            text=True,
+            timeout=3600,
+            env={**os.environ, "SPARK_GRAFT_CPUS": str(cpus)},
+        )
     for line in out.stdout.splitlines():
         line = line.strip()
         if line.startswith("{"):
@@ -123,11 +112,12 @@ def run_level(cpus: int, quick: bool, transport: str = "broadcast") -> dict:
             # mid-run degradation window entirely (measured on this box:
             # a 'healthy-bracketed' local[16] still ran 9% slow). The
             # kernel-time pathology shows up here directly.
-            du, ds = u1 - u0, s1 - s0
-            r["run_sys_frac"] = round(ds / max(1, du + ds), 3)
+            r["run_sys_frac"] = box.sys_frac
             # steal share of TOTAL elapsed cpu time (idle included): the
-            # fraction of this level's wall the hypervisor gave away
-            r["run_steal_frac"] = round((st1 - st0) / max(1, t1 - t0), 4)
+            # fraction of this level's wall the hypervisor gave away —
+            # invisible to sys_frac (VERDICT r07 #1: the r07 scaling run
+            # read 0.73/0.77 at in-run sys 0.07-0.11 under a 10% steal storm)
+            r["run_steal_frac"] = box.steal_frac
             return r
     raise RuntimeError(f"no result from local[{cpus}]: {out.stderr[-2000:]}")
 
