@@ -343,7 +343,24 @@ class Table:
             # appended batches may carry new columns (schema-on-read parity
             # with the reference, SURVEY.md §1.1)
             reader = reader.option("mergeSchema", "true")
+        elif (schema := self._spark_row_schema(min(files))) is not None:
+            # without mergeSchema Spark takes the schema from the footer of
+            # the first file in path order, in a one-task job per read;
+            # handing it the same schema read with pyarrow skips that job
+            reader = reader.schema(schema)
         return reader.parquet(*files)
+
+    @staticmethod
+    def _spark_row_schema(path: str):
+        """The Spark row schema stored in a Spark-written parquet file's
+        footer, or None for a file without one (pyarrow-written)."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
+
+        raw = (pq.read_metadata(path).metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata"
+        )
+        return None if raw is None else StructType.fromJson(json.loads(raw))
 
     def replace_buckets(
         self, df: DataFrame, buckets: set[int], counters: dict[str, int] | None = None

@@ -1,10 +1,14 @@
 """Partitioned Bloom filters for the URL-seen set (SURVEY.md §2.7 C3).
 
 Spark's ``bloom_filter_agg`` is not registered as a SQL function in this
-build, so the filter is built with numpy inside ``applyInPandas`` — one
-Bloom per hash bucket of the seen table. Probing happens driver-broadcast:
-the per-bucket bitmaps (n_buckets × m/8 bytes ≈ 1 MB at defaults) are
-collected once per wave and probed by a vectorized pandas UDF.
+build, so the filter is built with numpy on the driver — one Bloom per hash
+bucket of the seen table (``blooms_from_hashes``). The keys come from work
+the crawl already does: the first build streams the seen table's
+``url_hash`` column through pyarrow, and each wave's delta reuses the
+hashes of the action that materializes its new links, so no Spark job
+exists only to build a filter. Probing happens driver-broadcast: the
+per-bucket bitmaps (n_buckets × m/8 bytes ≈ 1 MB at defaults) are
+broadcast once per wave and probed by a vectorized pandas UDF.
 
 Guarantee: NO false negatives — ``might_contain == False`` proves a URL is
 new. Bloom-positive candidates still go through the exact anti-join, so the
@@ -37,27 +41,42 @@ def _positions(hashes: np.ndarray) -> np.ndarray:
     return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(M_BITS)
 
 
-def build_blooms(seen: DataFrame, n_buckets: int = 64) -> dict[int, bytes]:
-    """One Bloom bitmap per ``pmod(url_hash, n_buckets)`` bucket, built
-    partition-local via applyInPandas and collected (small: bitmaps only)."""
+def _buckets(hashes: np.ndarray, n_buckets: int) -> np.ndarray:
+    """``pmod(url_hash, n_buckets)`` for an int64 array."""
+    if n_buckets & (n_buckets - 1) == 0:
+        # power-of-two: two's-complement AND equals pmod AND avoids the
+        # signed-int64 modulo, which is ~100x slower than unsigned ops
+        # on this platform's numpy
+        return (hashes.view(np.uint64) & np.uint64(n_buckets - 1)).astype(np.int64)
+    return np.mod(hashes, n_buckets)  # numpy's floor mod == F.pmod
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
+
+def blooms_from_hashes(hashes, n_buckets: int = 64) -> dict[int, bytes]:
+    """One packed Bloom bitmap per non-empty ``pmod(url_hash, n_buckets)``
+    bucket of ``hashes`` (any int64 array-like). OR-ing the results of
+    disjoint slices equals one call over their union, so callers can feed
+    the keys batch by batch."""
+    h = np.ascontiguousarray(hashes, dtype=np.int64)
+    if h.size == 0:
+        return {}
+    b = _buckets(h, n_buckets)
+    order = np.argsort(b, kind="stable")
+    b, pos = b[order], _positions(h[order]).astype(np.int64)
+    starts = np.flatnonzero(np.r_[True, b[1:] != b[:-1]])
+    out = {}
+    for s, e in zip(starts, np.r_[starts[1:], h.size]):
         bits = np.zeros(M_BITS, dtype=bool)
-        pos = _positions(pdf["url_hash"].to_numpy())
-        bits[pos.ravel().astype(np.int64)] = True
-        return pd.DataFrame(
-            {"bucket": [int(pdf["bucket"].iloc[0])], "bloom": [np.packbits(bits).tobytes()]}
-        )
+        bits[pos[s:e].ravel()] = True
+        out[int(b[s])] = np.packbits(bits).tobytes()
+    return out
 
-    with_bucket = seen.select(
-        F.col("url_hash"), F.pmod(F.col("url_hash"), F.lit(n_buckets)).alias("bucket")
+
+def build_blooms(seen: DataFrame, n_buckets: int = 64) -> dict[int, bytes]:
+    """Bitmaps of every ``url_hash`` in ``seen``: one Arrow collect of the
+    hash column (8 bytes a row), then ``blooms_from_hashes``."""
+    return blooms_from_hashes(
+        seen.select("url_hash").toArrow().column(0).to_numpy(), n_buckets
     )
-    rows = (
-        with_bucket.groupBy("bucket")
-        .applyInPandas(build, "bucket int, bloom binary")
-        .collect()
-    )
-    return {r["bucket"]: bytes(r["bloom"]) for r in rows}
 
 
 def probe_expr(df: DataFrame, blooms: dict[int, bytes], n_buckets: int = 64):
@@ -74,13 +93,7 @@ def probe_expr(df: DataFrame, blooms: dict[int, bytes], n_buckets: int = 64):
     @F.pandas_udf("boolean")
     def might_contain(url_hash: pd.Series) -> pd.Series:
         h = url_hash.to_numpy()
-        if n_buckets & (n_buckets - 1) == 0:
-            # power-of-two: two's-complement AND equals pmod AND avoids the
-            # signed-int64 modulo, which is ~100x slower than unsigned ops
-            # on this platform's numpy
-            buckets = (h.view(np.uint64) & np.uint64(n_buckets - 1)).astype(np.int64)
-        else:
-            buckets = np.mod(h, n_buckets)  # matches F.pmod for the probe side
+        buckets = _buckets(h, n_buckets)
         out = np.zeros(len(h), dtype=bool)
         pos = _positions(h)
         table = bc.value

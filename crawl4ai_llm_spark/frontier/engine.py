@@ -15,12 +15,13 @@ Per wave:
      survivors per host. Same result as a single per-host window, without
      a skewed shuffle (host 0 holds ~30% of the frontier by construction).
   2. FETCH — scheduled URLs cross to Python once, in Arrow batches
-     (mapInPandas), returning (ok, links, interleaved spans). No per-row
-     UDFs anywhere (driver input_hint mandate).
+     (mapInPandas), returning (ok, canonical out-links, interleaved
+     spans). No per-row UDFs anywhere (driver input_hint mandate).
   3. RETRY — failures requeue with attempt+1 while attempt ≤ max_retries
      (ref config.py:54-55 semantics).
-  4. DISCOVER — out-links are canonicalized (vectorized pandas UDF),
-     murmur3-hashed, robots-filtered (broadcast join against the tiny
+  4. DISCOVER — out-links arrive canonical (the fetch batch canonicalizes
+     each page's links while it visits the page; no Python stage here),
+     are murmur3-hashed, robots-filtered (broadcast join against the tiny
      rules table), deduplicated: groupBy(url).min(depth) within the wave,
      Bloom-prefiltered against the seen set (bloom.py — no false
      negatives), then EXACT anti-join on the Bloom-positive remainder.
@@ -49,7 +50,12 @@ from crawl4ai_llm_spark.catalog import Catalog
 from crawl4ai_llm_spark.frontier import bloom as bloom_mod
 from crawl4ai_llm_spark.frontier import cuckoo as cuckoo_mod
 from crawl4ai_llm_spark.frontier import webgraph as wg
-from crawl4ai_llm_spark.functions.urls import canonicalize_url, host_of, url_hash
+from crawl4ai_llm_spark.functions.urls import (
+    _canonical_links,
+    canonicalize_url,
+    host_of,
+    url_hash,
+)
 from crawl4ai_llm_spark.schemas import SPAN_TYPE
 
 # Corpus-footprint gate for the driver-tier orig-text pyarrow read
@@ -323,13 +329,26 @@ class FrontierEngine:
         return {did: text for did, (_, text) in best.items()}
 
     def robots_df(self) -> DataFrame:
-        """Tiny host→rules dimension — always broadcast (C7)."""
+        """Tiny host→rules dimension — always broadcast (C7). Built from a
+        pyarrow table, so the plan holds a LocalRelation rather than a
+        pickled-RDD scan, which every broadcast join against it would
+        otherwise re-run as a Python task."""
         if self._robots_df is None:
-            rows = wg.robots_rules(self.config.graph)
-            self._robots_df = self.spark.createDataFrame(
-                rows,
-                "host string, deny_prefixes array<string>, allow_prefixes array<string>, crawl_delay double",
+            import pyarrow as pa
+
+            strings = pa.list_(pa.string())
+            rows = pa.Table.from_pylist(
+                wg.robots_rules(self.config.graph),
+                schema=pa.schema(
+                    [
+                        ("host", pa.string()),
+                        ("deny_prefixes", strings),
+                        ("allow_prefixes", strings),
+                        ("crawl_delay", pa.float64()),
+                    ]
+                ),
             )
+            self._robots_df = self.spark.createDataFrame(rows)
         return self._robots_df
 
     def _with_frontier_cols(self, urls: DataFrame, depth_col: str = "depth") -> DataFrame:
@@ -403,7 +422,11 @@ class FrontierEngine:
 
     def _fetch(self, scheduled: DataFrame) -> DataFrame:
         """Arrow-batched synthetic fetch (C9). Real deployment swaps the body
-        for async HTTP with the same batch interface."""
+        for async HTTP with the same batch interface: per scheduled URL it
+        returns ``ok``, the page's spans and its out-links already in
+        canonical form (``_canonical_links`` — the batch visits every page
+        in Python anyway, so discovery needs no canonicalization stage of
+        its own)."""
         spec = self.config.graph
         parse_work = self.config.parse_work
         latency_s = self.config.fetch_latency_ms / 1000.0
@@ -422,7 +445,7 @@ class FrontierEngine:
                 for url, attempt in zip(pdf["url"], pdf["attempt"]):
                     ok = wg.fetch_ok(spec, url, int(attempt))
                     oks.append(ok)
-                    links.append(wg.out_links(spec, url) if ok else [])
+                    links.append(_canonical_links(wg.out_links(spec, url)) if ok else [])
                     spans.append(wg.page_spans(spec, url) if ok else [])
                     if ok and parse_work:
                         d = url.encode()
@@ -486,6 +509,23 @@ class FrontierEngine:
         # reassess from the rebuilt footprint next wave
         return "broadcast"
 
+    def _build_seen_blooms(self) -> None:
+        """Full broadcast-tier build from the seen snapshot: its files'
+        ``url_hash`` column streams through pyarrow one record batch at a
+        time, OR-ed into the bitmaps — no Spark job, and the driver never
+        holds more than one batch plus the bitmaps."""
+        import pyarrow.parquet as pq
+
+        self._blooms = {}
+        snap = self.seen.current_snapshot()
+        for path in snap.files if snap else []:
+            for batch in pq.ParquetFile(path).iter_batches(columns=["url_hash"]):
+                self._bloom_or(
+                    bloom_mod.blooms_from_hashes(
+                        batch.column(0).to_numpy(), self.config.bloom_buckets
+                    )
+                )
+
     def _bloom_or(self, delta: dict[int, bytes]) -> None:
         import numpy as np
 
@@ -542,8 +582,11 @@ class FrontierEngine:
         pruned = with_r1.where(F.col("r1") <= F.col("budget"))
         salt_cut = with_r1.where(F.col("r1") > F.col("budget"))
         w_host = Window.partitionBy("host").orderBy(*pri)
-        ranked = pruned.withColumn("host_rank", F.row_number().over(w_host))
-        scheduled = ranked.where(F.col("host_rank") <= F.col("budget")).cache()
+        # cache the ranking, not just its scheduled slice: the frontier
+        # commit's leftovers (host_rank > budget) read the same cache
+        # instead of re-running the host-window shuffle
+        ranked = pruned.withColumn("host_rank", F.row_number().over(w_host)).cache()
+        scheduled = ranked.where(F.col("host_rank") <= F.col("budget"))
 
         # --- fetch (C9) ---
         results = self._fetch(scheduled).withColumn(
@@ -565,7 +608,7 @@ class FrontierEngine:
         n_scheduled = sum(r["urls_scheduled"] for r in lineage_rows)
         n_fetched = sum(r["urls_fetched"] for r in lineage_rows)
         if n_scheduled == 0:
-            scheduled.unpersist()
+            ranked.unpersist()
             with_r1.unpersist()
             results.unpersist()
             return {"scheduled": 0}
@@ -577,16 +620,13 @@ class FrontierEngine:
             "url", "url_hash", "host", "depth", (F.col("attempt") + 1).alias("attempt"), "score"
         )
 
-        # --- discovery (C1/C2/C10 + dedup C3/C4) ---
+        # --- discovery (C1/C2/C10 + dedup C3/C4): links are canonical
+        # already (the fetch batch canonicalized them) ---
         discovered = (
             results.where(F.col("ok"))
-            .select(F.col("depth").alias("parent_depth"), F.explode("links").alias("raw_url"))
+            .select(F.col("depth").alias("parent_depth"), F.explode("links").alias("url"))
             .where(F.col("parent_depth") + 1 <= cfg.max_depth)
-            .select(
-                canonicalize_url(F.col("raw_url")).alias("url"),
-                (F.col("parent_depth") + 1).alias("depth"),
-            )
-            .where(F.col("url").isNotNull())
+            .select("url", (F.col("parent_depth") + 1).alias("depth"))
             .groupBy("url")
             .agg(F.min("depth").alias("depth"))  # wave-deterministic dedup
         )
@@ -639,7 +679,7 @@ class FrontierEngine:
             else:
                 if cfg.seen_filter == "bloom":
                     if self._blooms is None:  # fresh engine / post-resume: full build
-                        self._blooms = bloom_mod.build_blooms(seen_df, cfg.bloom_buckets)
+                        self._build_seen_blooms()
                     probed, bloom_bc = bloom_mod.probe_expr(
                         discovered, self._blooms, cfg.bloom_buckets
                     )
@@ -688,7 +728,9 @@ class FrontierEngine:
         # CONCURRENT Spark jobs — wall time is the max, not the sum.
         k = cfg.commit_partitions or self.spark.sparkContext.defaultParallelism
         wave_tag = {"wave": wave}
-        new_links.count()  # materialize the discovery cache once, full width
+        # materialize the discovery cache once, full width; the hashes it
+        # returns are the broadcast Bloom tier's delta (no job of its own)
+        new_hashes = new_links.select("url_hash").toArrow().column(0).to_numpy()
         mark("new_links_count")
 
         # --- content near-dup match (backward-only: wave docs vs the index
@@ -805,16 +847,19 @@ class FrontierEngine:
                     )
             ingest = wave_docs
             prepared = wave_prepared
+            n_ingest = n_fetched  # wave docs are unique URLs, one per fetch
             if n_dups and cfg.content_dedup_policy == "skip":
                 if driver_pairs:
                     ingest = wave_docs.where(~F.col("doc_id").isin(dup_new_ids))
                     prepared = wave_prepared.where(~F.col("doc_id").isin(dup_new_ids))
+                    n_ingest -= len(dup_new_ids)
                 elif pairs is not None:
                     skipped = pairs.select(F.col("new_id").alias("doc_id")).distinct()
                     ingest = wave_docs.join(skipped, "doc_id", "left_anti")
                     prepared = wave_prepared.join(skipped, "doc_id", "left_anti")
+                    n_ingest = None  # ingest counts the survivors itself
             self.dedup_index().ingest_documents(
-                ingest, counters=wave_tag, prepared=prepared
+                ingest, counters=wave_tag, prepared=prepared, n_docs=n_ingest
             )
 
         def commit_seen():
@@ -849,7 +894,7 @@ class FrontierEngine:
                 if new_filters is not None:
                     self.blooms_table.overwrite(new_filters, counters=wave_tag)
             elif cfg.seen_filter == "bloom" and self._blooms is not None:
-                self._bloom_or(bloom_mod.build_blooms(new_links, cfg.bloom_buckets))
+                self._bloom_or(bloom_mod.blooms_from_hashes(new_hashes, cfg.bloom_buckets))
             elif cfg.seen_filter == "cuckoo" and self._cuckoo is not None:
                 self._cuckoo = cuckoo_mod.update_filters(
                     new_links, self._cuckoo, cfg.bloom_buckets
@@ -877,12 +922,25 @@ class FrontierEngine:
         mark("checkpoint")
         self.wave_marks[wave] = dict(marks)
         if verbose:
-            print(f"# wave {wave} timing: {marks}", flush=True)
+            import json
+
+            print(
+                json.dumps(
+                    {
+                        "wave": wave,
+                        "marks": dict(marks),
+                        "scheduled": n_scheduled,
+                        "fetched": n_fetched,
+                        "transport": transport,
+                    }
+                ),
+                flush=True,
+            )
 
         stats = {"scheduled": n_scheduled, "fetched": n_fetched}
         if cfg.content_dedup:
             stats["content_dups"] = n_dups
-        scheduled.unpersist()
+        ranked.unpersist()
         with_r1.unpersist()
         results.unpersist()
         new_links.unpersist()
@@ -947,7 +1005,9 @@ class FrontierEngine:
         if seen_df is not None:
             rows = rows.join(seen_df.select("url"), "url", "left_anti")
         rows = rows.cache()
-        n = rows.count()
+        # materializes the cache; the hashes feed the broadcast Bloom tier
+        hashes = rows.select("url_hash").toArrow().column(0).to_numpy()
+        n = len(hashes)
         pending = self.frontier.read()
         merged = rows if pending is None else pending.unionByName(rows)
         self.frontier.overwrite(merged, counters={"wave": wave})
@@ -972,7 +1032,7 @@ class FrontierEngine:
                     counters={"wave": wave, **stale},
                 )
         elif self.config.seen_filter == "bloom" and self._blooms is not None:
-            self._bloom_or(bloom_mod.build_blooms(rows, self.config.bloom_buckets))
+            self._bloom_or(bloom_mod.blooms_from_hashes(hashes, self.config.bloom_buckets))
         rows.unpersist()
         return n
 

@@ -2,10 +2,11 @@
 
 Canonicalization is a vectorized pandas UDF (Arrow-batched — the reference
 validates URLs per record in Python via pydantic HttpUrl, models.py:27;
-here the whole batch crosses the boundary once). Hashing is JVM-side
-murmur3 (``F.hash``) per the SURVEY §8.3 ruling: the reference's
-process-salted builtin ``hash()`` (json_storage.py:87) is not reproducible,
-murmur3 is.
+here the whole batch crosses the boundary once). Code that already runs in
+Python per row, like the crawl's fetch batch, calls the same rule directly
+(``_canonical_links``). Hashing is JVM-side murmur3 (``F.hash``) per the
+SURVEY §8.3 ruling: the reference's process-salted builtin ``hash()``
+(json_storage.py:87) is not reproducible, murmur3 is.
 """
 
 from __future__ import annotations
@@ -53,6 +54,14 @@ def _canonicalize_one(url: str) -> str | None:
         path += "/"
     query = "&".join(sorted(q for q in parts.query.split("&") if q)) if parts.query else ""
     return urlunsplit((scheme, netloc, path, query, ""))
+
+
+def _canonical_links(raw: list[str]) -> list[str]:
+    """A page's out-links in canonical form, in page order; links that do
+    not canonicalize (non-http schemes, no host, unparsable) are dropped —
+    the rows ``canonicalize_url`` returns null for. The crawl's fetch batch
+    calls this per page, so discovery needs no canonicalization stage."""
+    return [c for c in map(_canonicalize_one, raw) if c is not None]
 
 
 def _canonicalize_series(urls: pd.Series) -> pd.Series:

@@ -170,12 +170,16 @@ class DedupIndex:
         docs: DataFrame,
         counters: dict[str, int] | None = None,
         prepared: DataFrame | None = None,
+        n_docs: int | None = None,
     ) -> int:
         """Append the batch's MinHash band keys (one shingle+signature Arrow
         pass over the batch — never the stored corpus). ``docs``:
         (doc_id, text). ``prepared``: this batch's cached
         ``prepare_batch`` frame — reuses its signatures instead of
-        recomputing them. Returns the number of documents indexed."""
+        recomputing them. ``n_docs``: the batch's row count when the
+        caller already knows it (the crawl wave does); None counts
+        ``docs`` with one Spark job. Returns the number of documents
+        indexed — the step the ``n_docs`` counter advances by."""
         from crawl4ai_llm_spark.operators import dedup
 
         if prepared is not None:
@@ -190,7 +194,7 @@ class DedupIndex:
         if snap is not None and snap.files:
             _require_scheme(self.minhash_bands, "sig_scheme", SIG_SCHEME, "minhash_bands")
         prev = int(snap.counters.get("n_docs", 0)) if snap else 0
-        n = docs.count()
+        n = docs.count() if n_docs is None else n_docs
         self.minhash_bands.append(
             bd,
             counters={**(counters or {}), "n_docs": prev + n, "sig_scheme": SIG_SCHEME},
@@ -417,9 +421,21 @@ class DedupIndex:
         # string across the Arrow boundary cost more than the whole
         # signature arithmetic)
         matched = cand.select(F.col("orig_id").alias("doc_id")).distinct()
-        orig_sh = _widen(
-            stored_docs.join(matched, "doc_id", "left_semi"), self.spark
-        ).select("doc_id", dedup.word_ngrams_fast(F.col("text")).alias("grams"))
+        orig = stored_docs.join(matched, "doc_id", "left_semi")
+        if "wave" in stored_docs.columns:
+            # a recrawled doc_id scores only its max-wave row (the latest
+            # fetch; a null wave ranks lowest), as the driver tier's
+            # readers rule; a tie inside one wave keeps the row the scan
+            # returns last, like their keep-last scans
+            rank = F.struct(F.coalesce(F.col("wave"), F.lit(-1)), F.col("_pos"))
+            orig = (
+                orig.withColumn("_pos", F.monotonically_increasing_id())
+                .groupBy("doc_id")
+                .agg(F.max_by("text", rank).alias("text"))
+            )
+        orig_sh = _widen(orig, self.spark).select(
+            "doc_id", dedup.word_ngrams_fast(F.col("text")).alias("grams")
+        )
         new_matched = cand.select(F.col("new_id").alias("doc_id")).distinct()
         ga = fused.join(new_matched, "doc_id", "left_semi").select(
             F.col("doc_id").alias("new_id"),

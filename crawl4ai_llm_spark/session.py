@@ -11,13 +11,35 @@ from the available parallelism rather than Spark's legacy 200.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
     """Parallelism the sandbox grants us (driver exports SPARK_GRAFT_CPUS)."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not cpus.strip().isdecimal() or int(cpus) == 0:
+        # int() would raise without naming the variable, and 0 would
+        # build a local[0] master that fails at session start
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {cpus!r}")
+    return int(cpus)
+
+
+def _driver_memory_env() -> str | None:
+    """SPARK_GRAFT_DRIVER_MEM, checked: a JVM size such as ``4g`` or
+    ``512m`` (a typo would otherwise surface as a JVM start failure)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env and not re.fullmatch(r"[1-9][0-9]*[kmgtKMGT]", env):
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM must be a JVM size such as 4g or 512m, got {env!r}"
+        )
+    return env
+
+
+# both knobs fail the import, not the first session start
+default_parallelism()
+_driver_memory_env()
 
 
 def _default_driver_memory() -> str:
@@ -29,7 +51,7 @@ def _default_driver_memory() -> str:
     RAM, clamped to [2g, 32g]; SPARK_GRAFT_DRIVER_MEM overrides (the
     bench harness exports 32g on the 128 GiB sandbox).
     """
-    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    env = _driver_memory_env()
     if env:
         return env
     try:

@@ -479,3 +479,42 @@ def test_crawl_dedup_distributed_fallback_matches_driver_tier(
         for r in flag_run.dup_pairs.read().collect()
     }
     assert got == want
+
+
+def test_distributed_match_scores_only_max_wave_row(spark, tmp_path, monkeypatch):
+    """With the driver tier declined, the distributed match_documents
+    verify scores a recrawled doc_id by its max-wave row only: an older
+    row that matches the probe and a newer one that does not give no
+    pair, and the other way round give the newer row's pair."""
+    import random
+
+    from crawl4ai_llm_spark.operators import dedup_store as ds
+
+    monkeypatch.setattr(ds, "DRIVER_MATCH_DOC_BUDGET", 0)  # driver tier declines
+    rng = random.Random(11)
+    words = [f"w{i}" for i in range(5000)]
+    old = " ".join(rng.choice(words) for _ in range(30))
+    new = " ".join(rng.choice(words) for _ in range(30))
+    idx = ds.DedupIndex(spark, str(tmp_path / "index"))
+    idx.ingest_documents(
+        spark.createDataFrame([("doc", old)], "doc_id string, text string")
+    )
+    schema = "doc_id string, text string, wave int"
+    probe = spark.createDataFrame([("probe", old)], "doc_id string, text string")
+    prepared = idx.prepare_batch(probe).cache()
+
+    def pairs(stored_rows):
+        stored = spark.createDataFrame(stored_rows, schema)
+        assert idx.match_documents_driver(
+            stored, tau=TAU, prepared=prepared, n_batch=1
+        ) is None
+        got = idx.match_documents(probe, stored, tau=TAU, prepared=prepared, n_batch=1)
+        return {(r["new_id"], r["orig_id"]): r["jaccard"] for r in got.collect()}
+
+    # old text matches, the recrawl's newer text does not: no pair
+    assert pairs([("doc", old, 1), ("doc", new, 2)]) == {}
+    # the newer row matches: its pair, whatever the older row holds
+    assert pairs([("doc", new, 1), ("doc", old, 3), ("doc", new, None)]) == {
+        ("probe", "doc"): 1.0
+    }
+    prepared.unpersist()

@@ -597,3 +597,42 @@ def test_driver_text_read_bytes_env_validated_at_import(value, ok):
     else:
         assert proc.returncode != 0
         assert "ValueError: SPARK_GRAFT_DRIVER_TEXT_READ_BYTES must be a non-negative" in proc.stderr
+
+
+@pytest.mark.parametrize(
+    "name,value,ok",
+    [
+        ("SPARK_GRAFT_CPUS", "abc", False),
+        ("SPARK_GRAFT_CPUS", "0", False),
+        ("SPARK_GRAFT_CPUS", "-4", False),
+        ("SPARK_GRAFT_CPUS", "2.5", False),
+        ("SPARK_GRAFT_CPUS", "4", True),
+        ("SPARK_GRAFT_DRIVER_MEM", "lots", False),
+        ("SPARK_GRAFT_DRIVER_MEM", "4", False),
+        ("SPARK_GRAFT_DRIVER_MEM", "4 GB", False),
+        ("SPARK_GRAFT_DRIVER_MEM", "0g", False),
+        ("SPARK_GRAFT_DRIVER_MEM", "4g", True),
+        ("SPARK_GRAFT_DRIVER_MEM", "512m", True),
+    ],
+)
+def test_session_env_validated_at_import(name, value, ok):
+    """SPARK_GRAFT_CPUS must be a positive integer and
+    SPARK_GRAFT_DRIVER_MEM a JVM size; anything else fails the session
+    module's import with a ValueError naming the variable."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", "import crawl4ai_llm_spark.session"],
+        cwd=root,
+        env={**os.environ, name: value},
+        capture_output=True,
+        text=True,
+    )
+    if ok:
+        assert proc.returncode == 0, proc.stderr
+    else:
+        assert proc.returncode != 0
+        assert f"ValueError: {name} must be" in proc.stderr
