@@ -252,8 +252,9 @@ def store_point_lookup(spark, tmpdir: str, n_rows: int = 200_000) -> float:
     return dt
 
 
-def crawl_throughput(spark, tmpdir: str) -> tuple[float, int]:
-    """Frontier crawl on a mid-size seeded graph; returns (urls/s, urls)."""
+def crawl_throughput(spark, tmpdir: str) -> tuple[float, int, dict]:
+    """Frontier crawl on a mid-size seeded graph; returns (urls/s, urls,
+    waves per ``run_wave`` tier)."""
     from crawl4ai_llm_spark.frontier import webgraph as wg
     from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
 
@@ -270,7 +271,7 @@ def crawl_throughput(spark, tmpdir: str) -> tuple[float, int]:
     eng.run(seeds=wg.seed_urls(spec, n_seeds=1000))
     dt = time.time() - t0
     n = eng.schedule.read().count()
-    return n / dt, n
+    return n / dt, n, dict(eng.tiers)
 
 
 def main() -> None:
@@ -384,7 +385,7 @@ def main() -> None:
 
     with tempfile.TemporaryDirectory() as tmp:
         with InRunSys() as mcrawl:
-            ups, n_urls = crawl_throughput(spark, tmp)
+            ups, n_urls, crawl_tiers = crawl_throughput(spark, tmp)
     crawl_ctl = cpu_state_control()
     print(
         f"# crawl: {n_urls} urls @ {ups:.0f}/s (in-run sys_frac "
@@ -402,6 +403,7 @@ def main() -> None:
         "crawl_urls_per_sec": round(ups, 1),
         "crawl_urls": n_urls,
         "crawl_run_sys_frac": mcrawl.sys_frac,
+        "crawl_wave_tiers": crawl_tiers,
         "q_list_page_warm": warm_list_page,
         "dedup_index_ingest_sec": ingest_sec,
         "dedup_index_ingest_fresh": ingest_fresh,

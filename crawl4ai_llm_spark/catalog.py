@@ -28,6 +28,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+# footer key under which Spark stores a parquet file's row schema (JSON)
+_SPARK_ROW_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
 
 @dataclass
 class Snapshot:
@@ -200,18 +203,39 @@ class Table:
         self._publish(snap)
         return snap
 
-    def _write_pylist(self, rows: list[dict], schema=None) -> str:
-        import pyarrow as pa
+    def _write_arrow(self, table, spark_schema=None) -> str:
+        """Write one pyarrow table as one parquet file under a fresh
+        commit directory and return its path — the catalog's one Arrow
+        writer. ``spark_schema`` (a StructType): the Spark row schema to
+        stamp into the footer under the key Spark itself writes, so
+        ``read`` takes it from there instead of running an inference job.
+        The caller's table must then carry the physical types Spark writes
+        for that schema (``to_arrow_schema`` of it)."""
         import pyarrow.parquet as pq
 
         out_dir = os.path.join(self.data_dir, f"commit-{uuid.uuid4().hex}")
         os.makedirs(out_dir, exist_ok=True)
         path = os.path.join(out_dir, "part-0.parquet")
-        # explicit schema when the table is ALSO written by Spark jobs:
-        # from_pylist infers int64 where Spark wrote int32, and mixed
-        # physical types across files break the table's schema merge
-        pq.write_table(pa.Table.from_pylist(rows, schema=schema), path)
+        if spark_schema is not None:
+            table = table.replace_schema_metadata({_SPARK_ROW_KEY: spark_schema.json()})
+        pq.write_table(table, path)
         return path
+
+    def append_arrow(
+        self, table, counters: dict[str, int] | None = None, spark_schema=None
+    ) -> Snapshot:
+        """Append a driver-side pyarrow table WITHOUT a Spark job: one
+        parquet file (``_write_arrow``) and one snapshot."""
+        path = self._write_arrow(table, spark_schema)
+        parent = self.current_snapshot()
+        return self._commit((parent.files if parent else []) + [path], counters, parent)
+
+    def overwrite_arrow(
+        self, table, counters: dict[str, int] | None = None, spark_schema=None
+    ) -> Snapshot:
+        return self._commit(
+            [self._write_arrow(table, spark_schema)], counters, self.current_snapshot()
+        )
 
     def append_pylist(
         self, rows: list[dict], counters: dict[str, int] | None = None, schema=None
@@ -220,15 +244,19 @@ class Table:
         pyarrow parquet write. For metadata-sized tables (checkpoints,
         per-wave dup pairs): launching a distributed job to write a few
         rows is pure latency. ``schema``: optional pyarrow schema, needed
-        when Spark jobs also write this table (physical-type parity)."""
-        path = self._write_pylist(rows, schema=schema)
-        parent = self.current_snapshot()
-        return self._commit((parent.files if parent else []) + [path], counters, parent)
+        when Spark jobs also write this table (physical-type parity:
+        from_pylist infers int64 where Spark wrote int32, and mixed
+        physical types across files break the table's schema merge)."""
+        import pyarrow as pa
+
+        return self.append_arrow(pa.Table.from_pylist(rows, schema=schema), counters)
 
     def overwrite_pylist(
         self, rows: list[dict], counters: dict[str, int] | None = None
     ) -> Snapshot:
-        return self._commit([self._write_pylist(rows)], counters, self.current_snapshot())
+        import pyarrow as pa
+
+        return self.overwrite_arrow(pa.Table.from_pylist(rows), counters)
 
     def append(self, df: DataFrame, counters: dict[str, int] | None = None) -> Snapshot:
         parent = self.current_snapshot()
@@ -347,19 +375,19 @@ class Table:
             # without mergeSchema Spark takes the schema from the footer of
             # the first file in path order, in a one-task job per read;
             # handing it the same schema read with pyarrow skips that job
+            # (driver-written files carry it too: _write_arrow stamps it)
             reader = reader.schema(schema)
         return reader.parquet(*files)
 
     @staticmethod
     def _spark_row_schema(path: str):
-        """The Spark row schema stored in a Spark-written parquet file's
-        footer, or None for a file without one (pyarrow-written)."""
+        """The Spark row schema stored in a parquet file's footer (by
+        Spark, or stamped by ``_write_arrow``), or None for a file without
+        one (an unstamped pyarrow write)."""
         import pyarrow.parquet as pq
         from pyspark.sql.types import StructType
 
-        raw = (pq.read_metadata(path).metadata or {}).get(
-            b"org.apache.spark.sql.parquet.row.metadata"
-        )
+        raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_ROW_KEY.encode())
         return None if raw is None else StructType.fromJson(json.loads(raw))
 
     def replace_buckets(

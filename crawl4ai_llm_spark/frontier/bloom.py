@@ -8,7 +8,8 @@ the crawl already does: the first build streams the seen table's
 hashes of the action that materializes its new links, so no Spark job
 exists only to build a filter. Probing happens driver-broadcast: the
 per-bucket bitmaps (n_buckets × m/8 bytes ≈ 1 MB at defaults) are
-broadcast once per wave and probed by a vectorized pandas UDF.
+broadcast once per wave and probed by a vectorized pandas UDF whose body,
+``might_contain``, the crawl's driver tier calls in-process.
 
 Guarantee: NO false negatives — ``might_contain == False`` proves a URL is
 new. Bloom-positive candidates still go through the exact anti-join, so the
@@ -91,22 +92,28 @@ def probe_expr(df: DataFrame, blooms: dict[int, bytes], n_buckets: int = 64):
     bc = spark.sparkContext.broadcast(blooms)
 
     @F.pandas_udf("boolean")
-    def might_contain(url_hash: pd.Series) -> pd.Series:
-        h = url_hash.to_numpy()
-        buckets = _buckets(h, n_buckets)
-        out = np.zeros(len(h), dtype=bool)
-        pos = _positions(h)
-        table = bc.value
-        for b in np.unique(buckets):
-            bm = table.get(int(b))
-            if bm is None:
-                continue  # empty bucket: nothing seen there
-            bits = np.unpackbits(np.frombuffer(bm, dtype=np.uint8))
-            m = buckets == b
-            out[m] = bits[pos[m].astype(np.int64)].all(axis=1)
-        return pd.Series(out)
+    def maybe_seen(url_hash: pd.Series) -> pd.Series:
+        return pd.Series(might_contain(url_hash.to_numpy(), bc.value, n_buckets))
 
-    return df.withColumn("maybe_seen", might_contain(F.col("url_hash"))), bc
+    return df.withColumn("maybe_seen", maybe_seen(F.col("url_hash"))), bc
+
+
+def might_contain(hashes, blooms: dict[int, bytes], n_buckets: int = 64) -> np.ndarray:
+    """Bloom verdict per int64 hash against per-bucket bitmaps: False ⇒
+    provably never added. The body of ``probe_expr``'s UDF; the crawl's
+    driver tier calls it in-process."""
+    h = np.ascontiguousarray(hashes, dtype=np.int64)
+    buckets = _buckets(h, n_buckets)
+    out = np.zeros(len(h), dtype=bool)
+    pos = _positions(h)
+    for b in np.unique(buckets):
+        bm = blooms.get(int(b))
+        if bm is None:
+            continue  # empty bucket: nothing seen there
+        bits = np.unpackbits(np.frombuffer(bm, dtype=np.uint8))
+        m = buckets == b
+        out[m] = bits[pos[m].astype(np.int64)].all(axis=1)
+    return out
 
 
 # -- executor-resident tier (10^10-URL scale) ---------------------------------

@@ -5,26 +5,48 @@ the reference's asyncio crawler (crawl4ai_llm CrawlerConfig semantics,
 config.py:35-62) built as deterministic microbatch *waves* over
 snapshot-committed tables.
 
-Per wave:
+Per wave (``run_wave``), on one of two tiers chosen before any work from
+the config, the manifests and the parquet footers (no Spark job):
+
+  * the DRIVER tier runs the whole wave in this process — pyarrow reads,
+    numpy and Python work, one pyarrow file per table committed through
+    the catalog — while the rows it would read (frontier + seen + stored
+    band rows) fit DRIVER_WAVE_ROW_BUDGET and nothing else needs
+    executors;
+  * the SPARK tier runs it as Spark jobs: waves over the budget, the
+    cuckoo and partitioned-Bloom seen filters, per-page fetch cost
+    (parse_work, fetch_latency_ms), and waves that would trip a dedup
+    gate. ``tiers`` counts both.
+
+Both tiers share every per-batch function (fetch_batch,
+bloom.might_contain, dedup.text_signatures, dedup_store.match_pairs) and
+write the same rows; only the relational glue below exists twice, and
+the Spark tier is its reference.
+
   1. POLITENESS + PRIORITY DRAIN — per-host budget
      B = max(1, ⌊wave_seconds / crawl_delay⌋) (robots override, else the
      CrawlerConfig.delay default, ref config.py:56), priority
-     (depth asc, score desc, url_hash asc). Realized as an EXACT two-phase
-     top-B: rank within (host, salt) first — pmod(url_hash, n_salts) salts
-     split the hot host across partitions — then rank the ≤ salts·B
-     survivors per host. Same result as a single per-host window, without
-     a skewed shuffle (host 0 holds ~30% of the frontier by construction).
-  2. FETCH — scheduled URLs cross to Python once, in Arrow batches
-     (mapInPandas), returning (ok, canonical out-links, interleaved
-     spans). No per-row UDFs anywhere (driver input_hint mandate).
+     (depth asc, score desc, url_hash asc). The driver tier takes one
+     sorted per-host row number. The Spark tier realizes it as an EXACT
+     two-phase top-B: rank within (host, salt) first — pmod(url_hash,
+     n_salts) salts split the hot host across partitions — then rank the
+     ≤ salts·B survivors per host. Same result as a single per-host
+     window, without a skewed shuffle (host 0 holds ~30% of the frontier
+     by construction).
+  2. FETCH — ``fetch_batch`` returns (ok, canonical out-links,
+     interleaved spans) per URL: the Spark tier calls it per Arrow batch
+     (mapInPandas, no per-row UDFs — driver input_hint mandate), the
+     driver tier once.
   3. RETRY — failures requeue with attempt+1 while attempt ≤ max_retries
      (ref config.py:54-55 semantics).
   4. DISCOVER — out-links arrive canonical (the fetch batch canonicalizes
      each page's links while it visits the page; no Python stage here),
      are murmur3-hashed, robots-filtered (broadcast join against the tiny
-     rules table), deduplicated: groupBy(url).min(depth) within the wave,
-     Bloom-prefiltered against the seen set (bloom.py — no false
-     negatives), then EXACT anti-join on the Bloom-positive remainder.
+     rules table; ``wg.robots_allows`` on the driver), deduplicated:
+     min(depth) per url within the wave, Bloom-prefiltered against the
+     seen set (bloom.py — no false negatives), then EXACT verification of
+     the Bloom-positive remainder (an anti-join; on the driver a pyarrow
+     scan of the seen files with url_hash pushed down).
   5. COMMIT — docs/seen/schedule/frontier/checkpoint snapshots, checkpoint
      LAST; every snapshot is tagged with the wave, so a killed job resumes
      from the last fully-committed wave (``resume()`` rolls each table back
@@ -38,6 +60,9 @@ in-wave order, same final seen set as the pure-Python oracle simulator
 
 from __future__ import annotations
 
+import math
+import re
+from collections import Counter
 from dataclasses import dataclass
 
 import pandas as pd
@@ -50,6 +75,7 @@ from crawl4ai_llm_spark.catalog import Catalog
 from crawl4ai_llm_spark.frontier import bloom as bloom_mod
 from crawl4ai_llm_spark.frontier import cuckoo as cuckoo_mod
 from crawl4ai_llm_spark.frontier import webgraph as wg
+from crawl4ai_llm_spark.frontier.hashing import spark_hash_str
 from crawl4ai_llm_spark.functions.urls import (
     _canonical_links,
     canonicalize_url,
@@ -71,9 +97,9 @@ from crawl4ai_llm_spark.schemas import SPAN_TYPE
 # where the driver read exceeds even the live-session Spark wall; beyond
 # it the driver scan also starts to own wave latency and driver memory.
 # Env-overridable for bigger/smaller driver hosts.
-import os as _os_env  # noqa: E402
+import os  # noqa: E402
 
-_TEXT_READ_BYTES = _os_env.environ.get("SPARK_GRAFT_DRIVER_TEXT_READ_BYTES", str(256 * 1024 * 1024))
+_TEXT_READ_BYTES = os.environ.get("SPARK_GRAFT_DRIVER_TEXT_READ_BYTES", str(256 * 1024 * 1024))
 if not _TEXT_READ_BYTES.strip().isdecimal():
     # int() would raise without naming the variable, and a negative
     # budget would silently send every wave's text read to Spark
@@ -82,6 +108,20 @@ if not _TEXT_READ_BYTES.strip().isdecimal():
         f"got {_TEXT_READ_BYTES!r}"
     )
 DRIVER_TEXT_READ_BYTE_BUDGET = int(_TEXT_READ_BYTES)
+
+# Rows the driver tier of run_wave may read in one wave: the live rows of
+# the frontier, the seen set and (with content dedup) the stored band
+# table, summed from parquet footers before the wave starts. Above it the
+# wave runs on the Spark tier. Pinned from the measured crossover
+# (tools/bench_crawl_fatwave.py --tiers, local[4], content dedup on,
+# BENCH.md "Crawl wave tiers"): the driver tier won at 253k rows (10.3 s
+# vs 14.9 s) and lost at 496k (23.3 s vs 20.5 s) and 1.2M (32.1 s vs
+# 26.5 s); the log-linear crossing is ~415k. On those fat waves the
+# driver's cost is per scheduled URL (~0.4 ms, one core) and the rows
+# track the wave size; a thin wave over many rows stays cheaper on the
+# driver (6.7M rows, 63 URLs: 1.0 s vs 8.5 s), which this gate gives up
+# for a bound on what the driver reads and holds.
+DRIVER_WAVE_ROW_BUDGET = 400_000
 
 FETCH_RESULT_SCHEMA = T.StructType(
     [
@@ -96,6 +136,76 @@ FETCH_RESULT_SCHEMA = T.StructType(
         T.StructField("spans", T.ArrayType(SPAN_TYPE)),
     ]
 )
+
+
+
+def _struct(*fields) -> T.StructType:
+    return T.StructType([T.StructField(n, t, nullable) for n, t, nullable in fields])
+
+
+_STR, _INT, _LONG = T.StringType(), T.IntegerType(), T.LongType()
+# The row schemas the Spark tier's wave commits write (column order and
+# nullability as Spark derives them): the driver tier writes the same
+# physical types and stamps these into its files' footers.
+FRONTIER_ROW_SCHEMA = _struct(
+    ("url", _STR, True), ("url_hash", _LONG, True), ("host", _STR, True),
+    ("depth", _INT, True), ("attempt", _INT, True), ("score", T.DoubleType(), True),
+)
+SEEN_ROW_SCHEMA = _struct(("url_hash", _LONG, False), ("url", _STR, True), ("wave", _INT, False))
+SCHEDULE_ROW_SCHEMA = _struct(
+    ("url", _STR, True), ("host", _STR, True), ("depth", _INT, True),
+    ("attempt", _INT, True), ("host_rank", _INT, False), ("wave", _INT, False),
+)
+DOCS_ROW_SCHEMA = _struct(
+    ("doc_id", _STR, True), ("spans", T.ArrayType(SPAN_TYPE), True), ("wave", _INT, False)
+)
+BAND_ROW_SCHEMA = _struct(("doc_id", _STR, True), ("band", _INT, False), ("key", _INT, False))
+DUP_ROW_SCHEMA = _struct(
+    ("wave", _INT, True), ("new_id", _STR, True), ("orig_id", _STR, True),
+    ("jaccard", T.DoubleType(), True),
+)
+FRONTIER_COLS = FRONTIER_ROW_SCHEMA.names
+
+# host_of's pattern: the authority up to a port or path
+_HOST_RE = re.compile(r"^[a-z]+://([^/:]+)")
+
+
+def fetch_batch(spec, urls, attempts, parse_work: int = 0, latency_s: float = 0.0,
+                concurrency: int = 64):
+    """Synthetic fetch of one batch of scheduled URLs (C9) — the body of
+    both tiers' fetch: the Spark tier's ``mapInPandas`` calls it per Arrow
+    batch, the driver tier once for the whole wave. Returns per URL
+    ``ok``, the page's out-links already in canonical form
+    (``_canonical_links``: the batch visits every page in Python anyway,
+    so discovery needs no canonicalization stage) and its spans. A real
+    deployment swaps the body for async HTTP with the same interface."""
+    import hashlib
+    import time
+
+    if latency_s:
+        # async-fetcher wall time for this batch: requests pipeline
+        # `concurrency`-deep per task
+        time.sleep(len(urls) * latency_s / concurrency)
+    oks, links, spans = [], [], []
+    for url, attempt in zip(urls, attempts):
+        ok = wg.fetch_ok(spec, url, int(attempt))
+        oks.append(ok)
+        links.append(_canonical_links(wg.out_links(spec, url)) if ok else [])
+        spans.append(wg.page_spans(spec, url) if ok else [])
+        if ok and parse_work:
+            d = url.encode()
+            for _ in range(parse_work):
+                d = hashlib.md5(d).digest()
+    return oks, links, spans
+
+
+def _doc_text(spans) -> str:
+    """Document text = the text spans' texts joined with ' ' in span
+    order, null texts skipped — ``FrontierEngine._spans_text`` (the
+    column the content-dedup index shingles) for one row."""
+    return " ".join(
+        s["text"] for s in (spans or []) if s["kind"] == "text" and s["text"] is not None
+    )
 
 
 @dataclass
@@ -198,6 +308,18 @@ class CrawlConfig:
                 "content_dedup_policy must be 'flag' or 'skip', got "
                 f"{self.content_dedup_policy!r}"
             )
+        # a misspelled seen_filter would silently run the exact-only
+        # anti-join, a misspelled bloom_transport the broadcast tier
+        if self.seen_filter not in ("bloom", "cuckoo", "exact"):
+            raise ValueError(
+                "seen_filter must be 'bloom', 'cuckoo' or 'exact', got "
+                f"{self.seen_filter!r}"
+            )
+        if self.bloom_transport not in ("broadcast", "partitioned", "auto"):
+            raise ValueError(
+                "bloom_transport must be 'broadcast', 'partitioned' or 'auto', got "
+                f"{self.bloom_transport!r}"
+            )
         if not self.use_bloom and self.seen_filter == "bloom":
             self.seen_filter = "exact"
 
@@ -239,6 +361,11 @@ class FrontierEngine:
         # per-wave phase walls (run_wave's mark() points) — benches read
         # this to attribute e.g. the content-dedup phase directly
         self.wave_marks: dict[int, dict[str, float]] = {}
+        # run_wave's tier per wave: "driver" or "spark:<reason>" (the same
+        # shape as ProductStore.tiers)
+        self.tiers: Counter = Counter()
+        self._rules_by_host: dict[str, dict] | None = None
+        self._file_rows: dict[str, int] = {}  # parquet footer row counts
 
     # ------------------------------------------------------------------ setup
 
@@ -273,9 +400,8 @@ class FrontierEngine:
         match driver tier's orig-side lookup: a filter-pushdown scan of
         the docs table's parquet files costs ~0.07 s where the
         equivalent Spark filter-collect job measured 1.1 s (per-action
-        scheduling, not bytes). Text rule == _spans_text exactly:
-        text-kind span texts joined with ' ' in span order, nulls
-        skipped (array_join semantics). Multiple rows per doc_id
+        scheduling, not bytes). Text rule: ``_doc_text``, which equals
+        _spans_text. Multiple rows per doc_id
         (recrawl before rebuild_content_index): the MAX-WAVE row wins —
         the repo's "latest fetch" rule (compaction rewrites files and
         mixes waves, so append order is not a reliable proxy; ADVICE
@@ -318,14 +444,7 @@ class FrontierEngine:
         ):
             wv = -1 if wv is None else wv
             if did not in best or wv >= best[did][0]:
-                best[did] = (
-                    wv,
-                    " ".join(
-                        s["text"]
-                        for s in (spans or [])
-                        if s["kind"] == "text" and s["text"] is not None
-                    ),
-                )
+                best[did] = (wv, _doc_text(spans))
         return {did: text for did, (_, text) in best.items()}
 
     def robots_df(self) -> DataFrame:
@@ -421,36 +540,19 @@ class FrontierEngine:
     # ------------------------------------------------------------------ wave
 
     def _fetch(self, scheduled: DataFrame) -> DataFrame:
-        """Arrow-batched synthetic fetch (C9). Real deployment swaps the body
-        for async HTTP with the same batch interface: per scheduled URL it
-        returns ``ok``, the page's spans and its out-links already in
-        canonical form (``_canonical_links`` — the batch visits every page
-        in Python anyway, so discovery needs no canonicalization stage of
-        its own)."""
+        """The Spark tier's fetch: scheduled URLs cross to Python once, in
+        Arrow batches (``mapInPandas``), and each batch runs
+        ``fetch_batch`` — the function the driver tier calls in-process."""
         spec = self.config.graph
         parse_work = self.config.parse_work
         latency_s = self.config.fetch_latency_ms / 1000.0
         conc = self.config.async_concurrency
 
         def run(batches):
-            import hashlib
-            import time as _t
-
             for pdf in batches:
-                if latency_s:
-                    # async-fetcher wall time for this batch: requests
-                    # pipeline `conc`-deep per task
-                    _t.sleep(len(pdf) * latency_s / conc)
-                oks, links, spans = [], [], []
-                for url, attempt in zip(pdf["url"], pdf["attempt"]):
-                    ok = wg.fetch_ok(spec, url, int(attempt))
-                    oks.append(ok)
-                    links.append(_canonical_links(wg.out_links(spec, url)) if ok else [])
-                    spans.append(wg.page_spans(spec, url) if ok else [])
-                    if ok and parse_work:
-                        d = url.encode()
-                        for _ in range(parse_work):
-                            d = hashlib.md5(d).digest()
+                oks, links, spans = fetch_batch(
+                    spec, pdf["url"], pdf["attempt"], parse_work, latency_s, conc
+                )
                 yield pd.DataFrame(
                     {
                         "url": pdf["url"],
@@ -540,11 +642,352 @@ class FrontierEngine:
                     np.frombuffer(cur, dtype=np.uint8), np.frombuffer(bm, dtype=np.uint8)
                 ).tobytes()
 
+    # ------------------------------------------------------------------ tiers
+
     def run_wave(self, wave: int) -> dict[str, int]:
-        import os
+        """Run one crawl wave on the tier chosen for it, before any work,
+        from config, manifests and parquet footers (``_wave_tier``): the
+        driver tier when everything the wave reads fits
+        DRIVER_WAVE_ROW_BUDGET, else the Spark tier. A driver wave that
+        trips a mid-wave dedup gate is dropped before any commit and
+        reruns on the Spark tier. ``tiers`` counts each wave's tier."""
+        cfg = self.config
+        transport = self._resolve_transport() if cfg.seen_filter == "bloom" else None
+        if transport is not None:
+            self.transport_log.append(transport)
+        tier = self._wave_tier(transport)
+        stats = self._run_wave_driver(wave) if tier == "driver" else None
+        if stats is None:
+            if tier == "driver":
+                tier = "spark:dedup"
+            stats = self._run_wave_spark(wave, transport)
+        self.tiers[tier] += 1
+        if "fetched" in stats and os.environ.get("CRAWL_WAVE_TIMING"):
+            import json
+
+            print(
+                json.dumps(
+                    {
+                        "wave": wave,
+                        "marks": self.wave_marks[wave],
+                        "scheduled": stats["scheduled"],
+                        "fetched": stats["fetched"],
+                        "transport": transport,
+                        "tier": tier,
+                    }
+                ),
+                flush=True,
+            )
+        return stats
+
+    def _live_rows(self, table) -> int:
+        """Rows of a table's live files, from their parquet footers
+        (files never change once written, so each is read once)."""
+        import pyarrow.parquet as pq
+
+        snap = table.current_snapshot()
+        total = 0
+        for f in snap.files if snap else []:
+            if f not in self._file_rows:
+                self._file_rows[f] = pq.read_metadata(f).num_rows
+            total += self._file_rows[f]
+        return total
+
+    def _wave_tier(self, transport: str | None) -> str:
+        """"driver", or "spark:<reason>" for a wave the driver tier
+        declines: the filter only the Spark tier runs (cuckoo,
+        partitioned Bloom), per-page fetch cost that executor parallelism
+        exists for, more rows than DRIVER_WAVE_ROW_BUDGET, or a dedup
+        gate the wave's match would trip on the Spark tier's driver
+        path. No Spark job."""
+        from crawl4ai_llm_spark.operators import dedup
+        from crawl4ai_llm_spark.operators import dedup_store as ds
+
+        cfg = self.config
+        if cfg.seen_filter == "cuckoo" or transport == "partitioned":
+            return "spark:filter"
+        if cfg.parse_work or cfg.fetch_latency_ms:
+            return "spark:fetch"
+        pending = self._live_rows(self.frontier)
+        rows = pending + self._live_rows(self.seen)
+        bands = self.dedup_index().minhash_bands if cfg.content_dedup else None
+        if bands is not None:
+            rows += self._live_rows(bands)
+        if rows > DRIVER_WAVE_ROW_BUDGET:
+            return "spark:rows"
+        if bands is not None and not bands.is_empty() and not self.docs.is_empty():
+            # the wave's docs (at most the pending rows) against the
+            # match's broadcast gate; the stored docs' bytes against the
+            # orig-text read's gate
+            if pending * dedup.N_BANDS > ds.BROADCAST_BAND_ROW_BUDGET:
+                return "spark:dedup"
+            try:
+                size = sum(os.path.getsize(f) for f in self.docs.current_snapshot().files)
+            except OSError:
+                return "spark:dedup"
+            if size > DRIVER_TEXT_READ_BYTE_BUDGET:
+                return "spark:dedup"
+        return "driver"
+
+    def _robots_rules(self) -> dict[str, dict]:
+        """host → robots rules: the rows ``robots_df`` holds."""
+        if self._rules_by_host is None:
+            self._rules_by_host = {r["host"]: r for r in wg.robots_rules(self.config.graph)}
+        return self._rules_by_host
+
+    def _frontier_rows(self, found: dict[str, int]) -> list[tuple]:
+        """Discovered canonical URL → depth, to frontier rows (url,
+        url_hash, host, depth, attempt, score) of the robots-allowed ones:
+        ``_with_frontier_cols`` + ``_robots_allowed`` in Python (murmur3
+        ``url_hash``, ``host_of``'s host, ``score_expr``'s arithmetic)."""
+        rules = self._robots_rules()
+        rows = []
+        for url, depth in found.items():
+            m = _HOST_RE.match(url)
+            host = m.group(1) if m else ""
+            if not wg.robots_allows(rules, url, host=host):
+                continue
+            h = spark_hash_str(url)
+            rows.append((url, h, host, depth, 0, ((h & 0x7FFFFFFF) % 1000) / 1000.0))
+        return rows
+
+    def _run_wave_driver(self, wave: int) -> dict[str, int] | None:
+        """The driver tier of ``run_wave``: the whole wave in this process
+        — pyarrow reads, numpy and Python work, one pyarrow file per table
+        committed through ``Table._commit`` — and no Spark job. The same
+        per-batch functions as the Spark tier (``fetch_batch``,
+        ``bloom.might_contain``, ``dedup.text_signatures``,
+        ``dedup_store.match_pairs``); only the relational glue is
+        written twice, and the Spark tier is its reference. Returns None,
+        having committed nothing, when the match trips
+        DRIVER_MATCH_DOC_BUDGET."""
+        import time
+
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as pads
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        cfg = self.config
+        marks: list[tuple[str, float]] = []
+        t0 = [time.time()]
+
+        def mark(name: str) -> None:
+            now = time.time()
+            marks.append((name, round(now - t0[0], 2)))
+            t0[0] = now
+
+        snap = self.frontier.current_snapshot()
+        if snap is None or not snap.files:
+            return {"scheduled": 0}
+        fschema = to_arrow_schema(FRONTIER_ROW_SCHEMA)
+        pending = pads.dataset(snap.files, schema=fschema).to_table()
+
+        # --- politeness budget + exact per-host top-B: one sort, the
+        # plain per-host row number (no salts: there are no tasks to skew)
+        ranked = pending.take(
+            pc.sort_indices(
+                pending,
+                sort_keys=[
+                    ("host", "ascending"), ("depth", "ascending"), ("score", "descending"),
+                    ("url_hash", "ascending"), ("url", "ascending"),
+                ],
+            )
+        )
+        hosts = pc.fill_null(ranked.column("host"), "").combine_chunks().dictionary_encode()
+        codes = hosts.indices.to_numpy()
+        n = len(codes)
+        run_start = np.r_[True, codes[1:] != codes[:-1]] if n else np.zeros(0, bool)
+        starts = np.flatnonzero(run_start)
+        rank = np.arange(n) - starts[np.cumsum(run_start) - 1] + 1
+        rules = self._robots_rules()
+        budgets = []
+        for host in hosts.dictionary.to_pylist():
+            delay = rules.get(host, {}).get("crawl_delay")
+            # floor(a / b) as Spark evaluates it: float division first
+            # (1.0 // 0.1 is 9.0, floor(1.0 / 0.1) is 10)
+            budgets.append(
+                max(1, math.floor(cfg.wave_seconds / (cfg.delay if delay is None else delay)))
+            )
+        take = rank <= np.asarray(budgets, dtype=np.int64)[codes]
+        sched = ranked.filter(pa.array(take))
+        leftovers = ranked.filter(pa.array(~take))
+        host_rank = rank[take].astype(np.int32)
+
+        # --- fetch ---
+        urls = sched.column("url").to_pylist()
+        attempts = sched.column("attempt").to_numpy()
+        depths = sched.column("depth").to_numpy()
+        oks, links, spans = fetch_batch(cfg.graph, urls, attempts)
+        ok = np.asarray(oks, dtype=bool)
+        n_scheduled, n_fetched = len(urls), int(ok.sum())
+        mark("fetch+lineage")
+        if n_scheduled == 0:
+            return {"scheduled": 0}
+
+        # --- retries ---
+        retry = ~ok & (attempts + 1 <= cfg.max_retries)
+        requeue = sched.select(FRONTIER_COLS).filter(pa.array(retry))
+        requeue = requeue.set_column(
+            FRONTIER_COLS.index("attempt"), "attempt",
+            pa.array(attempts[retry] + 1, pa.int32()),
+        )
+
+        # --- discovery: min depth per canonical link, then frontier
+        # columns and the robots filter ---
+        found: dict[str, int] = {}
+        for i in np.flatnonzero(ok):
+            d = int(depths[i]) + 1
+            if d > cfg.max_depth:
+                continue
+            for url in links[i]:
+                prev = found.get(url)
+                if prev is None or d < prev:
+                    found[url] = d
+        disc = self._frontier_rows(found)
+        hashes = np.fromiter((r[1] for r in disc), dtype=np.int64, count=len(disc))
+        is_new = np.ones(len(disc), dtype=bool)
+        seen_snap = self.seen.current_snapshot()
+        if seen_snap is not None and seen_snap.files:
+            if cfg.seen_filter == "bloom":  # else "exact": cuckoo runs on Spark
+                if self._blooms is None:  # fresh engine / post-resume: full build
+                    self._build_seen_blooms()
+                maybe = bloom_mod.might_contain(hashes, self._blooms, cfg.bloom_buckets)
+            else:
+                maybe = np.ones(len(disc), dtype=bool)
+            if maybe.any():
+                # exact verification of the positives: url_hash pushed
+                # into the seen snapshot's scan, url compared
+                hits = pads.dataset(seen_snap.files).to_table(
+                    columns=["url"],
+                    filter=pads.field("url_hash").isin(pa.array(hashes[maybe])),
+                )
+                seen_urls = set(hits.column(0).to_pylist())
+                for i in np.flatnonzero(maybe):
+                    if disc[i][0] in seen_urls:
+                        is_new[i] = False
+            mark("probed_count")
+        new_rows = [r for r, keep in zip(disc, is_new) if keep]
+        new_hashes = hashes[is_new]
+        new_links = pa.Table.from_pylist(
+            [dict(zip(FRONTIER_COLS, r)) for r in new_rows], schema=fschema
+        )
+        mark("new_links_count")
+
+        # --- content near-dup match (backward-only, as on the Spark tier)
+        ok_idx = np.flatnonzero(ok)
+        doc_ids = [urls[i] for i in ok_idx]
+        pairs: list = []
+        if cfg.content_dedup:
+            from crawl4ai_llm_spark.operators import dedup
+
+            idx = self.dedup_index()
+            texts = [_doc_text(spans[i]) for i in ok_idx]
+            sigs = dedup.text_signatures(texts)
+            signed = [j for j, sig in enumerate(sigs) if sig is not None]
+            keys = (
+                dedup.band_keys(np.stack([sigs[j] for j in signed]))
+                if signed
+                else np.zeros((0, dedup.N_BANDS), dtype=np.int32)
+            )
+            signed_ids = [doc_ids[j] for j in signed]
+            if signed and not self.docs.is_empty() and not idx.minhash_bands.is_empty():
+                text_of = dict(zip(doc_ids, texts))
+
+                def pair_texts(need_new, need_orig):
+                    orig = self._read_doc_texts(need_orig)
+                    return None if orig is None else ({d: text_of[d] for d in need_new}, orig)
+
+                pairs = idx.match_band_keys(signed_ids, keys, pair_texts, cfg.content_dedup_tau)
+                if pairs is None:
+                    return None  # a driver-size gate tripped: Spark tier
+            mark("content_dedup_match")
+        n_dups = len(pairs)
+        skip = set()
+        if n_dups and cfg.content_dedup_policy == "skip":
+            skip = {p["new_id"] for p in pairs}
+
+        # --- commits: one file per table, checkpoint LAST ---
+        tag = {"wave": wave}
+
+        def arrow(schema, columns):
+            return pa.Table.from_pydict(columns, schema=to_arrow_schema(schema))
+
+        kept = [j for j, d in enumerate(doc_ids) if d not in skip]
+        self.docs.append_arrow(
+            arrow(DOCS_ROW_SCHEMA, {
+                "doc_id": [doc_ids[j] for j in kept],
+                "spans": [spans[ok_idx[j]] for j in kept],
+                "wave": [wave] * len(kept),
+            }),
+            counters=tag, spark_schema=DOCS_ROW_SCHEMA,
+        )
+        self.seen.append_arrow(
+            arrow(SEEN_ROW_SCHEMA, {
+                "url_hash": new_links.column("url_hash"),
+                "url": new_links.column("url"),
+                "wave": [wave] * new_links.num_rows,
+            }),
+            counters=tag, spark_schema=SEEN_ROW_SCHEMA,
+        )
+        self.schedule.append_arrow(
+            arrow(SCHEDULE_ROW_SCHEMA, {
+                "url": sched.column("url"), "host": sched.column("host"),
+                "depth": sched.column("depth"), "attempt": sched.column("attempt"),
+                "host_rank": host_rank, "wave": [wave] * n_scheduled,
+            }),
+            counters=tag, spark_schema=SCHEDULE_ROW_SCHEMA,
+        )
+        self.frontier.overwrite_arrow(
+            pa.concat_tables([leftovers.select(FRONTIER_COLS), requeue, new_links]),
+            counters=tag, spark_schema=FRONTIER_ROW_SCHEMA,
+        )
+        if cfg.content_dedup:
+            if n_dups:
+                self.dup_pairs.append_arrow(
+                    arrow(DUP_ROW_SCHEMA, {
+                        "wave": [wave] * n_dups,
+                        "new_id": [p["new_id"] for p in pairs],
+                        "orig_id": [p["orig_id"] for p in pairs],
+                        "jaccard": [p["jaccard"] for p in pairs],
+                    }),
+                    counters=tag, spark_schema=DUP_ROW_SCHEMA,
+                )
+            rows = [j for j, d in enumerate(signed_ids) if d not in skip]
+            idx.minhash_bands.append_arrow(
+                arrow(BAND_ROW_SCHEMA, {
+                    "doc_id": [signed_ids[j] for j in rows for _ in range(dedup.N_BANDS)],
+                    "band": np.tile(np.arange(dedup.N_BANDS, dtype=np.int32), len(rows)),
+                    "key": keys[rows].ravel(),
+                }),
+                counters=idx.ingest_counters(n_fetched - len(skip), tag),
+                spark_schema=BAND_ROW_SCHEMA,
+            )
+        if cfg.seen_filter == "bloom" and self._blooms is not None:
+            self._bloom_or(bloom_mod.blooms_from_hashes(new_hashes, cfg.bloom_buckets))
+        mark("table_commits+filter_delta")
+        self.checkpoints.append_pylist(
+            [self._cp_row(wave, {
+                "partition_id": 0, "urls_scheduled": n_scheduled,
+                "urls_fetched": n_fetched, "urls_failed": n_scheduled - n_fetched,
+            })],
+            counters=tag,
+        )
+        mark("checkpoint")
+        self.wave_marks[wave] = dict(marks)
+        stats = {"scheduled": n_scheduled, "fetched": n_fetched}
+        if cfg.content_dedup:
+            stats["content_dups"] = n_dups
+        return stats
+
+    # ------------------------------------------------------------------ spark tier
+
+    def _run_wave_spark(self, wave: int, transport: str | None) -> dict[str, int]:
+        """The Spark tier of ``run_wave`` — the reference for the driver
+        tier, and the tier for waves too large for the driver."""
         import time as _time
 
-        verbose = bool(os.environ.get("CRAWL_WAVE_TIMING"))
         marks: list[tuple[str, float]] = []
         _t = _time.time()
 
@@ -638,9 +1081,6 @@ class FrontierEngine:
         probed = None
         probe_cache = None  # the cached df to unpersist after commit
         new_filters = None  # partitioned transport: next filter table rows
-        transport = self._resolve_transport() if cfg.seen_filter == "bloom" else None
-        if transport is not None:
-            self.transport_log.append(transport)
         if cfg.seen_filter in ("bloom", "cuckoo") and seen_df is not None:
             if cfg.seen_filter == "bloom" and transport == "partitioned":
                 self._blooms = None  # auto switch mid-run: free the driver copy
@@ -824,19 +1264,12 @@ class FrontierEngine:
                 if driver_pairs:
                     # pairs are already driver-side rows: one pyarrow
                     # write, NO Spark job in this pool slot for the audit
-                    import pyarrow as pa
+                    from pyspark.sql.pandas.types import to_arrow_schema
 
                     self.dup_pairs.append_pylist(
                         [{"wave": wave, **p} for p in driver_pairs],
                         counters=wave_tag,
-                        schema=pa.schema(
-                            [
-                                ("wave", pa.int32()),
-                                ("new_id", pa.string()),
-                                ("orig_id", pa.string()),
-                                ("jaccard", pa.float64()),
-                            ]
-                        ),
+                        schema=to_arrow_schema(DUP_ROW_SCHEMA),
                     )
                 elif pairs is not None:
                     self.dup_pairs.append(
@@ -921,21 +1354,6 @@ class FrontierEngine:
         )
         mark("checkpoint")
         self.wave_marks[wave] = dict(marks)
-        if verbose:
-            import json
-
-            print(
-                json.dumps(
-                    {
-                        "wave": wave,
-                        "marks": dict(marks),
-                        "scheduled": n_scheduled,
-                        "fetched": n_fetched,
-                        "transport": transport,
-                    }
-                ),
-                flush=True,
-            )
 
         stats = {"scheduled": n_scheduled, "fetched": n_fetched}
         if cfg.content_dedup:

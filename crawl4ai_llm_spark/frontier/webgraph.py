@@ -222,11 +222,14 @@ def robots_rules(spec: GraphSpec) -> list[dict]:
     return rules
 
 
-def robots_allows(rules_by_host: dict[str, dict], canon_url: str) -> bool:
+def robots_allows(rules_by_host: dict[str, dict], canon_url: str, host: str | None = None) -> bool:
     """Longest-match-wins (RFC 9309 §2.2.2): the longest matching prefix
     among deny+allow decides; a tie goes to Allow. Pure-Python mirror of
-    engine._robots_allowed's column expression."""
-    host = canon_url.split("//")[1].split("/")[0]
+    engine._robots_allowed's column expression. ``host``: the rules key;
+    by default the URL's authority, while the engine joins on ``host_of``
+    (the port stripped) and passes that."""
+    if host is None:
+        host = canon_url.split("//")[1].split("/")[0]
     path = "/" + canon_url.split("//")[1].split("/", 1)[1] if "/" in canon_url.split("//")[1] else "/"
     r = rules_by_host.get(host)
     if not r:

@@ -109,25 +109,23 @@ MINHASH_B = [_rng.randrange(0, 1 << 64) for _ in range(N_HASHES)]
 # --------------------------------------------------------------------------
 
 
-def word_ngrams(toks, n: int = 3):
-    """Distinct word n-grams as strings (shingles)."""
-    idx = F.sequence(F.lit(0), F.size(toks) - n)
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)])
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+def word_grams(text, n: int = 3) -> set:
+    """Distinct word n-grams of one text: tokens are its non-empty
+    single-space splits, and a text with fewer than ``n`` tokens has none.
+    The one Python gram rule: the gram UDFs, the signature kernel and the
+    driver-side Jaccard verification all call it."""
+    toks = [w for w in (text or "").split(" ") if w]
+    return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
 
 
 _grams3_udf = None
 
 
 def word_ngrams_fast(col, n: int = 3):
-    """Distinct word n-grams via a vectorized pandas UDF. The pure-expression
-    version (word_ngrams) stays the semantic spec, but Catalyst evaluates
-    higher-order lambdas interpreted per element — measured ~10× slower than
-    one Arrow batch of Python string ops for this shape."""
+    """Distinct word n-grams (``word_grams``, sorted) via a vectorized
+    pandas UDF: one Arrow batch of Python string ops, where a
+    higher-order-function expression would be evaluated interpreted per
+    element (measured ~10× slower for this shape)."""
     global _grams3_udf
     if _grams3_udf is None:
         import pandas as pd
@@ -136,15 +134,7 @@ def word_ngrams_fast(col, n: int = 3):
         def build(texts):  # pd.Series -> pd.Series (annotations would be
             # stringified by `from __future__ import annotations` and break
             # pandas_udf signature inspection)
-            out = []
-            for t in texts:
-                toks = [w for w in (t or "").split(" ") if w]
-                out.append(
-                    sorted({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)})
-                    if len(toks) >= n
-                    else []
-                )
-            return pd.Series(out)
+            return pd.Series([sorted(word_grams(t, n)) for t in texts])
 
         _grams3_udf = pandas_udf(build, "array<string>")
     return _grams3_udf(col)
@@ -444,6 +434,40 @@ def minhash_signatures(shingles: DataFrame) -> DataFrame:
 _text_sig_udf = None
 
 
+def text_signatures(texts) -> list:
+    """MinHash signature of each text: ``word_grams`` 3-grams hashed with
+    ``pd.util.hash_array`` (fixed hash_key, so deterministic across
+    workers and runs), then the 128 multiply-shift mins. An int64 array of
+    128 per text, or None for a text without grams. The kernel of
+    ``with_text_sig``'s UDF; the crawl's driver tier calls it directly."""
+    import numpy as np
+    import pandas as pd
+
+    if len(texts) == 0:
+        return []
+    gram_lists = [list(word_grams(t)) for t in texts]
+    lens = np.array([len(g) for g in gram_lists], dtype=np.int64)
+    if lens.sum() == 0:
+        return [None] * len(gram_lists)
+    flat = np.concatenate([np.asarray(g, dtype=object) for g in gram_lists])
+    gh = pd.util.hash_array(flat, hash_key="crawl4ai_spark42", categorize=False)
+    starts = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    # uint64, NOT int64: this platform's numpy runs signed-64 multiply
+    # ~300x slower than unsigned; multiply-shift WANTS the wrap-around.
+    # reduceat segments with len 0 would read the NEXT segment's min —
+    # clamp and null them out after
+    mins = _blocked_minhash(
+        np.array(MINHASH_A, dtype=np.uint64)[:, None],
+        np.array(MINHASH_B, dtype=np.uint64)[:, None],
+        np.uint64(SIG_SHIFT),
+        gh,
+        np.clip(starts, 0, len(flat) - 1),
+    )
+    sigs = mins.T.astype(np.int64)
+    return [None if n == 0 else s for n, s in zip(lens, sigs)]
+
+
 def with_text_sig(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, text) → (doc_id, text, sig): tokenize + shingle + hash +
     multiply-shift minhash in ONE Arrow pass — the gram strings never
@@ -455,49 +479,20 @@ def with_text_sig(docs: DataFrame, text_col: str = "text") -> DataFrame:
     BIT-IDENTICAL to the chain (same tokens, same distinct grams, same
     hash_key, same permutations) — same SIG_SCHEME. Docs with <3 tokens
     get a NULL sig (same dropped domain as with_minhash_sig's size>0
-    filter); callers filter ``sig IS NOT NULL``. Verification re-derives
-    grams per matched doc only (candidates ∝ true dups), via
-    word_ngrams_fast."""
+    filter); callers filter ``sig IS NOT NULL``. The kernel is
+    ``text_signatures``. Verification re-derives grams per matched doc
+    only (candidates ∝ true dups), via word_ngrams_fast."""
     global _text_sig_udf
     if _text_sig_udf is None:
-        import numpy as np
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
 
-        A = np.array(MINHASH_A, dtype=np.uint64)[:, None]
-        B = np.array(MINHASH_B, dtype=np.uint64)[:, None]
-        SHIFT = np.uint64(SIG_SHIFT)
         counter = _SIG_ROWS_COUNTER  # closure-captured (ships to workers)
 
         def tsig(ts):  # pd.Series[str] -> pd.Series[list[int] | None]
             if counter is not None:
                 counter.add(len(ts))
-            if len(ts) == 0:
-                return pd.Series([], dtype=object)
-            gram_lists = []
-            for t in ts:
-                toks = [w for w in (t or "").split(" ") if w]
-                gram_lists.append(
-                    list({" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)})
-                    if len(toks) >= 3
-                    else []
-                )
-            lens = np.array([len(g) for g in gram_lists], dtype=np.int64)
-            if lens.sum() == 0:
-                return pd.Series([None] * len(ts), dtype=object)
-            flat = np.concatenate([np.asarray(g, dtype=object) for g in gram_lists])
-            gh = pd.util.hash_array(flat, hash_key="crawl4ai_spark42", categorize=False)
-            starts = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            # reduceat segments with len 0 would read the NEXT segment's
-            # min — clamp and null them out after
-            mins = _blocked_minhash(
-                A, B, SHIFT, gh, np.clip(starts, 0, len(flat) - 1)
-            )
-            sigs = mins.T.astype(np.int64)
-            return pd.Series(
-                [None if n == 0 else s for n, s in zip(lens, sigs)], dtype=object
-            )
+            return pd.Series(text_signatures(ts), dtype=object)
 
         # asNondeterministic is an OPTIMIZER FENCE, not a semantics claim:
         # without it Catalyst inlines the `sig IS NOT NULL` filter through
@@ -524,6 +519,45 @@ def band_key_cols(sig_col: str = "sig") -> list:
         )
         for b in range(N_BANDS)
     ]
+
+
+def _murmur3_long(values, seed):
+    """Spark's ``Murmur3_x86_32.hashLong`` over uint32 arrays: the low
+    then the high 32 bits of each int64 mixed into ``seed``, finalized
+    with length 8."""
+    import numpy as np
+
+    c1, c2 = np.uint32(0xCC9E2D51), np.uint32(0x1B873593)
+
+    def rotl(x, r):
+        return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+    u = values.astype(np.int64).view(np.uint64)
+    h = seed
+    for half in (u & np.uint64(0xFFFFFFFF), u >> np.uint64(32)):
+        k = rotl(half.astype(np.uint32) * c1, 15) * c2
+        h = rotl(h ^ k, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+    h = h ^ np.uint32(8)
+    h ^= h >> np.uint32(16)
+    h *= np.uint32(0x85EBCA6B)
+    h ^= h >> np.uint32(13)
+    h *= np.uint32(0xC2B2AE35)
+    h ^= h >> np.uint32(16)
+    return h
+
+
+def band_keys(sigs):
+    """(n, 128) int64 signatures → (n, N_BANDS) int32 band keys,
+    bit-identical to ``band_key_cols``: ``F.hash`` of a band's 4 longs is
+    a murmur3 ``hashLong`` chain seeded 42, each value's hash seeding the
+    next."""
+    import numpy as np
+
+    sigs = np.asarray(sigs, dtype=np.int64).reshape(-1, N_BANDS, ROWS_PER_BAND)
+    h = np.full(sigs.shape[:2], 42, dtype=np.uint32)
+    for r in range(ROWS_PER_BAND):
+        h = _murmur3_long(sigs[:, :, r], h)
+    return h.view(np.int32)
 
 
 def band_rows(sig: DataFrame) -> DataFrame:

@@ -121,6 +121,73 @@ def _band_member_filter(stored_bd: DataFrame, bc) -> DataFrame:
     )
 
 
+def match_pairs(new_ids, ck_all, matched_ck, matched_ids, texts, tau: float) -> list | None:
+    """Candidate pairing and exact Jaccard verification on the driver —
+    shared by ``DedupIndex.match_documents_driver`` and the crawl's driver
+    tier. ``new_ids``: the batch's doc ids, one per row of ``ck_all``, its
+    (n, N_BANDS) packed band keys ``(key << 6) + band``; ``matched_ck`` /
+    ``matched_ids``: the stored band rows whose packed key is among them.
+    ``texts(need_new, need_orig)`` returns the ``({id: text}, {id: text})``
+    of the candidate docs. Returns the (new_id, orig_id, jaccard) rows at
+    Jaccard ≥ tau, or None when the candidates' texts exceed
+    DRIVER_MATCH_DOC_BUDGET or ``texts`` declines."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+    import pandas as pd
+
+    from crawl4ai_llm_spark.operators.dedup import N_BANDS, word_grams
+
+    # matched stored rows → batch docs sharing the band key, via
+    # searchsorted over the batch's sorted packed keys
+    flat_ck = np.asarray(ck_all, dtype=np.int64).ravel()
+    order = np.argsort(flat_ck, kind="stable")
+    sck = flat_ck[order]
+    mck = np.asarray(matched_ck, dtype=np.int64)
+    lo = np.searchsorted(sck, mck, "left")
+    hi = np.searchsorted(sck, mck, "right")
+    reps = hi - lo
+    if reps.sum() == 0:
+        return []
+    slots = np.concatenate([np.arange(l, h) for l, h in zip(lo, hi) if h > l])
+    pair_new = np.asarray(new_ids)[order[slots] // N_BANDS]
+    pair_orig = np.repeat(np.asarray(matched_ids), reps)
+    cand = pd.DataFrame({"new_id": pair_new, "orig_id": pair_orig}).drop_duplicates()
+    need_new = sorted(set(cand["new_id"]))
+    need_orig = sorted(set(cand["orig_id"]))
+    if len(need_new) + len(need_orig) > DRIVER_MATCH_DOC_BUDGET:
+        return None  # text pull too fat for the driver: go distributed
+    got = texts(need_new, need_orig)
+    if got is None:
+        return None
+    gn = {d: word_grams(t) for d, t in got[0].items()}
+    go = {d: word_grams(t) for d, t in got[1].items()}
+    out = []
+    for new_id, orig_id in zip(cand["new_id"], cand["orig_id"]):
+        a, b = gn.get(new_id), go.get(orig_id)
+        if a is None or b is None:
+            continue
+        inter = len(a & b)
+        union = len(a) + len(b) - inter
+        if union == 0 or inter / union < tau:
+            continue
+        # F.round parity: BigDecimal-style HALF_UP on the shortest
+        # decimal representation of the double
+        j = float(
+            Decimal(repr(inter / union)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
+        )
+        out.append(
+            {
+                # preserve the id column's native type (urls are
+                # strings, the store tier uses longs)
+                "new_id": new_id.item() if hasattr(new_id, "item") else new_id,
+                "orig_id": orig_id.item() if hasattr(orig_id, "item") else orig_id,
+                "jaccard": j,
+            }
+        )
+    return out
+
+
 def _widen(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Gate-repartition a narrow scan so the Arrow UDF chain parallelizes
     (same policy as dedup.doc_shingles: skip the shuffle when the source
@@ -188,18 +255,21 @@ class DedupIndex:
             bd = dedup.band_rows(
                 dedup.with_text_sig(_widen(docs, self.spark)).select("doc_id", "sig")
             )
+        n = docs.count() if n_docs is None else n_docs
+        self.minhash_bands.append(bd, counters=self.ingest_counters(n, counters))
+        return n
+
+    def ingest_counters(self, n_docs: int, counters: dict[str, int] | None = None) -> dict:
+        """Counters of a ``minhash_bands`` commit that indexes ``n_docs``
+        more documents: the caller's tags, the advanced ``n_docs`` and the
+        signature scheme (checked against the stored one first)."""
         snap = self.minhash_bands.current_snapshot()
         # a truncated (rolled-back-to-empty) table has a snapshot but no
         # files and no scheme counter — it is a fresh table, not a mismatch
         if snap is not None and snap.files:
             _require_scheme(self.minhash_bands, "sig_scheme", SIG_SCHEME, "minhash_bands")
         prev = int(snap.counters.get("n_docs", 0)) if snap else 0
-        n = docs.count() if n_docs is None else n_docs
-        self.minhash_bands.append(
-            bd,
-            counters={**(counters or {}), "n_docs": prev + n, "sig_scheme": SIG_SCHEME},
-        )
-        return n
+        return {**(counters or {}), "n_docs": prev + n_docs, "sig_scheme": SIG_SCHEME}
 
     def ingest_embeddings(
         self, vecs: DataFrame, counters: dict[str, int] | None = None
@@ -495,9 +565,10 @@ class DedupIndex:
                  the equivalent Spark filter-collect job measured 1.1 s),
                  else a pushdown-pruned Spark scan of ``stored_docs``.
 
-        Candidate pairing and Jaccard verification run in numpy/Python on
-        the driver over ∝-true-dup-sized data; the gram rule is
-        word_ngrams_fast's, byte-for-byte. Returns None when a gate trips
+        Candidate pairing and Jaccard verification (``match_pairs``,
+        shared with the crawl's driver tier) run in numpy/Python on the
+        driver over ∝-true-dup-sized data, with ``dedup.word_grams``, the
+        gram rule of word_ngrams_fast. Returns None when a gate trips
         (batch too fat, probe overflow, too many matched docs) — the
         caller falls back to the distributed path. The stored corpus is
         still never shuffled and never scanned beyond matched ids.
@@ -574,96 +645,87 @@ class DedupIndex:
         if len(matched_pd) == 0:
             return []
 
-        # driver pairing: matched stored rows → new docs sharing the band
-        # key, via searchsorted over the batch's packed keys
-        flat_ck = ck_all.ravel()
-        order = np.argsort(flat_ck, kind="stable")
-        sck = flat_ck[order]
+        def texts(need_new, need_orig):
+            # job 3: matched NEW texts out of the prepared cache; ORIG
+            # texts via the caller's driver-side reader when given (pyarrow
+            # pushdown over the stored table's parquet — no Spark job),
+            # else one pushdown-pruned Spark scan. On a table with multiple
+            # rows per doc_id (recrawl before rebuild_content_index) the
+            # max-wave row wins when ``stored_docs`` carries ``wave`` — the
+            # latest fetch, as the caller's reader rules.
+            mark("pairing")
+            new_pd = (
+                prepared.where(F.col("doc_id").isin(need_new))
+                .select("doc_id", "text")
+                .toPandas()
+            )
+            new_text = dict(zip(new_pd["doc_id"], new_pd["text"]))
+            mark("job3_new_texts")
+            orig_text = orig_texts(need_orig) if orig_texts is not None else None
+            if orig_text is None:
+                # the caller's driver-side reader declined (corpus
+                # footprint above its byte budget, VERDICT r07 #2) or none
+                # was given: ONE distributed pushdown-pruned scan, bounded
+                # by matched ids
+                cols = ["doc_id", "text"] + (["wave"] if "wave" in stored_docs.columns else [])
+                orig_pd = (
+                    stored_docs.where(F.col("doc_id").isin(need_orig)).select(*cols).toPandas()
+                )
+                if "wave" in cols:  # the scan is unordered: sort, keep the last
+                    orig_pd = orig_pd.sort_values("wave", na_position="first").drop_duplicates(
+                        "doc_id", keep="last"
+                    )
+                orig_text = dict(zip(orig_pd["doc_id"], orig_pd["text"]))
+            mark("orig_texts")
+            return new_text, orig_text
+
         mck = (matched_pd["key"].to_numpy().astype(np.int64) << np.int64(6)) + matched_pd[
             "band"
         ].to_numpy()
-        lo = np.searchsorted(sck, mck, "left")
-        hi = np.searchsorted(sck, mck, "right")
-        reps = hi - lo
-        if reps.sum() == 0:
-            return []
-        slots = np.concatenate([np.arange(l, h) for l, h in zip(lo, hi) if h > l])
-        pair_new = new_ids[order[slots] // dedup.N_BANDS]
-        pair_orig = np.repeat(matched_pd["doc_id"].to_numpy(), reps)
-        import pandas as pd
-
-        cand = pd.DataFrame({"new_id": pair_new, "orig_id": pair_orig}).drop_duplicates()
-        need_new = sorted(set(cand["new_id"]))
-        need_orig = sorted(set(cand["orig_id"]))
-        mark("pairing")
-        if len(need_new) + len(need_orig) > DRIVER_MATCH_DOC_BUDGET:
-            return None  # text pull too fat for the driver: go distributed
-
-        # job 3: matched NEW texts out of the prepared cache; ORIG texts
-        # via the caller's driver-side reader when given (pyarrow pushdown
-        # over the stored table's parquet — no Spark job), else one
-        # pushdown-pruned Spark scan. On a table with multiple rows per
-        # doc_id (recrawl before rebuild_content_index) the max-wave row
-        # wins when ``stored_docs`` carries ``wave`` — the latest fetch,
-        # as the caller's reader rules.
-        new_pd = (
-            prepared.where(F.col("doc_id").isin(need_new))
-            .select("doc_id", "text")
-            .toPandas()
+        return match_pairs(
+            new_ids, ck_all, mck, matched_pd["doc_id"].to_numpy(), texts, tau
         )
-        new_text = dict(zip(new_pd["doc_id"], new_pd["text"]))
-        mark("job3_new_texts")
-        orig_text = orig_texts(need_orig) if orig_texts is not None else None
-        if orig_text is None:
-            # the caller's driver-side reader declined (corpus footprint
-            # above its byte budget, VERDICT r07 #2) or none was given:
-            # ONE distributed pushdown-pruned scan, bounded by matched ids
-            cols = ["doc_id", "text"] + (["wave"] if "wave" in stored_docs.columns else [])
-            orig_pd = stored_docs.where(F.col("doc_id").isin(need_orig)).select(*cols).toPandas()
-            if "wave" in cols:  # the scan is unordered: sort, keep the last
-                orig_pd = orig_pd.sort_values("wave", na_position="first").drop_duplicates(
-                    "doc_id", keep="last"
-                )
-            orig_text = dict(zip(orig_pd["doc_id"], orig_pd["text"]))
-        mark("orig_texts")
 
-        # exact verification, word_ngrams_fast's gram rule byte-for-byte
-        from decimal import ROUND_HALF_UP, Decimal
+    def match_band_keys(self, new_ids: list, keys, texts, tau: float = JACCARD_TAU) -> list | None:
+        """``match_documents_driver`` for a batch whose band keys the
+        caller computed itself (``dedup.band_keys``; ``keys`` is (n,
+        N_BANDS), one row per id in ``new_ids``), with no Spark job: the
+        stored side is a pyarrow scan of the band table's files — ``key``
+        and ``band`` read and packed, membership tested against the
+        batch's packed keys, ``doc_id`` taken for the hits only — then
+        ``match_pairs`` with the caller's ``texts``. Returns None when a
+        gate trips, like ``match_documents_driver``."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.dataset as pads
 
-        def grams(t: str) -> set:
-            toks = [w for w in (t or "").split(" ") if w]
-            if len(toks) < 3:
-                return set()
-            return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+        from crawl4ai_llm_spark.operators import dedup
 
-        gn = {d: grams(t) for d, t in new_text.items()}
-        go = {d: grams(t) for d, t in orig_text.items()}
-        out = []
-        for new_id, orig_id in zip(cand["new_id"], cand["orig_id"]):
-            a, b = gn.get(new_id), go.get(orig_id)
-            if a is None or b is None:
-                continue
-            inter = len(a & b)
-            union = len(a) + len(b) - inter
-            if union == 0 or inter / union < tau:
-                continue
-            # F.round parity: BigDecimal-style HALF_UP on the shortest
-            # decimal representation of the double
-            j = float(
-                Decimal(repr(inter / union)).quantize(
-                    Decimal("0.000001"), rounding=ROUND_HALF_UP
-                )
-            )
-            out.append(
-                {
-                    # preserve the id column's native type (urls are
-                    # strings, the store tier uses longs)
-                    "new_id": new_id.item() if hasattr(new_id, "item") else new_id,
-                    "orig_id": orig_id.item() if hasattr(orig_id, "item") else orig_id,
-                    "jaccard": j,
-                }
-            )
-        return out
+        snap = self.minhash_bands.current_snapshot()
+        if snap is None or not snap.files:
+            raise ValueError("dedup index is empty — ingest_documents first")
+        _require_scheme(self.minhash_bands, "sig_scheme", SIG_SCHEME, "minhash_bands")
+        ck_all = (np.asarray(keys, dtype=np.int64) << np.int64(6)) + np.arange(
+            dedup.N_BANDS, dtype=np.int64
+        )
+        wanted = np.unique(ck_all.ravel())
+        m_ck, m_ids = [], []
+        for f in snap.files:
+            kb = pads.dataset(f).to_table(columns=["key", "band"])
+            ck = (kb.column("key").to_numpy().astype(np.int64) << np.int64(6)) + kb.column(
+                "band"
+            ).to_numpy()
+            hit = np.flatnonzero(np.isin(ck, wanted))
+            if len(hit):
+                m_ck.append(ck[hit])
+                ids = pads.dataset(f).to_table(columns=["doc_id"]).column(0)
+                m_ids.extend(ids.take(pa.array(hit)).to_pylist())
+        if not m_ck:
+            return []
+        return match_pairs(
+            np.asarray(new_ids, dtype=object), ck_all, np.concatenate(m_ck),
+            np.asarray(m_ids, dtype=object), texts, tau,
+        )
 
     def match_embeddings(
         self,

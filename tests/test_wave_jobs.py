@@ -1,7 +1,8 @@
-"""A crawl wave's Spark job budget, and the driver-side work that replaced
-jobs: Bloom bitmaps built with numpy on the driver, out-links canonicalized
-inside the fetch batch, and catalog reads that take their schema from the
-first file's footer instead of an inference job.
+"""A crawl wave's Spark job budget on each tier, and the driver-side work
+that replaced jobs: the driver tier's zero-job waves, Bloom bitmaps built
+with numpy on the driver, out-links canonicalized inside the fetch batch,
+and catalog reads that take their schema from the first file's footer
+instead of an inference job.
 
 Jobs are counted by job-id range through the status tracker (the same rule
 as ``perfbench/tracer.py``), so jobs launched from the engine's commit
@@ -21,6 +22,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawl4ai_llm_spark.frontier import bloom as bloom_mod
+from crawl4ai_llm_spark.frontier import engine as eng_mod
 from crawl4ai_llm_spark.frontier import webgraph as wg
 from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
 from crawl4ai_llm_spark.functions.urls import _canonical_links, canonicalize_url
@@ -75,7 +77,8 @@ def jobs(spark):
 
 @pytest.fixture(scope="module")
 def two_waves(spark, tmp_path_factory, jobs):
-    """Seeds + two content-dedup waves with CRAWL_WAVE_TIMING on; records
+    """Seeds + two content-dedup waves on the Spark tier (the driver tier's
+    row budget patched to 0) with CRAWL_WAVE_TIMING on; records
     each wave's job count, its stdout and the plan of the frame the Bloom
     probe receives (the discovered links)."""
     eng = FrontierEngine(
@@ -92,6 +95,7 @@ def two_waves(spark, tmp_path_factory, jobs):
 
     out = {"jobs": [], "stats": [], "stdout": io.StringIO(), "plans": plans, "engine": eng}
     with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(eng_mod, "DRIVER_WAVE_ROW_BUDGET", 0)  # the Spark tier
         mp.setattr(bloom_mod, "probe_expr", spy)
         mp.setenv("CRAWL_WAVE_TIMING", "1")
         for wave in (1, 2):
@@ -146,6 +150,54 @@ def test_read_schema_equals_spark_inference(spark, two_waves, jobs):
         # counter sees read-time jobs)
         assert rec["jobs"] == (0 if spark_written else 1), name
     assert tables["docs_spans"].read().count() == sum(s["fetched"] for s in two_waves["stats"])
+
+
+@pytest.fixture(scope="module")
+def driver_waves(spark, tmp_path_factory, jobs):
+    """The driver-tier twin of ``two_waves``: seeds, then three
+    content-dedup waves on the default budget, each wave's job count."""
+    eng = FrontierEngine(
+        spark, str(tmp_path_factory.mktemp("driver_wave_jobs")),
+        CrawlConfig(**CFG, graph=SPEC, content_dedup=True),
+    )
+    eng.init_seeds(SEEDS)
+    out = {"jobs": [], "stats": [], "engine": eng}
+    for wave in (1, 2, 3):
+        with jobs.count() as rec:
+            out["stats"].append(eng.run_wave(wave))
+        out["jobs"].append(rec["jobs"])
+    return out
+
+
+def test_driver_wave_runs_no_spark_job(driver_waves):
+    """Steady content-dedup waves (the near-dup index is non-empty from
+    wave 2 on, and matches are found) on the driver tier run no Spark
+    job at all."""
+    eng = driver_waves["engine"]
+    assert eng.tiers == {"driver": 3}
+    assert driver_waves["jobs"] == [0, 0, 0]
+    assert all(s["scheduled"] > 0 for s in driver_waves["stats"])
+    assert sum(s["content_dups"] for s in driver_waves["stats"][1:]) > 0
+
+
+def test_driver_written_tables_read_without_jobs(spark, driver_waves, jobs):
+    """Every table the driver tier writes carries the Spark row schema in
+    its footers, so reading it runs no job, and the schema is the one
+    Spark infers from the same files. (checkpoints is written unstamped by
+    both tiers.)"""
+    eng = driver_waves["engine"]
+    tables = {
+        name: eng.catalog.table(name)
+        for name in ("frontier_pending", "seen", "docs_spans", "schedule", "content_dups")
+    }
+    tables["minhash_bands"] = eng.dedup_index().minhash_bands
+    for name, tbl in tables.items():
+        files = tbl.current_snapshot().files
+        assert any(f.endswith("/part-0.parquet") for f in files), name
+        with jobs.count() as rec:
+            df = tbl.read()
+        assert rec["jobs"] == 0, name
+        assert df.schema == spark.read.parquet(*files).schema, name
 
 
 @pytest.mark.parametrize("later_sorts_first", [False, True])

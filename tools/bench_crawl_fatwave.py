@@ -16,11 +16,15 @@ only through the signature pass, so overhead/wall falls as waves fatten;
 the ≤15% target at the largest size is the acceptance line VERDICT set.
 
 Usage: python tools/bench_crawl_fatwave.py [--quick] [--scales=1,2,4]
-                                           [--latency=MS]
+                                           [--latency=MS] [--tiers [--waves=N]]
 `--latency` runs both legs under the engine's async-pool fetch model
 (2048 concurrent request slots, MS per request) — the politeness-bound
 wall a production crawler actually runs at; the default 0 is the
-instant-fetch worst case. Writes one JSON line per leg + a final
+instant-fetch worst case. `--tiers` instead crawls each scale twice with
+content dedup on, every wave forced onto one ``run_wave`` tier (driver,
+then Spark), and reports per-wave walls against the rows the tier
+decision reads: the DRIVER_WAVE_ROW_BUDGET crossover (``--waves``: stop
+each leg after N waves, default 8). Writes one JSON line per leg + a final
 summary JSON line; healthy-box evidence for BENCH.md's r06 table.
 """
 
@@ -36,15 +40,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def run_leg(spark, scale: int, dedup_on: bool, latency_ms: float = 0.0) -> dict:
+def fatwave_spec(scale: int):
     from crawl4ai_llm_spark.frontier import webgraph as wg
-    from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
-    from tools.boxstate import InRun
 
     # same family as bench.py's crawl_throughput graph; hosts (and seeds)
     # scale together so the BFS depth profile — and therefore the wave
     # COUNT — stays put while every wave fattens ∝ scale
-    spec = wg.GraphSpec(
+    return wg.GraphSpec(
         n_hosts=300 * scale,
         pages_per_host=700,
         hot_factor=30,
@@ -58,6 +60,14 @@ def run_leg(spark, scale: int, dedup_on: bool, latency_ms: float = 0.0) -> dict:
         near_dup_every=50,
         seed="bench-42",
     )
+
+
+def run_leg(spark, scale: int, dedup_on: bool, latency_ms: float = 0.0) -> dict:
+    from crawl4ai_llm_spark.frontier import webgraph as wg
+    from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
+    from tools.boxstate import InRun
+
+    spec = fatwave_spec(scale)
     cfg = CrawlConfig(
         wave_seconds=3600.0,
         max_depth=5,
@@ -109,6 +119,65 @@ def run_leg(spark, scale: int, dedup_on: bool, latency_ms: float = 0.0) -> dict:
     }
 
 
+def run_tier_leg(spark, scale: int, tier: str, max_waves: int = 8,
+                 max_wave_s: float = 150.0) -> dict:
+    """One content-dedup crawl of the scale's graph with every wave on one
+    ``run_wave`` tier (``DRIVER_WAVE_ROW_BUDGET`` set past any size, or to
+    0). Per wave: the rows the tier decision reads (frontier + seen +
+    stored band rows, from parquet footers), the scheduled URLs and the
+    wall. A leg stops after ``max_waves`` or a wave longer than
+    ``max_wave_s``."""
+    from crawl4ai_llm_spark.frontier import engine as eng_mod
+    from crawl4ai_llm_spark.frontier import webgraph as wg
+    from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
+
+    spec = fatwave_spec(scale)
+    cfg = CrawlConfig(wave_seconds=3600.0, max_depth=5, max_waves=max_waves, graph=spec,
+                      content_dedup=True, content_dedup_policy="flag")
+    budget = eng_mod.DRIVER_WAVE_ROW_BUDGET
+    eng_mod.DRIVER_WAVE_ROW_BUDGET = 10**15 if tier == "driver" else 0
+    waves = []
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            eng = FrontierEngine(spark, tmp, cfg)
+            eng.init_seeds(wg.seed_urls(spec, n_seeds=1000 * scale))
+            bands = eng.dedup_index().minhash_bands
+            for w in range(1, cfg.max_waves + 1):
+                rows = sum(eng._live_rows(t) for t in (eng.frontier, eng.seen, bands))
+                t0 = time.time()
+                stats = eng.run_wave(w)
+                wall = time.time() - t0
+                if not stats.get("scheduled"):
+                    break
+                waves.append({"wave": w, "rows": rows, "scheduled": stats["scheduled"],
+                              "wall_sec": round(wall, 2)})
+                if wall > max_wave_s:
+                    break
+            tiers = dict(eng.tiers)
+    finally:
+        eng_mod.DRIVER_WAVE_ROW_BUDGET = budget
+    return {"scale": scale, "tier": tier, "tiers": tiers, "waves": waves}
+
+
+def tiers_main(spark, scales: list[int], max_waves: int) -> None:
+    """``--tiers``: the driver/Spark tier crossover, in the rows a wave's
+    tier decision reads. Prints each leg, then per scale and wave both
+    tiers' walls and the smallest row count at which the Spark tier won."""
+    rows = []
+    for scale in scales:
+        legs = {}
+        for tier in ("driver", "spark"):
+            legs[tier] = run_tier_leg(spark, scale, tier, max_waves)
+            print(json.dumps(legs[tier]), flush=True)
+        for d, s in zip(legs["driver"]["waves"], legs["spark"]["waves"]):
+            rows.append({"scale": scale, "wave": d["wave"], "rows": d["rows"],
+                         "scheduled": d["scheduled"], "driver_sec": d["wall_sec"],
+                         "spark_sec": s["wall_sec"]})
+    spark_wins = [r["rows"] for r in rows if r["spark_sec"] < r["driver_sec"]]
+    print(json.dumps({"summary": rows,
+                      "crossover_rows": min(spark_wins) if spark_wins else None}))
+
+
 def main() -> None:
     from crawl4ai_llm_spark.session import get_spark
 
@@ -140,6 +209,11 @@ def main() -> None:
             time.sleep(45)
 
     spark = get_spark(app_name="bench_crawl_fatwave")
+    if "--tiers" in sys.argv:
+        waves = [int(a.split("=", 1)[1]) for a in sys.argv if a.startswith("--waves=")]
+        tiers_main(spark, scales, waves[-1] if waves else 8)
+        spark.stop()
+        return
     bench.cpu_state_control()  # throwaway: the first control in a fresh
     # process reads degraded while the JVM warms (measured 0.95 → 0.01)
     # JVM/JIT warm-up crawl, unrecorded: the first leg of a fresh JVM

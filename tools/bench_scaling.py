@@ -31,9 +31,13 @@ CHILD = r"""
 import json, sys, tempfile, time
 sys.path.insert(0, {repo!r})
 from crawl4ai_llm_spark.session import get_spark
+from crawl4ai_llm_spark.frontier import engine as eng_mod
 from crawl4ai_llm_spark.frontier import webgraph as wg
 from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
 
+# the certificate measures the Spark tier's scaling: --quick has no fetch
+# latency, which would otherwise let small waves run on the driver tier
+eng_mod.DRIVER_WAVE_ROW_BUDGET = 0
 cpus = int(sys.argv[1])
 quick = sys.argv[2] == "1"
 transport = sys.argv[3]
@@ -80,7 +84,8 @@ with tempfile.TemporaryDirectory() as tmp:
     dt = time.time() - t0
     n = eng.schedule.read().count()
 print(json.dumps({{"cpus": cpus, "urls": n, "seconds": round(dt, 2),
-                   "urls_per_sec": round(n / dt, 1), "waves": wave_stats}}))
+                   "urls_per_sec": round(n / dt, 1), "waves": wave_stats,
+                   "tiers": dict(eng.tiers)}}))
 spark.stop()
 """
 
