@@ -22,14 +22,89 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 # footer key under which Spark stores a parquet file's row schema (JSON)
 _SPARK_ROW_KEY = "org.apache.spark.sql.parquet.row.metadata"
+# Arrow bytes of decoded data files one Table keeps (read_file's LRU memo):
+# twice the ~32 MB a driver-tier list holds at ProductStore's
+# ARROW_LIST_MAX_ROWS (250k rows at the measured ~128 B/row)
+FILE_MEMO_BYTES = 64 << 20
+
+
+def conform(table, schema):
+    """A file's decoded rows under a scan's unified ``schema``, as a
+    pyarrow dataset scan with that schema reads them: as decoded when the
+    schemas are equal, else one column per field — a missing one as
+    nulls, the rest cast (``unify_schemas`` only promotes null-typed
+    fields and nullability)."""
+    import pyarrow as pa
+
+    if table.schema.equals(schema):
+        return table
+    cols = [
+        table.column(f.name).cast(f.type)
+        if f.name in table.schema.names
+        else pa.nulls(table.num_rows, f.type)
+        for f in schema
+    ]
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
+class _FileMemo:
+    """Decoded data files by path, least recently read first, holding at
+    most FILE_MEMO_BYTES of Arrow data. An entry is (decoded, shaped,
+    nbytes): the file as decoded, as last conformed to a scan's schema
+    (the same table when no conform was needed), and their Arrow bytes —
+    both tables count, an upper bound: they share most buffers. A lock
+    keeps the entries and the byte count consistent when one store is
+    read from several threads."""
+
+    def __init__(self):
+        self.entries: OrderedDict = OrderedDict()
+        self.nbytes = 0
+        self._lock = threading.Lock()
+
+    def get(self, path: str):
+        """The entry of ``path`` (now the most recently read), or None."""
+        with self._lock:
+            entry = self.entries.get(path)
+            if entry is not None:
+                self.entries.move_to_end(path)
+            return entry
+
+    def put(self, path: str, decoded, shaped) -> None:
+        """Insert or replace the entry of ``path`` as the most recently
+        read, then evict the least recently read ones down to the cap; an
+        entry over the cap on its own is not kept."""
+        size = decoded.nbytes + (0 if shaped is decoded else shaped.nbytes)
+        with self._lock:
+            self._drop(path)
+            if size > FILE_MEMO_BYTES:
+                return
+            self.entries[path] = (decoded, shaped, size)
+            self.nbytes += size
+            while self.nbytes > FILE_MEMO_BYTES:
+                self._drop(next(iter(self.entries)))
+
+    def retain(self, files: list[str]) -> None:
+        """Drop every entry whose path is not in ``files``."""
+        if self.entries:
+            live = set(files)
+            with self._lock:
+                for path in [p for p in self.entries if p not in live]:
+                    self._drop(path)
+
+    def _drop(self, path: str) -> None:
+        entry = self.entries.pop(path, None)
+        if entry is not None:
+            self.nbytes -= entry[2]
 
 
 @dataclass
@@ -52,6 +127,15 @@ class Table:
     ``bucket(n, col)`` partition-transform analog). Point lookups then read
     1/n of the files (``read(buckets={...})``) and mutations rewrite only
     the touched buckets (``replace_buckets``) instead of the whole table.
+
+    Data files are immutable: every commit writes its files under a fresh
+    ``data/commit-<uuid>/`` directory, and no file is ever rewritten in
+    place — a commit only publishes a new file list (``expire_snapshots``
+    deletes files, never edits them). So a file's decoded rows stay valid
+    for as long as the file is live, which is what ``read_file``'s memo
+    relies on: it keeps decoded files by path, filled on read only, drops
+    an entry as soon as its file leaves the current snapshot, and holds at
+    most FILE_MEMO_BYTES of Arrow data (least recently read out first).
     """
 
     def __init__(
@@ -67,6 +151,7 @@ class Table:
         self.root = root
         self.data_dir = os.path.join(root, "data")
         self.meta_dir = os.path.join(root, "meta")
+        self._memo = _FileMemo()
         try:
             os.makedirs(self.data_dir, exist_ok=True)
             os.makedirs(self.meta_dir, exist_ok=True)
@@ -88,8 +173,11 @@ class Table:
             with open(self._head_path()) as f:
                 sid = int(f.read().strip())
         except FileNotFoundError:
+            self._memo.retain([])
             return None
-        return self.snapshot(sid)
+        snap = self.snapshot(sid)
+        self._memo.retain(snap.files)  # a file that left the snapshot leaves the memo
+        return snap
 
     def snapshot(self, snapshot_id: int) -> Snapshot:
         with open(os.path.join(self.meta_dir, f"snap-{snapshot_id}.json")) as f:
@@ -140,6 +228,7 @@ class Table:
             with open(head_tmp, "w") as f:
                 f.write(str(snap.snapshot_id))
             os.replace(head_tmp, self._head_path())  # atomic pointer swap
+            self._memo.retain(snap.files)
         except OSError as e:
             from crawl4ai_llm_spark.errors import StorageConnectionError
 
@@ -390,6 +479,45 @@ class Table:
         raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_ROW_KEY.encode())
         return None if raw is None else StructType.fromJson(json.loads(raw))
 
+    # --- decoded-file memo (driver-side readers) ------------------------------
+
+    def file_footer(self, path: str):
+        """(Arrow schema, row count) of one data file: from the memo when
+        the file is decoded there, else from its parquet footer."""
+        entry = self._memo.get(path)
+        if entry is not None:
+            return entry[0].schema, entry[0].num_rows
+        import pyarrow.parquet as pq
+
+        meta = pq.read_metadata(path)
+        return meta.schema.to_arrow_schema(), meta.num_rows
+
+    def read_file(self, path: str, schema=None):
+        """One data file's rows as a pyarrow Table, decoded whole and
+        memoized (see the class docstring) — under ``schema`` when given,
+        as a dataset scan with that schema reads the file (``conform``);
+        the memo keeps that form too, so a scan whose schema did not
+        change conforms nothing again. Only reads fill the memo: a
+        commit's own table is not the table its file decodes to (INT96
+        stamps read back as ns). A file larger than FILE_MEMO_BYTES is
+        decoded, not kept."""
+        entry = self._memo.get(path)
+        if entry is not None:
+            decoded, shaped, _ = entry
+            if schema is None:
+                return decoded
+            if shaped.schema.equals(schema):
+                return shaped
+        else:
+            import pyarrow.parquet as pq
+
+            with pq.ParquetFile(path) as f:
+                decoded = shaped = f.read()
+        if schema is not None:
+            shaped = conform(decoded, schema)
+        self._memo.put(path, decoded, shaped)
+        return decoded if schema is None else shaped
+
     def replace_buckets(
         self, df: DataFrame, buckets: set[int], counters: dict[str, int] | None = None
     ) -> Snapshot:
@@ -439,10 +567,11 @@ class Table:
         derives every file's types from the same parquet physical schema.
         Same invariants as replace_buckets: refuses a table with legacy
         unbucketed files, and raises ValueError for any row whose
-        ``pmod(hash(col), n)`` is not the bucket it is filed under."""
+        ``pmod(hash(col), n)`` (``hashing.spark_buckets``) is not the
+        bucket it is filed under, a null key included."""
         import pyarrow.parquet as pq
 
-        from crawl4ai_llm_spark.frontier.hashing import spark_hash_str
+        from crawl4ai_llm_spark.frontier.hashing import spark_buckets
 
         col, n = self.bucket_by
         parent = self.current_snapshot()
@@ -452,9 +581,11 @@ class Table:
                 "commit_arrow_buckets on a table with unbucketed files — compact first"
             )
         for k, t in tables.items():
-            for key in t.column(col).to_pylist():
-                if spark_hash_str(key) % n != k:
-                    raise ValueError(f"row {key!r} does not belong in bucket {k}")
+            keys = t.column(col)
+            wrong = (spark_buckets(keys, n) != k).nonzero()[0]
+            if len(wrong):
+                key = keys[int(wrong[0])].as_py()
+                raise ValueError(f"row {key!r} does not belong in bucket {k}")
         out_dir = os.path.join(self.data_dir, f"commit-{uuid.uuid4().hex}")
         files = []
         for k, t in sorted(tables.items()):

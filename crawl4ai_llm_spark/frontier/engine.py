@@ -75,7 +75,7 @@ from crawl4ai_llm_spark.catalog import Catalog
 from crawl4ai_llm_spark.frontier import bloom as bloom_mod
 from crawl4ai_llm_spark.frontier import cuckoo as cuckoo_mod
 from crawl4ai_llm_spark.frontier import webgraph as wg
-from crawl4ai_llm_spark.frontier.hashing import spark_hash_str
+from crawl4ai_llm_spark.frontier.hashing import spark_hash_strs
 from crawl4ai_llm_spark.functions.urls import (
     _canonical_links,
     canonicalize_url,
@@ -739,17 +739,20 @@ class FrontierEngine:
         """Discovered canonical URL → depth, to frontier rows (url,
         url_hash, host, depth, attempt, score) of the robots-allowed ones:
         ``_with_frontier_cols`` + ``_robots_allowed`` in Python (murmur3
-        ``url_hash``, ``host_of``'s host, ``score_expr``'s arithmetic)."""
+        ``url_hash`` by the numpy kernel, one call for all of them,
+        ``host_of``'s host, ``score_expr``'s arithmetic)."""
         rules = self._robots_rules()
-        rows = []
+        kept = []
         for url, depth in found.items():
             m = _HOST_RE.match(url)
             host = m.group(1) if m else ""
-            if not wg.robots_allows(rules, url, host=host):
-                continue
-            h = spark_hash_str(url)
-            rows.append((url, h, host, depth, 0, ((h & 0x7FFFFFFF) % 1000) / 1000.0))
-        return rows
+            if wg.robots_allows(rules, url, host=host):
+                kept.append((url, host, depth))
+        hashes = spark_hash_strs([url for url, _, _ in kept]).tolist()
+        return [
+            (url, h, host, depth, 0, ((h & 0x7FFFFFFF) % 1000) / 1000.0)
+            for (url, host, depth), h in zip(kept, hashes)
+        ]
 
     def _run_wave_driver(self, wave: int) -> dict[str, int] | None:
         """The driver tier of ``run_wave``: the whole wave in this process

@@ -9,11 +9,13 @@ whose files are hash-bucketed by id (``_bucket=K/``):
 reference op    realization (SURVEY.md §2)
 ==============  ============================================================
 save_product    one-row batch through save_products (D1)
-save_products   driver tier: ids derived on the driver, intra-batch and
+save_products   driver tier: ids derived on the driver, rows routed by the
+                one bucket rule (hashing.spark_buckets), intra-batch and
                 vs-existing dup checks on the touched buckets, ONE Arrow
                 append commit; Spark tier: groupBy(id) + left-semi join,
                 ONE distributed append (D2)
-get_product     point lookup on the id's bucket, driver-side pyarrow (S6)
+get_product     point lookup on the id's bucket, driver-side pyarrow over
+                the bucket's decoded files (S6)
 get_products    same read over the ids' buckets, input order restored (S7)
 update_product  shallow merge ``{**existing, **update}`` (D3)
 update_products batch merge, all-or-nothing pre-validation; the touched
@@ -21,9 +23,9 @@ update_products batch merge, all-or-nothing pre-validation; the touched
 delete_product  rewrite of the id's bucket without the row (D5)
 delete_products batch form, all-or-nothing (D6)
 list_products   filter → sort → paginate → hydrate pipeline (Q1-Q7):
-                driver tier: one pyarrow scan of the live files with the
-                filters pushed down, sort + page on the driver, only the
-                page's rows hydrated; Spark tier: list_products_df
+                driver tier: the live files' decoded rows filtered,
+                sorted and paged on the driver, only the page's rows
+                hydrated; Spark tier: list_products_df
 ==============  ============================================================
 
 Two tiers. Row-list writes (save/update/delete), point reads and
@@ -32,16 +34,21 @@ buckets' files (the whole table for a list), the checks, the merge or
 the sort run in Arrow/Python, and ``Table.commit_arrow_buckets`` commits
 one file per touched bucket — no Spark job at all (a one-row write as
 Spark jobs costs 4-8 jobs and ~0.5-1 s of scheduling; a list, 4 jobs and
-~0.35 s). Whatever that tier cannot reproduce exactly — an empty store or
-bucket, a legacy or over-budget bucket or table, unifiable-schema
-failures, new keys, caller metadata, content-hash ids, values it does
-not type like Spark, dotted filter or sort paths, non-string sort keys —
-falls through to the SPARK tier: for saves, a distributed append; for
-updates and deletes, one _spark_rewrite of the touched buckets, whose
-merge types each payload with ``from_json`` against the stored columns;
-for lists, list_products_df. ``tiers`` counts which tier each write
-and each list took (``driver`` / ``spark:<reason>``). The bulk tier
-(save_products_df) always runs on Spark.
+~0.35 s). It reads through the table's decoded-file memo
+(``Table.read_file``): data files are immutable, so a live file is
+decoded once per store, not once per call — a point read takes ~1 ms,
+a one-row update or delete ~4-5 ms (BENCH.md "ProductStore: decoded-file
+memo and numpy bucket hashing"). Whatever that tier cannot reproduce
+exactly — an empty store or bucket, a legacy or over-budget bucket or
+table, unifiable-schema failures, new keys, caller metadata,
+content-hash ids, values it does not type like Spark, dotted filter or
+sort paths, non-string sort keys — falls through to the SPARK tier: for
+saves, a distributed append; for updates and deletes, one _spark_rewrite
+of the touched buckets, whose merge types each payload with
+``from_json`` against the stored columns; for lists, list_products_df.
+``tiers`` counts which tier each write and each list took (``driver`` /
+``spark:<reason>``). The bulk tier (save_products_df) always runs on
+Spark.
 The reference's O(index) read-modify-write per call
 (json_storage.py:195-221) is what capped it at ~356 rec/s (BASELINE.md).
 
@@ -240,12 +247,13 @@ class ProductStore:
         return self.table.read()
 
     def _buckets_of(self, ids: list[str]) -> set[int]:
-        """Driver-side bucket computation via the murmur3 port that is
-        bit-identical to Spark's F.hash (frontier/hashing.py) — the same
-        arithmetic the write path uses, so pruning can never miss a file."""
-        from crawl4ai_llm_spark.frontier.hashing import spark_hash_str
+        """The ids' buckets by the driver-side bucket rule
+        (``hashing.spark_buckets``, bit-identical to Spark's
+        ``pmod(F.hash(id), n)``) — the rule every write files rows by, so
+        pruning can never miss a file."""
+        from crawl4ai_llm_spark.frontier.hashing import spark_buckets
 
-        return {spark_hash_str(i) % self.n_buckets for i in ids}
+        return set(spark_buckets(ids, self.n_buckets).tolist())
 
     def _df_for_ids(self, ids: list[str]) -> DataFrame | None:
         return self.table.read(buckets=self._buckets_of(ids))
@@ -725,28 +733,38 @@ class ProductStore:
         """Driver-side pyarrow read — (fallback reason, data).
 
         Reads only the files of the ids' buckets (plus legacy unbucketed
-        files, which may hold any id): the footers' schemas unify (the
-        mergeSchema analog), then either a predicate-pushdown scan on id
-        (row groups skipped by min/max stats; data = one Table with the
-        unified schema) or, with ``whole_buckets``, every row of each
-        touched bucket (data = {bucket: Table}, what a bucket rewrite
-        needs). ``write`` declines legacy layouts, which no bucket-scoped
-        commit may touch. data is None when no file can hold the ids.
+        files, which may hold any id): the files' schemas unify (the
+        mergeSchema analog), then either the rows whose id is among
+        ``ids`` (data = one Table with the unified schema) or, with
+        ``whole_buckets``, every row of each touched bucket (data =
+        {bucket: Table}, what a bucket rewrite needs). ``write`` declines
+        legacy layouts, which no bucket-scoped commit may touch. data is
+        None when no file can hold the ids.
 
         ``ids=None`` is the whole-table mode of list_products: every live
-        file, the footers' row counts summed against ARROW_LIST_MAX_ROWS,
+        file, the files' row counts summed against ARROW_LIST_MAX_ROWS,
         and ``where(schema)`` — given the whole table's unified schema —
-        returns (reason, filter expression) for one pushed-down scan.
+        returns (reason, filter expression) for the rows to keep.
+
+        In all three modes the schemas and row counts, then the rows, come
+        from the table's decoded-file memo (``Table.file_footer`` /
+        ``Table.read_file``): a live file is decoded once, not once per
+        call, and the footer of a file not decoded yet is read before any
+        row of it, so a declined scan decodes nothing. A file whose schema
+        already equals the unified one is used as decoded, with no cast;
+        the others are conformed to it (``catalog.conform``: missing
+        columns as nulls, the rest cast) once per unified schema, not on
+        every call as the pyarrow dataset scan this replaced did.
 
         A bucket-pruned read through Spark is still ~40 per-query
-        overheads (~0.2 s); this read is a few ms. Reasons to decline —
-        the caller then runs its Spark tier: ``empty`` (no snapshot),
-        ``legacy``, ``files`` (over ARROW_LOOKUP_MAX_FILES), ``schema``
-        (footers don't unify, or a file pyarrow can't open), ``rows``
-        (over ARROW_LIST_MAX_ROWS), or whatever ``where`` returns."""
+        overheads (~0.2 s); this read is a few ms, about 1 ms for a point
+        lookup once its bucket is decoded. Reasons to decline — the caller
+        then runs its Spark tier: ``empty`` (no snapshot), ``legacy``,
+        ``files`` (over ARROW_LOOKUP_MAX_FILES), ``schema`` (schemas don't
+        unify, or a file pyarrow can't open), ``rows`` (over
+        ARROW_LIST_MAX_ROWS), or whatever ``where`` returns."""
         import pyarrow as pa
-        import pyarrow.dataset as ds
-        import pyarrow.parquet as pq
+        import pyarrow.compute as pc
 
         snap = self.table.current_snapshot()
         if snap is None or not snap.files:
@@ -762,23 +780,25 @@ class ProductStore:
         if not files:
             return None, None
         try:
-            footers = [pq.read_metadata(f) for f in files]
-            schema = pa.unify_schemas([m.schema.to_arrow_schema() for m in footers])
-            dataset = ds.dataset(files, format="parquet", schema=schema)
+            footers = [self.table.file_footer(f) for f in files]
+            schema = pa.unify_schemas([s for s, _ in footers])
+            expr = None
             if ids is None:
-                if sum(m.num_rows for m in footers) > self.ARROW_LIST_MAX_ROWS:
+                if sum(n for _, n in footers) > self.ARROW_LIST_MAX_ROWS:
                     return "rows", None
                 reason, expr = where(schema)
                 if reason is not None:
                     return reason, None
-                return None, dataset.to_table(filter=expr)
+            tables = [self.table.read_file(f, schema) for f in files]
+            if ids is None:
+                tbl = pa.concat_tables(tables)
+                return None, tbl if expr is None else tbl.filter(expr)
             if not whole_buckets:
-                return None, dataset.to_table(filter=ds.field("id").isin(ids))
+                tbl = pa.concat_tables(tables)
+                return None, tbl.filter(pc.is_in(tbl.column("id"), pa.array(ids, pa.string())))
             parts: dict[int, list] = {}
-            for frag in dataset.get_fragments():
-                parts.setdefault(Table._file_bucket(frag.path), []).append(
-                    frag.to_table(schema=schema)
-                )
+            for f, t in zip(files, tables):
+                parts.setdefault(Table._file_bucket(f), []).append(t)
             return None, {k: pa.concat_tables(v) for k, v in parts.items()}
         except (OSError, pa.ArrowException):
             # un-unifiable schemas, a warehouse URI pyarrow can't open though
@@ -799,20 +819,30 @@ class ProductStore:
     def _spark_tier(self, reason: str) -> None:
         self.tiers[f"spark:{reason}"] += 1
 
-    def _driver_id(self, p: dict[str, Any]) -> str | None:
+    @staticmethod
+    def _driver_ids(products: list[dict[str, Any]]) -> list[str | None]:
         """_ensure_id_and_stamps' id precedence evaluated on the driver
-        (explicit → store_sku → url_<murmur3>); None where only the
-        content-hash / uuid fallback applies or a part is not a str."""
-        from crawl4ai_llm_spark.frontier.hashing import spark_hash_str
+        (explicit → store_sku → url_<murmur3>, the url hashes in one
+        kernel call); None where only the content-hash / uuid fallback
+        applies or a part is not a str."""
+        from crawl4ai_llm_spark.frontier.hashing import spark_hash_strs
 
-        pid, store, sku, url = (p.get(k) for k in ("id", "store_name", "sku", "url"))
-        if pid is not None:
-            return pid if type(pid) is str else None
-        if store is not None and sku is not None:
-            return f"{store}_{sku}" if type(store) is str and type(sku) is str else None
-        if url is not None:
-            return f"url_{spark_hash_str(url)}" if type(url) is str else None
-        return None
+        ids: list[str | None] = []
+        by_url: dict[int, str] = {}
+        for i, p in enumerate(products):
+            pid, store, sku, url = (p.get(k) for k in ("id", "store_name", "sku", "url"))
+            if pid is not None:
+                ids.append(pid if type(pid) is str else None)
+            elif store is not None and sku is not None:
+                ids.append(f"{store}_{sku}" if type(store) is str and type(sku) is str else None)
+            else:
+                ids.append(None)
+                if type(url) is str:
+                    by_url[i] = url
+        if by_url:
+            for i, h in zip(by_url, spark_hash_strs(list(by_url.values())).tolist()):
+                ids[i] = f"url_{h}"
+        return ids
 
     def _driver_save(self, products: list[dict[str, Any]]) -> list[str] | None:
         """save_products without a Spark job; None when declined.
@@ -825,13 +855,14 @@ class ProductStore:
         order. ``_seq`` keeps the stored integer width, as the Spark tiers
         do: int32 in a store begun by save_products, int64 in one begun by
         a bulk load (parquet schema merging refuses to mix the two)."""
+        import numpy as np
         import pyarrow as pa
 
-        from crawl4ai_llm_spark.frontier.hashing import spark_hash_str
+        from crawl4ai_llm_spark.frontier.hashing import spark_buckets
 
         if any("metadata" in p for p in products):
             return self._spark_tier("metadata")
-        ids = [self._driver_id(p) for p in products]
+        ids = self._driver_ids(products)
         if None in ids:
             return self._spark_tier("id")
         keys = sorted({k for p in products for k in p})
@@ -875,11 +906,9 @@ class ProductStore:
         if dups:
             raise DuplicateProductError(dups[:20], truncated=len(dups) > 20)
         batch = pa.Table.from_arrays(arrays, names=names)
-        rows: dict[int, list[int]] = {}
-        for i, pid in enumerate(ids):
-            rows.setdefault(spark_hash_str(pid) % self.n_buckets, []).append(i)
+        buckets = spark_buckets(ids, self.n_buckets)
         self.table.commit_arrow_buckets(
-            {k: batch.take(idx) for k, idx in rows.items()},
+            {int(k): batch.take(np.flatnonzero(buckets == k)) for k in np.unique(buckets)},
             replace=False,
             counters={"max_seq": next_seq + n - 1},
         )

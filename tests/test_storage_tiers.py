@@ -672,3 +672,194 @@ def test_update_never_widens_a_stored_column(spark, tmp_path, tier):
     assert (total, page_df.count()) == (6, 6)
     st.compact()
     assert st.get_products(ids)[1] == got
+
+
+def test_commit_arrow_buckets_refuses_a_null_key(spark, tmp_path):
+    """A null key belongs in no bucket: the per-row check raises its
+    ValueError (it used to be an AttributeError from the hash) and
+    publishes nothing."""
+    import pyarrow as pa
+
+    st, _ = _seeded_store(spark, tmp_path / "wh")
+    row = pa.table({"id": pa.array([None], pa.string()), "title": ["t"]})
+    head = st.table.current_snapshot().snapshot_id
+    for k in range(4):
+        with pytest.raises(ValueError, match="does not belong in bucket"):
+            st.table.commit_arrow_buckets({k: row}, replace=False)
+    assert st.table.current_snapshot().snapshot_id == head
+
+
+# ------------------------------------------------------- decoded-file memo
+
+
+def _memo_paths(st) -> set[str]:
+    return set(st.table._memo.entries)
+
+
+def _head_files(st) -> set[str]:
+    """The live files, read without current_snapshot (which prunes the
+    memo): HEAD is always the newest manifest."""
+    return set(st.table.snapshots()[-1].files)
+
+
+def _reads(st, ids: list[str]):
+    """A point read, a batch read and two lists — all on the driver tier,
+    with no Spark job."""
+    got, jobs = _spark_jobs(
+        st.spark,
+        lambda: (
+            st.get_product(ids[0]),
+            st.get_products(sorted(ids)),
+            st.list_products(page_size=1000, sort_by="title"),
+            st.list_products(filters={"category": "a"}, page=2, page_size=3, sort_by="title"),
+        ),
+    )
+    assert jobs == 0
+    return got
+
+
+def test_memo_reads_equal_a_cold_memo(spark, tmp_path):
+    """After each kind of commit — driver save, update and delete, Spark
+    compact, rollback, expire_snapshots — a store whose memo is warm
+    reads exactly what a store with an empty memo reads, and its memo
+    holds no file outside the current snapshot."""
+    st, ids = _seeded_store(spark, tmp_path / "wh")
+    rng = random.Random(13)
+    live = list(ids)
+    _reads(st, live)
+    assert _memo_paths(st) == _head_files(st)
+    marks = {}
+
+    def save():
+        live.extend(st.save_products([_product(rng, 300 + k) for k in range(3)]))
+
+    def delete():
+        st.delete_products([live.pop(3)])
+        marks["before_compact"] = st.table.current_snapshot().snapshot_id
+
+    steps = [
+        ("save", save),
+        ("update", lambda: st.update_products([{"id": live[0], "title": "memo"}])),
+        ("delete", delete),
+        ("compact", st.compact),
+        ("rollback", lambda: st.table.rollback(marks["before_compact"])),
+        ("expire", lambda: st.table.expire_snapshots(keep_last=2)),
+    ]
+    for name, step in steps:
+        step()
+        assert _memo_paths(st) <= _head_files(st), name
+        warm = _reads(st, live)
+        assert _memo_paths(st) and _memo_paths(st) <= _head_files(st), name
+        st.table._memo.retain([])  # cleared: every file decodes again
+        assert _reads(st, live) == warm, name
+        assert _reads(_same_table(st, forced=False), live) == warm, name
+    assert st.get_product(live[0])["title"] == "memo"
+    assert st.tiers["driver"] >= 3 + 4 * len(steps)
+    assert not any(k.startswith("spark") and k != "spark:empty" for k in st.tiers)
+
+
+def test_memo_drops_a_file_its_commit_drops(spark, tmp_path):
+    st, ids = _seeded_store(spark, tmp_path / "wh")
+    st.get_product(ids[0])
+    home = st._buckets_of([ids[0]]).pop()
+    old = {f for f in _memo_paths(st) if st.table._file_bucket(f) == home}
+    assert old
+    st.delete_products([ids[0]])  # rewrites the bucket: its old file leaves
+    assert not old & _head_files(st)
+    assert not old & _memo_paths(st)
+    assert _memo_paths(st) <= _head_files(st)
+
+
+def test_memo_holds_its_byte_cap(spark, tmp_path, monkeypatch):
+    """The memo's Arrow bytes never pass FILE_MEMO_BYTES: least recently
+    read files leave first, a file over the cap on its own is never kept,
+    and reads are the same under any cap."""
+    from crawl4ai_llm_spark import catalog
+
+    st, ids = _seeded_store(spark, tmp_path / "wh")
+    want = _reads(st, ids)
+    entries = st.table._memo.entries
+    assert len(entries) == 4
+    sizes = sorted(e[2] for e in entries.values())
+    assert st.table._memo.nbytes == sum(sizes) <= catalog.FILE_MEMO_BYTES
+    for cap, kept in ((sizes[-1] + sizes[0], (1, 2)), (sizes[0] - 1, (0, 0))):
+        monkeypatch.setattr(catalog, "FILE_MEMO_BYTES", cap)
+        small = _same_table(st, forced=False)
+        memo = small.table._memo
+        for _ in range(3):
+            assert _reads(small, ids) == want
+            assert memo.nbytes == sum(e[2] for e in memo.entries.values()) <= cap
+            assert kept[0] <= len(memo.entries) <= kept[1]
+    # a file too big to keep leaves the entries already held in place
+    import pyarrow as pa
+
+    memo = catalog._FileMemo()
+    little, big = pa.table({"x": [1]}), pa.table({"x": list(range(1000))})
+    monkeypatch.setattr(catalog, "FILE_MEMO_BYTES", big.nbytes - 1)
+    memo.put("little", little, little)
+    memo.put("big", big, big)
+    assert list(memo.entries) == ["little"] and memo.nbytes == little.nbytes
+
+
+def test_second_store_sees_the_first_stores_writes(spark, tmp_path):
+    """Two stores over one warehouse, both memos warm: what one commits,
+    the other reads at once, and the reader's memo sheds the files those
+    commits dropped."""
+    a, ids = _seeded_store(spark, tmp_path / "wh")
+    b = _same_table(a, forced=False)
+    _reads(a, ids)
+    _reads(b, ids)
+    rng = random.Random(17)
+    new = b.save_products([_product(rng, 400 + k) for k in range(3)])
+    b.update_products([{"id": ids[0], "title": "from b"}])
+    b.delete_products([ids[1]])
+    live = [i for i in ids + new if i != ids[1]]
+    got = _reads(a, live)
+    assert got == _reads(_same_table(a, forced=False), live)
+    assert a.get_product(ids[0])["title"] == "from b"
+    assert a.list_products(page_size=1000).total == len(live)
+    with pytest.raises(ProductNotFoundError):
+        a.get_product(ids[1])
+    assert _memo_paths(a) <= _head_files(a)
+
+
+def test_memo_stays_consistent_under_threads(monkeypatch):
+    """Threads reading one store share its memo: with more threads than
+    cores and a short switch interval, the byte count always equals the
+    entries' sizes and never passes the cap."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+
+    from crawl4ai_llm_spark import catalog
+
+    tables = [pa.table({"x": list(range(50 * (k % 7 + 1)))}) for k in range(40)]
+    monkeypatch.setattr(catalog, "FILE_MEMO_BYTES", sum(t.nbytes for t in tables[:12]))
+    memo = catalog._FileMemo()
+    errors: list = []
+
+    def work(seed: int) -> None:
+        rng = random.Random(seed)
+        try:
+            for _ in range(2000):
+                k = rng.randrange(len(tables))
+                if rng.random() < 0.1:
+                    memo.retain([f"f{j}" for j in rng.sample(range(len(tables)), 20)])
+                elif memo.get(f"f{k}") is None:
+                    memo.put(f"f{k}", tables[k], tables[k])
+        except Exception as e:  # reported below: a thread's error is not raised
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(s,)) for s in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert memo.nbytes == sum(e[2] for e in memo.entries.values()) <= catalog.FILE_MEMO_BYTES
