@@ -115,6 +115,160 @@ class Snapshot:
     parent_id: int | None = None
 
 
+def has_files(snap: Snapshot | None) -> bool:
+    """Whether a snapshot (None: the table has none) lists any file."""
+    return snap is not None and bool(snap.files)
+
+
+def appended(covered: list[str], files: list[str]) -> list[str] | None:
+    """The files a live list ``files`` holds after ``covered`` when it
+    extends ``covered`` — what commits appended since a reader saw
+    ``covered`` — else None: a commit rewrote or dropped a covered file
+    (compaction, rollback, truncate, an overwrite, a dropped table), so
+    state derived from ``covered`` must be rebuilt from ``files``. Sound
+    because a data file path is never reused and its file never changes."""
+    n = len(covered)
+    if len(files) < n or files[:n] != covered:
+        return None
+    return files[n:]
+
+
+class ResidentIndex:
+    """A driver-resident index over one table's live files: each row's
+    int64 key (``key(decoded columns)``) and its ``payload`` columns, the
+    rows numbered in file order, then row order. ``find`` returns the
+    numbered rows whose key is wanted: a searchsorted probe of the sorted
+    keys, whose cost follows the wanted keys and the hits, not the table.
+
+    The index is a pure function of the file list it covers (``files``):
+    ``sync`` decodes only the files a newer list appended (``appended``)
+    and rebuilds from nothing when the list no longer extends the covered
+    one. The keys live in two sorted runs, a large one and a small one a
+    sync merges new keys into; the small run merges into the large one
+    once it outgrows an eighth of it, so a thin append costs the small
+    run, not a copy of the whole index."""
+
+    def __init__(self, columns: list[str], payload: list[str], key, read_dictionary=None):
+        self.columns, self.payload, self.key = columns, payload, key
+        self.read_dictionary = read_dictionary
+        self.reset()
+
+    def reset(self) -> None:
+        """Drop everything: the index then covers no file."""
+        import numpy as np
+
+        self.files: list[str] = []
+        self.chunks: list = []  # each covered file's payload columns
+        self.starts = np.empty(0, np.int64)  # first row number of each file
+        self.n_rows = 0
+        empty = (np.empty(0, np.int64), np.empty(0, np.int64))
+        self._runs = [empty, empty]  # (sorted keys, row numbers): large, small
+        self._chunk_bytes = 0
+
+    @property
+    def nbytes(self) -> int:
+        """Bytes the index holds (numpy and Arrow buffers)."""
+        return self._chunk_bytes + self.starts.nbytes + sum(
+            k.nbytes + r.nbytes for k, r in self._runs
+        )
+
+    def cold(self, files: list[str]) -> list[str]:
+        """The files of a live list that a ``sync`` to it would decode."""
+        added = appended(self.files, files)
+        return files if added is None else added
+
+    def sync(self, files: list[str]) -> None:
+        """Cover exactly the live list ``files``."""
+        import pyarrow.parquet as pq
+
+        added = appended(self.files, files)
+        if added is None:
+            self.reset()
+            added = files
+        for path in added:
+            with pq.ParquetFile(path, read_dictionary=self.read_dictionary) as f:
+                self._add(f.read(columns=self.columns))
+            self.files.append(path)
+
+    def _add(self, table) -> None:
+        import numpy as np
+
+        n0 = self.n_rows
+        keys = np.asarray(self.key(table), dtype=np.int64)
+        o = np.argsort(keys, kind="stable")
+        small = _merge_runs(self._runs[1], (keys[o], n0 + o.astype(np.int64)))
+        large = self._runs[0]
+        if len(small[0]) > len(large[0]) // 8:
+            large, small = _merge_runs(large, small), (keys[:0], keys[:0])
+        self._runs = [large, small]
+        chunk = table.select(self.payload)
+        self.chunks.append(chunk)
+        self._chunk_bytes += chunk.nbytes
+        self.starts = np.append(self.starts, n0)
+        self.n_rows += table.num_rows
+
+    def find(self, wanted):
+        """(row numbers, keys) of every covered row whose key is in
+        ``wanted``, ascending by row number."""
+        import numpy as np
+
+        wanted = np.unique(np.asarray(wanted, dtype=np.int64))
+        rows, keys = [], []
+        for k, r in self._runs:
+            lo = np.searchsorted(k, wanted, "left")
+            n = np.searchsorted(k, wanted, "right") - lo
+            if n.any():
+                # positions lo[i] .. lo[i] + n[i] - 1 of every wanted key
+                pos = np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(int(n.sum()))
+                rows.append(r[pos])
+                keys.append(k[pos])
+        if not rows:
+            return np.empty(0, np.int64), np.empty(0, np.int64)
+        rows, keys = np.concatenate(rows), np.concatenate(keys)
+        o = np.argsort(rows)
+        return rows[o], keys[o]
+
+    def locate(self, rows):
+        """(index into ``files``, row within that file) of each row number."""
+        import numpy as np
+
+        f = np.searchsorted(self.starts, rows, "right") - 1
+        return f, rows - self.starts[f]
+
+    def take(self, rows, column: str) -> list:
+        """The payload ``column``'s values at ascending row numbers."""
+        import numpy as np
+        import pyarrow as pa
+
+        if not len(rows):
+            return []
+        f, r = self.locate(rows)
+        out: list = []
+        cuts = np.flatnonzero(np.diff(f)) + 1
+        for lo, hi in zip(np.r_[0, cuts].tolist(), np.r_[cuts, len(f)].tolist()):
+            col = self.chunks[int(f[lo])].column(column)
+            if hi - lo <= 8:  # a few values: scalar reads beat a take's fixed cost
+                out.extend(col[i].as_py() for i in r[lo:hi].tolist())
+            else:
+                out.extend(col.take(pa.array(r[lo:hi])).to_pylist())
+        return out
+
+
+def _merge_runs(a, b):
+    """Two (sorted keys, row numbers) runs as one; equal keys keep ``a``'s
+    rows first (a stable sort of the concatenation, which finds the two
+    runs and merges them)."""
+    import numpy as np
+
+    if not len(a[0]):
+        return b
+    if not len(b[0]):
+        return a
+    keys = np.concatenate([a[0], b[0]])
+    o = np.argsort(keys, kind="stable")
+    return keys[o], np.concatenate([a[1], b[1]])[o]
+
+
 class Table:
     """One snapshot-committed table rooted at ``root``.
 
@@ -214,14 +368,17 @@ class Table:
             path = os.path.join(self.meta_dir, f"snap-{snap.snapshot_id}.json")
             tmp = path + f".tmp-{uuid.uuid4().hex}"
             with open(tmp, "w") as f:
-                json.dump(
-                    {
-                        "snapshot_id": snap.snapshot_id,
-                        "parent_id": snap.parent_id,
-                        "files": snap.files,
-                        "counters": snap.counters,
-                    },
-                    f,
+                # dumps, not dump: dump streams through the pure-Python
+                # encoder, and a manifest lists every live file
+                f.write(
+                    json.dumps(
+                        {
+                            "snapshot_id": snap.snapshot_id,
+                            "parent_id": snap.parent_id,
+                            "files": snap.files,
+                            "counters": snap.counters,
+                        }
+                    )
                 )
             os.replace(tmp, path)  # atomic manifest write
             head_tmp = self._head_path() + f".tmp-{uuid.uuid4().hex}"
@@ -604,8 +761,7 @@ class Table:
         return self._commit(keep + files, counters, parent)
 
     def is_empty(self) -> bool:
-        snap = self.current_snapshot()
-        return snap is None or not snap.files
+        return not has_files(self.current_snapshot())
 
 
 class Catalog:

@@ -10,9 +10,14 @@ the config, the manifests and the parquet footers (no Spark job):
 
   * the DRIVER tier runs the whole wave in this process — pyarrow reads,
     numpy and Python work, one pyarrow file per table committed through
-    the catalog — while the rows it would read (frontier + seen + stored
-    band rows) fit DRIVER_WAVE_ROW_BUDGET and nothing else needs
-    executors;
+    the catalog — while the rows it must decode fit DRIVER_WAVE_ROW_BUDGET
+    and nothing else needs executors. Those rows are the pending
+    frontier's and those of the seen, docs and band files its resident
+    indexes do not cover yet: each index (``catalog.ResidentIndex``) keeps
+    its table's rows sorted by key in driver memory and decodes only the
+    files appended since it last looked, so a wave's lookups cost what the
+    wave adds, not the crawl's history. The indexes hold at most
+    RESIDENT_INDEX_BYTES together;
   * the SPARK tier runs it as Spark jobs: waves over the budget, the
     cuckoo and partitioned-Bloom seen filters, per-page fetch cost
     (parse_work, fetch_latency_ms), and waves that would trip a dedup
@@ -45,8 +50,8 @@ the Spark tier is its reference.
      rules table; ``wg.robots_allows`` on the driver), deduplicated:
      min(depth) per url within the wave, Bloom-prefiltered against the
      seen set (bloom.py — no false negatives), then EXACT verification of
-     the Bloom-positive remainder (an anti-join; on the driver a pyarrow
-     scan of the seen files with url_hash pushed down).
+     the Bloom-positive remainder (an anti-join; on the driver a probe of
+     the resident seen index by url_hash, url compared).
   5. COMMIT — docs/seen/schedule/frontier/checkpoint snapshots, checkpoint
      LAST; every snapshot is tagged with the wave, so a killed job resumes
      from the last fully-committed wave (``resume()`` rolls each table back
@@ -71,7 +76,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from crawl4ai_llm_spark.catalog import Catalog
+from crawl4ai_llm_spark.catalog import Catalog, ResidentIndex, has_files
 from crawl4ai_llm_spark.frontier import bloom as bloom_mod
 from crawl4ai_llm_spark.frontier import cuckoo as cuckoo_mod
 from crawl4ai_llm_spark.frontier import webgraph as wg
@@ -109,19 +114,27 @@ if not _TEXT_READ_BYTES.strip().isdecimal():
     )
 DRIVER_TEXT_READ_BYTE_BUDGET = int(_TEXT_READ_BYTES)
 
-# Rows the driver tier of run_wave may read in one wave: the live rows of
-# the frontier, the seen set and (with content dedup) the stored band
-# table, summed from parquet footers before the wave starts. Above it the
-# wave runs on the Spark tier. Pinned from the measured crossover
-# (tools/bench_crawl_fatwave.py --tiers, local[4], content dedup on,
-# BENCH.md "Crawl wave tiers"): the driver tier won at 253k rows (10.3 s
-# vs 14.9 s) and lost at 496k (23.3 s vs 20.5 s) and 1.2M (32.1 s vs
-# 26.5 s); the log-linear crossing is ~415k. On those fat waves the
-# driver's cost is per scheduled URL (~0.4 ms, one core) and the rows
-# track the wave size; a thin wave over many rows stays cheaper on the
-# driver (6.7M rows, 63 URLs: 1.0 s vs 8.5 s), which this gate gives up
-# for a bound on what the driver reads and holds.
+# Rows the driver tier of run_wave may decode in one wave: the pending
+# frontier's, plus those of every live seen, docs and (with content dedup)
+# band file the resident indexes do not cover yet, summed from parquet
+# footers before the wave starts. Above it the wave runs on the Spark
+# tier. A warm index has decoded its history already, so a thin wave
+# over a long crawl counts only its frontier and the files the last wave
+# appended. Pinned from the measured crossover (tools/bench_crawl_fatwave.py
+# --tiers, local[4], content dedup on, BENCH.md "Crawl waves whose cost
+# does not grow with history"): on the fat waves the driver won at 223k
+# rows (8.7 s vs 14.7 s) and lost at 435k (18.1 s vs 15.9 s) and 1.0M
+# (30.1 s vs 24.6 s); the log-linear crossing is ~380k.
 DRIVER_WAVE_ROW_BUDGET = 400_000
+
+# Bytes the resident seen, docs and band indexes may hold together
+# (ResidentIndex.nbytes). A sync that takes them past it drops all three
+# and sends the wave to the Spark tier (``spark:index``). Measured at
+# ~23 bytes an indexed row (the same tool: fatwave scale 1's whole
+# 6.7M-row history holds 158 MB, so this holds ~11M rows); a cold
+# rebuild from DRIVER_WAVE_ROW_BUDGET rows stays far below it, so only a
+# long crawl's growth reaches it.
+RESIDENT_INDEX_BYTES = 256 << 20
 
 FETCH_RESULT_SCHEMA = T.StructType(
     [
@@ -197,6 +210,11 @@ def fetch_batch(spec, urls, attempts, parse_work: int = 0, latency_s: float = 0.
             for _ in range(parse_work):
                 d = hashlib.md5(d).digest()
     return oks, links, spans
+
+
+def _files(snap) -> list[str]:
+    """A snapshot's live files (none for a table without one)."""
+    return snap.files if snap else []
 
 
 def _doc_text(spans) -> str:
@@ -366,6 +384,16 @@ class FrontierEngine:
         self.tiers: Counter = Counter()
         self._rules_by_host: dict[str, dict] | None = None
         self._file_rows: dict[str, int] = {}  # parquet footer row counts
+        self._file_bytes: dict[str, int] = {}  # data file sizes
+        # driver-resident indexes (the driver tier's lookups; the band
+        # index is the dedup index's): seen rows by url_hash, docs rows by
+        # the murmur3 of their doc_id
+        self._seen_index = ResidentIndex(
+            ["url_hash", "url"], ["url"], lambda t: t.column("url_hash").to_numpy()
+        )
+        self._docs_index = ResidentIndex(
+            ["doc_id", "wave"], ["doc_id", "wave"], lambda t: spark_hash_strs(t.column("doc_id"))
+        )
 
     # ------------------------------------------------------------------ setup
 
@@ -395,57 +423,57 @@ class FrontierEngine:
             " ",
         )
 
-    def _read_doc_texts(self, doc_ids: list) -> dict | None:
-        """Driver-side pyarrow read of a FEW docs' texts by id — the
-        match driver tier's orig-side lookup: a filter-pushdown scan of
-        the docs table's parquet files costs ~0.07 s where the
-        equivalent Spark filter-collect job measured 1.1 s (per-action
-        scheduling, not bytes). Text rule: ``_doc_text``, which equals
-        _spans_text. Multiple rows per doc_id
-        (recrawl before rebuild_content_index): the MAX-WAVE row wins —
-        the repo's "latest fetch" rule (compaction rewrites files and
-        mixes waves, so append order is not a reliable proxy; ADVICE
-        r07). Ties inside one wave fall back to append order.
+    def _read_doc_texts(self, doc_ids: list, snap=None) -> dict | None:
+        """Driver-side read of a FEW docs' texts by id — the match driver
+        tier's orig-side lookup, with no Spark job (the equivalent Spark
+        filter-collect job measured 1.1 s, per-action scheduling, not
+        bytes). ``snap``: the docs table's snapshot when the caller has
+        read it. The resident docs index (doc_id and wave of every docs
+        row, keyed by the doc_id's murmur3) gives each id's rows; only the
+        files holding a chosen row are decoded, through the docs table's
+        ``read_file`` memo. Text rule: ``_doc_text``, which equals
+        _spans_text. Multiple rows per doc_id (recrawl before
+        rebuild_content_index): the MAX-WAVE row wins — the repo's
+        "latest fetch" rule (compaction rewrites files and mixes waves, so
+        append order is not a reliable proxy; ADVICE r07). Ties inside one
+        wave fall back to append order.
 
-        CORPUS-FOOTPRINT GATE (VERDICT r07 #2): doc_ids are URLs
-        appended in wave order, so parquet row-group stats do NOT prune
-        this predicate — the scan reads every live file. Bounded output
-        never bounded the scan; at 10⁹ docs every wave would pay a
-        driver-side full-corpus read. Above
-        ``DRIVER_TEXT_READ_BYTE_BUDGET`` live bytes this returns None
-        and the caller (match_documents_driver) falls back to the
-        distributed pushdown-pruned scan of the stored docs — the same
-        rows, executor-side. Crossover measured in
-        tools/bench_doc_text_read.py (BENCH.md r08)."""
-        import os as _os
+        Returns None, and the caller (match_documents_driver) falls back
+        to the distributed pushdown-pruned scan of the stored docs — the
+        same rows, executor-side — when the docs table's live bytes
+        exceed ``DRIVER_TEXT_READ_BYTE_BUDGET`` (a hit file is decoded
+        whole, and a fat wave writes its docs as one file; crossover of
+        the earlier full-scan read in tools/bench_doc_text_read.py,
+        BENCH.md r08), or when syncing the index would take the resident
+        indexes past RESIDENT_INDEX_BYTES."""
+        import numpy as np
 
-        import pyarrow.dataset as pads
-
-        snap = self.docs.current_snapshot()
-        if snap is None or not snap.files:
+        snap = self.docs.current_snapshot() if snap is None else snap
+        if not has_files(snap):
             return {}
-        total = 0
-        for f in snap.files:
-            try:
-                total += _os.path.getsize(f)
-            except OSError:
-                return None  # non-local/unsizable file: never risk the driver
-        if total > DRIVER_TEXT_READ_BYTE_BUDGET:
+        size = self._live_bytes(snap.files)
+        if size is None or size > DRIVER_TEXT_READ_BYTE_BUDGET:
+            return None  # non-local/unsizable file, or too big a corpus
+        index = self._docs_index
+        if not self._sync_index(index, snap):
             return None
-        tbl = pads.dataset(snap.files).to_table(
-            columns=["doc_id", "spans", "wave"],
-            filter=pads.field("doc_id").isin(doc_ids),
-        )
+        wanted = set(doc_ids)
+        rows, _ = index.find(spark_hash_strs(list(wanted)))
         best: dict = {}
-        for did, spans, wv in zip(
-            tbl.column("doc_id").to_pylist(),
-            tbl.column("spans").to_pylist(),
-            tbl.column("wave").to_pylist(),
+        for row, did, wv in zip(
+            rows.tolist(), index.take(rows, "doc_id"), index.take(rows, "wave")
         ):
+            if did not in wanted:
+                continue  # another id with the same hash
             wv = -1 if wv is None else wv
             if did not in best or wv >= best[did][0]:
-                best[did] = (wv, _doc_text(spans))
-        return {did: text for did, (_, text) in best.items()}
+                best[did] = (wv, row)
+        ids = list(best)
+        files, at = index.locate(np.array([best[did][1] for did in ids], dtype=np.int64))
+        return {
+            did: _doc_text(self.docs.read_file(index.files[f]).column("spans")[r].as_py())
+            for did, f, r in zip(ids, files.tolist(), at.tolist())
+        }
 
     def robots_df(self) -> DataFrame:
         """Tiny host→rules dimension — always broadcast (C7). Built from a
@@ -611,15 +639,16 @@ class FrontierEngine:
         # reassess from the rebuilt footprint next wave
         return "broadcast"
 
-    def _build_seen_blooms(self) -> None:
-        """Full broadcast-tier build from the seen snapshot: its files'
-        ``url_hash`` column streams through pyarrow one record batch at a
-        time, OR-ed into the bitmaps — no Spark job, and the driver never
-        holds more than one batch plus the bitmaps."""
+    def _build_seen_blooms(self, snap=None) -> None:
+        """Full broadcast-tier build from the seen snapshot (``snap`` when
+        the caller has read it): its files' ``url_hash`` column streams
+        through pyarrow one record batch at a time, OR-ed into the bitmaps
+        — no Spark job, and the driver never holds more than one batch
+        plus the bitmaps."""
         import pyarrow.parquet as pq
 
         self._blooms = {}
-        snap = self.seen.current_snapshot()
+        snap = self.seen.current_snapshot() if snap is None else snap
         for path in snap.files if snap else []:
             for batch in pq.ParquetFile(path).iter_batches(columns=["url_hash"]):
                 self._bloom_or(
@@ -647,19 +676,27 @@ class FrontierEngine:
     def run_wave(self, wave: int) -> dict[str, int]:
         """Run one crawl wave on the tier chosen for it, before any work,
         from config, manifests and parquet footers (``_wave_tier``): the
-        driver tier when everything the wave reads fits
-        DRIVER_WAVE_ROW_BUDGET, else the Spark tier. A driver wave that
-        trips a mid-wave dedup gate is dropped before any commit and
-        reruns on the Spark tier. ``tiers`` counts each wave's tier."""
+        driver tier when the rows the wave must decode — the pending
+        frontier and the files the resident indexes do not cover yet —
+        fit DRIVER_WAVE_ROW_BUDGET, else the Spark tier. A driver wave
+        that trips a mid-wave gate (a dedup gate, or the resident indexes
+        outgrowing RESIDENT_INDEX_BYTES) is dropped before any commit and
+        reruns on the Spark tier. ``tiers`` counts each wave's tier. The
+        wave's tables' snapshots are read once, here; commits read their
+        own parents."""
         cfg = self.config
         transport = self._resolve_transport() if cfg.seen_filter == "bloom" else None
         if transport is not None:
             self.transport_log.append(transport)
-        tier = self._wave_tier(transport)
-        stats = self._run_wave_driver(wave) if tier == "driver" else None
+        tables = [self.frontier, self.seen]
+        if cfg.content_dedup:
+            tables += [self.docs, self.dedup_index().minhash_bands]
+        snaps = {t: t.current_snapshot() for t in tables}
+        tier = self._wave_tier(transport, snaps)
+        stats = self._run_wave_driver(wave, snaps) if tier == "driver" else None
+        if isinstance(stats, str):  # declined mid-wave, nothing committed
+            tier, stats = f"spark:{stats}", None
         if stats is None:
-            if tier == "driver":
-                tier = "spark:dedup"
             stats = self._run_wave_spark(wave, transport)
         self.tiers[tier] += 1
         if "fetched" in stats and os.environ.get("CRAWL_WAVE_TIMING"):
@@ -680,26 +717,78 @@ class FrontierEngine:
             )
         return stats
 
-    def _live_rows(self, table) -> int:
-        """Rows of a table's live files, from their parquet footers
-        (files never change once written, so each is read once)."""
+    def _rows_of(self, files: list[str]) -> int:
+        """Rows of data files, from their parquet footers (files never
+        change once written, so each is read once)."""
         import pyarrow.parquet as pq
 
-        snap = table.current_snapshot()
         total = 0
-        for f in snap.files if snap else []:
+        for f in files:
             if f not in self._file_rows:
                 self._file_rows[f] = pq.read_metadata(f).num_rows
             total += self._file_rows[f]
         return total
 
-    def _wave_tier(self, transport: str | None) -> str:
+    def _live_rows(self, table) -> int:
+        """Rows of a table's live files."""
+        return self._rows_of(_files(table.current_snapshot()))
+
+    def _live_bytes(self, files: list[str]) -> int | None:
+        """Bytes of data files (each stat-ed once), None when one cannot
+        be sized (a non-local file: never risk the driver on it)."""
+        total = 0
+        for f in files:
+            if f not in self._file_bytes:
+                try:
+                    self._file_bytes[f] = os.path.getsize(f)
+                except OSError:
+                    return None
+            total += self._file_bytes[f]
+        return total
+
+    def _indexes(self) -> list[tuple]:
+        """(table, its resident index) for each table a driver wave looks
+        rows up in."""
+        out = [(self.seen, self._seen_index)]
+        if self.config.content_dedup:
+            idx = self.dedup_index()
+            out += [(self.docs, self._docs_index), (idx.minhash_bands, idx.band_index)]
+        return out
+
+    def resident_index_bytes(self) -> int:
+        """Bytes the resident indexes hold now."""
+        return sum(index.nbytes for _, index in self._indexes())
+
+    def _sync_index(self, index, snap) -> bool:
+        """Bring ``index`` to ``snap``'s file list. If the resident
+        indexes then hold more than RESIDENT_INDEX_BYTES, drop them all
+        and return False: the wave goes to the Spark tier."""
+        index.sync(_files(snap))
+        if self.resident_index_bytes() <= RESIDENT_INDEX_BYTES:
+            return True
+        for _, other in self._indexes():
+            other.reset()
+        return False
+
+    def _rows_to_decode(self, snaps: dict) -> tuple[int, int]:
+        """(pending frontier rows, rows a driver wave on ``snaps`` must
+        decode): the pending rows plus those of the live files of each
+        indexed table (``_indexes``) that its resident index does not
+        cover yet — what an index covers is decoded already. From
+        parquet footers."""
+        pending = self._rows_of(_files(snaps[self.frontier]))
+        cold = sum(self._rows_of(index.cold(_files(snaps[t]))) for t, index in self._indexes())
+        return pending, pending + cold
+
+    def _wave_tier(self, transport: str | None, snaps: dict) -> str:
         """"driver", or "spark:<reason>" for a wave the driver tier
         declines: the filter only the Spark tier runs (cuckoo,
         partitioned Bloom), per-page fetch cost that executor parallelism
-        exists for, more rows than DRIVER_WAVE_ROW_BUDGET, or a dedup
-        gate the wave's match would trip on the Spark tier's driver
-        path. No Spark job."""
+        exists for, more rows to decode (``_rows_to_decode``) than
+        DRIVER_WAVE_ROW_BUDGET, or a dedup gate the wave's match would
+        trip on the Spark tier's driver path. ``snaps``: the wave's
+        snapshots (``run_wave``). From manifests and parquet footers; no
+        Spark job."""
         from crawl4ai_llm_spark.operators import dedup
         from crawl4ai_llm_spark.operators import dedup_store as ds
 
@@ -708,24 +797,19 @@ class FrontierEngine:
             return "spark:filter"
         if cfg.parse_work or cfg.fetch_latency_ms:
             return "spark:fetch"
-        pending = self._live_rows(self.frontier)
-        rows = pending + self._live_rows(self.seen)
-        bands = self.dedup_index().minhash_bands if cfg.content_dedup else None
-        if bands is not None:
-            rows += self._live_rows(bands)
+        pending, rows = self._rows_to_decode(snaps)
         if rows > DRIVER_WAVE_ROW_BUDGET:
             return "spark:rows"
-        if bands is not None and not bands.is_empty() and not self.docs.is_empty():
+        docs = snaps.get(self.docs)
+        bands = snaps.get(self.dedup_index().minhash_bands) if cfg.content_dedup else None
+        if has_files(docs) and has_files(bands):
             # the wave's docs (at most the pending rows) against the
             # match's broadcast gate; the stored docs' bytes against the
             # orig-text read's gate
             if pending * dedup.N_BANDS > ds.BROADCAST_BAND_ROW_BUDGET:
                 return "spark:dedup"
-            try:
-                size = sum(os.path.getsize(f) for f in self.docs.current_snapshot().files)
-            except OSError:
-                return "spark:dedup"
-            if size > DRIVER_TEXT_READ_BYTE_BUDGET:
+            size = self._live_bytes(docs.files)
+            if size is None or size > DRIVER_TEXT_READ_BYTE_BUDGET:
                 return "spark:dedup"
         return "driver"
 
@@ -754,16 +838,19 @@ class FrontierEngine:
             for (url, host, depth), h in zip(kept, hashes)
         ]
 
-    def _run_wave_driver(self, wave: int) -> dict[str, int] | None:
+    def _run_wave_driver(self, wave: int, snaps: dict) -> dict[str, int] | str:
         """The driver tier of ``run_wave``: the whole wave in this process
         — pyarrow reads, numpy and Python work, one pyarrow file per table
         committed through ``Table._commit`` — and no Spark job. The same
         per-batch functions as the Spark tier (``fetch_batch``,
         ``bloom.might_contain``, ``dedup.text_signatures``,
         ``dedup_store.match_pairs``); only the relational glue is
-        written twice, and the Spark tier is its reference. Returns None,
-        having committed nothing, when the match trips
-        DRIVER_MATCH_DOC_BUDGET."""
+        written twice, and the Spark tier is its reference. Lookups in the
+        seen, band and docs tables go through their resident indexes,
+        synced to ``snaps`` (the wave's snapshots) where first used.
+        Returns the decline reason, having committed nothing, when the
+        match trips DRIVER_MATCH_DOC_BUDGET (``"dedup"``) or a sync takes
+        the indexes past RESIDENT_INDEX_BYTES (``"index"``)."""
         import time
 
         import numpy as np
@@ -773,6 +860,7 @@ class FrontierEngine:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         cfg = self.config
+        idx = self.dedup_index() if cfg.content_dedup else None
         marks: list[tuple[str, float]] = []
         t0 = [time.time()]
 
@@ -781,8 +869,8 @@ class FrontierEngine:
             marks.append((name, round(now - t0[0], 2)))
             t0[0] = now
 
-        snap = self.frontier.current_snapshot()
-        if snap is None or not snap.files:
+        snap = snaps[self.frontier]
+        if not has_files(snap):
             return {"scheduled": 0}
         fschema = to_arrow_schema(FRONTIER_ROW_SCHEMA)
         pending = pads.dataset(snap.files, schema=fschema).to_table()
@@ -851,22 +939,21 @@ class FrontierEngine:
         disc = self._frontier_rows(found)
         hashes = np.fromiter((r[1] for r in disc), dtype=np.int64, count=len(disc))
         is_new = np.ones(len(disc), dtype=bool)
-        seen_snap = self.seen.current_snapshot()
-        if seen_snap is not None and seen_snap.files:
+        seen_snap = snaps[self.seen]
+        if has_files(seen_snap):
             if cfg.seen_filter == "bloom":  # else "exact": cuckoo runs on Spark
                 if self._blooms is None:  # fresh engine / post-resume: full build
-                    self._build_seen_blooms()
+                    self._build_seen_blooms(seen_snap)
                 maybe = bloom_mod.might_contain(hashes, self._blooms, cfg.bloom_buckets)
             else:
                 maybe = np.ones(len(disc), dtype=bool)
             if maybe.any():
-                # exact verification of the positives: url_hash pushed
-                # into the seen snapshot's scan, url compared
-                hits = pads.dataset(seen_snap.files).to_table(
-                    columns=["url"],
-                    filter=pads.field("url_hash").isin(pa.array(hashes[maybe])),
-                )
-                seen_urls = set(hits.column(0).to_pylist())
+                # exact verification of the positives: the seen rows with
+                # their url_hash, from the resident index, url compared
+                if not self._sync_index(self._seen_index, seen_snap):
+                    return "index"
+                rows, _ = self._seen_index.find(hashes[maybe])
+                seen_urls = set(self._seen_index.take(rows, "url"))
                 for i in np.flatnonzero(maybe):
                     if disc[i][0] in seen_urls:
                         is_new[i] = False
@@ -885,7 +972,6 @@ class FrontierEngine:
         if cfg.content_dedup:
             from crawl4ai_llm_spark.operators import dedup
 
-            idx = self.dedup_index()
             texts = [_doc_text(spans[i]) for i in ok_idx]
             sigs = dedup.text_signatures(texts)
             signed = [j for j, sig in enumerate(sigs) if sig is not None]
@@ -895,16 +981,24 @@ class FrontierEngine:
                 else np.zeros((0, dedup.N_BANDS), dtype=np.int32)
             )
             signed_ids = [doc_ids[j] for j in signed]
-            if signed and not self.docs.is_empty() and not idx.minhash_bands.is_empty():
+            bands_snap, docs_snap = snaps[idx.minhash_bands], snaps[self.docs]
+            if signed and has_files(docs_snap) and has_files(bands_snap):
+                if not (
+                    self._sync_index(idx.band_index, bands_snap)
+                    and self._sync_index(self._docs_index, docs_snap)
+                ):
+                    return "index"
                 text_of = dict(zip(doc_ids, texts))
 
                 def pair_texts(need_new, need_orig):
-                    orig = self._read_doc_texts(need_orig)
+                    orig = self._read_doc_texts(need_orig, docs_snap)
                     return None if orig is None else ({d: text_of[d] for d in need_new}, orig)
 
-                pairs = idx.match_band_keys(signed_ids, keys, pair_texts, cfg.content_dedup_tau)
+                pairs = idx.match_band_keys(
+                    signed_ids, keys, pair_texts, cfg.content_dedup_tau, bands_snap
+                )
                 if pairs is None:
-                    return None  # a driver-size gate tripped: Spark tier
+                    return "dedup"  # a driver-size gate tripped: Spark tier
             mark("content_dedup_match")
         n_dups = len(pairs)
         skip = set()
@@ -964,7 +1058,7 @@ class FrontierEngine:
                     "band": np.tile(np.arange(dedup.N_BANDS, dtype=np.int32), len(rows)),
                     "key": keys[rows].ravel(),
                 }),
-                counters=idx.ingest_counters(n_fetched - len(skip), tag),
+                counters=idx.ingest_counters(n_fetched - len(skip), tag, snaps[idx.minhash_bands]),
                 spark_schema=BAND_ROW_SCHEMA,
             )
         if cfg.seen_filter == "bloom" and self._blooms is not None:

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from crawl4ai_llm_spark.catalog import Catalog, Table
+from crawl4ai_llm_spark.catalog import Catalog, ResidentIndex, Snapshot, Table, has_files
 
 JACCARD_TAU = 0.5
 COSINE_DUP_TAU = 0.9
@@ -79,8 +79,12 @@ PER_PART_PROBE_CAP = 200_000
 DRIVER_MATCH_DOC_BUDGET = 20_000
 
 
-def _require_scheme(table: Table, key: str, want: int, what: str) -> None:
-    snap = table.current_snapshot()
+def _require_scheme(
+    table: Table, key: str, want: int, what: str, snap: Snapshot | None = None
+) -> None:
+    """Raise unless ``table``'s snapshot (``snap`` when the caller has
+    read it, else the current one) was built under scheme ``want``."""
+    snap = table.current_snapshot() if snap is None else snap
     got = int(snap.counters.get(key, 1)) if snap else want
     if got != want:
         raise ValueError(
@@ -88,6 +92,15 @@ def _require_scheme(table: Table, key: str, want: int, what: str) -> None:
             f"{key}={want} — re-ingest the index (band keys from different "
             "schemes silently match nothing)"
         )
+
+
+def _packed_band_keys(table):
+    """``(key << 6) + band`` of a band table's rows: one int64 per
+    (band, key), the packing every match path probes with."""
+    import numpy as np
+
+    key = table.column("key").to_numpy().astype(np.int64)
+    return (key << np.int64(6)) + table.column("band").to_numpy()
 
 
 def _band_member_filter(stored_bd: DataFrame, bc) -> DataFrame:
@@ -215,6 +228,11 @@ class DedupIndex:
         self.catalog = Catalog(spark, warehouse)
         self.minhash_bands: Table = self.catalog.table("minhash_bands")
         self.sign_bands: Table = self.catalog.table("sign_bands")
+        # minhash_bands' rows by packed key, doc ids dictionary-decoded
+        # (32 rows a doc): match_band_keys' stored side
+        self.band_index = ResidentIndex(
+            ["doc_id", "band", "key"], ["doc_id"], _packed_band_keys, read_dictionary=["doc_id"]
+        )
 
     # ------------------------------------------------------------------ ingest
 
@@ -259,15 +277,18 @@ class DedupIndex:
         self.minhash_bands.append(bd, counters=self.ingest_counters(n, counters))
         return n
 
-    def ingest_counters(self, n_docs: int, counters: dict[str, int] | None = None) -> dict:
+    def ingest_counters(
+        self, n_docs: int, counters: dict[str, int] | None = None, snap: Snapshot | None = None
+    ) -> dict:
         """Counters of a ``minhash_bands`` commit that indexes ``n_docs``
         more documents: the caller's tags, the advanced ``n_docs`` and the
-        signature scheme (checked against the stored one first)."""
-        snap = self.minhash_bands.current_snapshot()
+        signature scheme (checked against the stored one first). ``snap``:
+        the table's snapshot when the caller has read it."""
+        snap = self.minhash_bands.current_snapshot() if snap is None else snap
         # a truncated (rolled-back-to-empty) table has a snapshot but no
         # files and no scheme counter — it is a fresh table, not a mismatch
-        if snap is not None and snap.files:
-            _require_scheme(self.minhash_bands, "sig_scheme", SIG_SCHEME, "minhash_bands")
+        if has_files(snap):
+            _require_scheme(self.minhash_bands, "sig_scheme", SIG_SCHEME, "minhash_bands", snap)
         prev = int(snap.counters.get("n_docs", 0)) if snap else 0
         return {**(counters or {}), "n_docs": prev + n_docs, "sig_scheme": SIG_SCHEME}
 
@@ -455,12 +476,13 @@ class DedupIndex:
                 # looping caller's cleanup loop releases it wave-by-wave
                 caches.append(bc)
 
+            # matched_bd ∝ colliding band rows (∝ true dups × bands): no
+            # broadcast hint, so the plan picks the join from its size
+            # estimate (autoBroadcastJoinThreshold, then AQE's runtime
+            # switch) rather than broadcasting a dup-heavy batch's matches
             matched_bd = _band_member_filter(stored_bd, bc)
-            # matched_bd ∝ colliding band rows (∝ true dups × bands) — the
-            # small side by construction; its broadcast build is trivial
             cand = (
-                F.broadcast(matched_bd)
-                .alias("o")
+                matched_bd.alias("o")
                 .join(
                     batch_bd.alias("n"),
                     (F.col("n.band") == F.col("o.band"))
@@ -472,10 +494,14 @@ class DedupIndex:
                 .distinct()
             )
         else:
+            # a shuffle join by hint: the planner sizes the stored side by
+            # its compressed parquet bytes, and broadcasting the decoded
+            # table it picked from that estimate ran the driver out of
+            # memory on a fat wave (fatwave scale 2, wave 4)
             cand = (
                 batch_bd.alias("n")
                 .join(
-                    stored_bd.alias("o"),
+                    stored_bd.hint("merge").alias("o"),
                     (F.col("n.band") == F.col("o.band"))
                     & (F.col("n.key") == F.col("o.key")),
                 )
@@ -686,45 +712,38 @@ class DedupIndex:
             new_ids, ck_all, mck, matched_pd["doc_id"].to_numpy(), texts, tau
         )
 
-    def match_band_keys(self, new_ids: list, keys, texts, tau: float = JACCARD_TAU) -> list | None:
+    def match_band_keys(
+        self, new_ids: list, keys, texts, tau: float = JACCARD_TAU, snap: Snapshot | None = None
+    ) -> list | None:
         """``match_documents_driver`` for a batch whose band keys the
         caller computed itself (``dedup.band_keys``; ``keys`` is (n,
         N_BANDS), one row per id in ``new_ids``), with no Spark job: the
-        stored side is a pyarrow scan of the band table's files — ``key``
-        and ``band`` read and packed, membership tested against the
-        batch's packed keys, ``doc_id`` taken for the hits only — then
-        ``match_pairs`` with the caller's ``texts``. Returns None when a
-        gate trips, like ``match_documents_driver``."""
+        stored side is ``band_index``, synced to ``snap`` (the band
+        table's snapshot when the caller has read it, else the current
+        one) — one searchsorted probe of its sorted packed keys gives the
+        matching band rows in file order, then row order, the order a
+        scan of the files returns them — then ``match_pairs`` with the
+        caller's ``texts``. Syncing decodes only the band files the index
+        does not cover yet. Returns None when a gate trips, like
+        ``match_documents_driver``."""
         import numpy as np
-        import pyarrow as pa
-        import pyarrow.dataset as pads
 
         from crawl4ai_llm_spark.operators import dedup
 
-        snap = self.minhash_bands.current_snapshot()
-        if snap is None or not snap.files:
+        snap = self.minhash_bands.current_snapshot() if snap is None else snap
+        if not has_files(snap):
             raise ValueError("dedup index is empty — ingest_documents first")
-        _require_scheme(self.minhash_bands, "sig_scheme", SIG_SCHEME, "minhash_bands")
+        _require_scheme(self.minhash_bands, "sig_scheme", SIG_SCHEME, "minhash_bands", snap)
         ck_all = (np.asarray(keys, dtype=np.int64) << np.int64(6)) + np.arange(
             dedup.N_BANDS, dtype=np.int64
         )
-        wanted = np.unique(ck_all.ravel())
-        m_ck, m_ids = [], []
-        for f in snap.files:
-            kb = pads.dataset(f).to_table(columns=["key", "band"])
-            ck = (kb.column("key").to_numpy().astype(np.int64) << np.int64(6)) + kb.column(
-                "band"
-            ).to_numpy()
-            hit = np.flatnonzero(np.isin(ck, wanted))
-            if len(hit):
-                m_ck.append(ck[hit])
-                ids = pads.dataset(f).to_table(columns=["doc_id"]).column(0)
-                m_ids.extend(ids.take(pa.array(hit)).to_pylist())
-        if not m_ck:
+        self.band_index.sync(snap.files)
+        rows, m_ck = self.band_index.find(ck_all.ravel())
+        if not len(rows):
             return []
         return match_pairs(
-            np.asarray(new_ids, dtype=object), ck_all, np.concatenate(m_ck),
-            np.asarray(m_ids, dtype=object), texts, tau,
+            np.asarray(new_ids, dtype=object), ck_all, m_ck,
+            np.asarray(self.band_index.take(rows, "doc_id"), dtype=object), texts, tau,
         )
 
     def match_embeddings(

@@ -23,9 +23,12 @@ wall a production crawler actually runs at; the default 0 is the
 instant-fetch worst case. `--tiers` instead crawls each scale twice with
 content dedup on, every wave forced onto one ``run_wave`` tier (driver,
 then Spark), and reports per-wave walls against the rows the tier
-decision reads: the DRIVER_WAVE_ROW_BUDGET crossover (``--waves``: stop
-each leg after N waves, default 8). Writes one JSON line per leg + a final
-summary JSON line; healthy-box evidence for BENCH.md's r06 table.
+decision counts (the pending frontier plus the files the resident
+indexes do not cover yet) and the bytes those indexes hold after the
+wave: the DRIVER_WAVE_ROW_BUDGET crossover and the RESIDENT_INDEX_BYTES
+footprint (``--waves``: stop each leg after N waves, default 8). Writes
+one JSON line per leg + a final summary JSON line; healthy-box evidence
+for BENCH.md's tables.
 """
 
 from __future__ import annotations
@@ -123,10 +126,11 @@ def run_tier_leg(spark, scale: int, tier: str, max_waves: int = 8,
                  max_wave_s: float = 150.0) -> dict:
     """One content-dedup crawl of the scale's graph with every wave on one
     ``run_wave`` tier (``DRIVER_WAVE_ROW_BUDGET`` set past any size, or to
-    0). Per wave: the rows the tier decision reads (frontier + seen +
-    stored band rows, from parquet footers), the scheduled URLs and the
-    wall. A leg stops after ``max_waves`` or a wave longer than
-    ``max_wave_s``."""
+    0). Per wave: the rows the tier decision counts (``_rows_to_decode``,
+    from parquet footers), the rows the frontier, seen and band tables
+    hold (what the gate counted before the resident indexes), the
+    scheduled URLs, the wall and the resident index bytes after the wave.
+    A leg stops after ``max_waves`` or a wave longer than ``max_wave_s``."""
     from crawl4ai_llm_spark.frontier import engine as eng_mod
     from crawl4ai_llm_spark.frontier import webgraph as wg
     from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
@@ -143,14 +147,17 @@ def run_tier_leg(spark, scale: int, tier: str, max_waves: int = 8,
             eng.init_seeds(wg.seed_urls(spec, n_seeds=1000 * scale))
             bands = eng.dedup_index().minhash_bands
             for w in range(1, cfg.max_waves + 1):
-                rows = sum(eng._live_rows(t) for t in (eng.frontier, eng.seen, bands))
+                snaps = {t: t.current_snapshot() for t in (eng.frontier, eng.seen, eng.docs, bands)}
+                rows = eng._rows_to_decode(snaps)[1]
+                held = sum(eng._live_rows(t) for t in (eng.frontier, eng.seen, bands))
                 t0 = time.time()
                 stats = eng.run_wave(w)
                 wall = time.time() - t0
                 if not stats.get("scheduled"):
                     break
-                waves.append({"wave": w, "rows": rows, "scheduled": stats["scheduled"],
-                              "wall_sec": round(wall, 2)})
+                waves.append({"wave": w, "rows": rows, "held_rows": held,
+                              "scheduled": stats["scheduled"], "wall_sec": round(wall, 2),
+                              "resident_bytes": eng.resident_index_bytes()})
                 if wall > max_wave_s:
                     break
             tiers = dict(eng.tiers)
@@ -161,8 +168,9 @@ def run_tier_leg(spark, scale: int, tier: str, max_waves: int = 8,
 
 def tiers_main(spark, scales: list[int], max_waves: int) -> None:
     """``--tiers``: the driver/Spark tier crossover, in the rows a wave's
-    tier decision reads. Prints each leg, then per scale and wave both
-    tiers' walls and the smallest row count at which the Spark tier won."""
+    tier decision counts. Prints each leg, then per scale and wave both
+    tiers' walls, the driver leg's resident index bytes, and the smallest
+    row count at which the Spark tier won."""
     rows = []
     for scale in scales:
         legs = {}
@@ -171,8 +179,9 @@ def tiers_main(spark, scales: list[int], max_waves: int) -> None:
             print(json.dumps(legs[tier]), flush=True)
         for d, s in zip(legs["driver"]["waves"], legs["spark"]["waves"]):
             rows.append({"scale": scale, "wave": d["wave"], "rows": d["rows"],
-                         "scheduled": d["scheduled"], "driver_sec": d["wall_sec"],
-                         "spark_sec": s["wall_sec"]})
+                         "held_rows": d["held_rows"], "scheduled": d["scheduled"],
+                         "driver_sec": d["wall_sec"], "spark_sec": s["wall_sec"],
+                         "resident_bytes": d["resident_bytes"]})
     spark_wins = [r["rows"] for r in rows if r["spark_sec"] < r["driver_sec"]]
     print(json.dumps({"summary": rows,
                       "crossover_rows": min(spark_wins) if spark_wins else None}))
