@@ -23,9 +23,6 @@ frontier    The crawl-side engine mandated by the north rule: URL-seen set
             (Bloom + exact verification tier), per-host politeness budgets
             with hot-host salting, priority-queue wave scheduler, robots
             rules broadcast join, checkpoint/resume.
-multimodal  Interleaved text+media span documents: schema, span extraction,
-            binary-column decode plumbing (decode itself stubbed — codec
-            libs absent in this environment).
 """
 
 from crawl4ai_llm_spark.session import get_spark

@@ -8,8 +8,9 @@ the crawl already does: the first build streams the seen table's
 hashes of the action that materializes its new links, so no Spark job
 exists only to build a filter. Probing happens driver-broadcast: the
 per-bucket bitmaps (n_buckets × m/8 bytes ≈ 1 MB at defaults) are
-broadcast once per wave and probed by a vectorized pandas UDF whose body,
-``might_contain``, the crawl's driver tier calls in-process.
+broadcast once per wave and probed by a vectorized pandas UDF whose body
+is ``might_contain``. The crawl's driver tier runs no Bloom: its seen
+index is exact and in memory, so a Bloom there would decide nothing.
 
 Guarantee: NO false negatives — ``might_contain == False`` proves a URL is
 new. Bloom-positive candidates still go through the exact anti-join, so the
@@ -100,8 +101,7 @@ def probe_expr(df: DataFrame, blooms: dict[int, bytes], n_buckets: int = 64):
 
 def might_contain(hashes, blooms: dict[int, bytes], n_buckets: int = 64) -> np.ndarray:
     """Bloom verdict per int64 hash against per-bucket bitmaps: False ⇒
-    provably never added. The body of ``probe_expr``'s UDF; the crawl's
-    driver tier calls it in-process."""
+    provably never added. The body of ``probe_expr``'s UDF."""
     h = np.ascontiguousarray(hashes, dtype=np.int64)
     buckets = _buckets(h, n_buckets)
     out = np.zeros(len(h), dtype=bool)

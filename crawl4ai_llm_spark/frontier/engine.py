@@ -24,9 +24,9 @@ the config, the manifests and the parquet footers (no Spark job):
     gate. ``tiers`` counts both.
 
 Both tiers share every per-batch function (fetch_batch,
-bloom.might_contain, dedup.text_signatures, dedup_store.match_pairs) and
-write the same rows; only the relational glue below exists twice, and
-the Spark tier is its reference.
+dedup.text_signatures, dedup_store.match_pairs) and write the same rows;
+only the relational glue below exists twice, and the Spark tier is its
+reference.
 
   1. POLITENESS + PRIORITY DRAIN — per-host budget
      B = max(1, ⌊wave_seconds / crawl_delay⌋) (robots override, else the
@@ -48,10 +48,12 @@ the Spark tier is its reference.
      each page's links while it visits the page; no Python stage here),
      are murmur3-hashed, robots-filtered (broadcast join against the tiny
      rules table; ``wg.robots_allows`` on the driver), deduplicated:
-     min(depth) per url within the wave, Bloom-prefiltered against the
-     seen set (bloom.py — no false negatives), then EXACT verification of
-     the Bloom-positive remainder (an anti-join; on the driver a probe of
-     the resident seen index by url_hash, url compared).
+     min(depth) per url within the wave, then checked against the seen
+     set. The Spark tier Bloom-prefilters (bloom.py — no false
+     negatives) and verifies the positives EXACTLY with an anti-join;
+     the driver tier probes the resident seen index by url_hash for
+     every discovery, url compared (an exact in-memory index leaves a
+     Bloom nothing to decide).
   5. COMMIT — docs/seen/schedule/frontier/checkpoint snapshots, checkpoint
      LAST; every snapshot is tagged with the wave, so a killed job resumes
      from the last fully-committed wave (``resume()`` rolls each table back
@@ -240,7 +242,6 @@ class CrawlConfig:
     # "bloom" (C3, incremental bitmap OR), "cuckoo" (C4's deletable
     # variant — supports evict-for-recrawl), or "exact" (anti-join only)
     seen_filter: str = "bloom"
-    use_bloom: bool = True  # back-compat alias; False ⇒ "exact"
     bloom_buckets: int = 64
     # Transport is a SIZE-DEPENDENT tradeoff (both measured, BENCH.md):
     # - "broadcast" (default): bitmaps collect to the driver and broadcast.
@@ -338,8 +339,6 @@ class CrawlConfig:
                 "bloom_transport must be 'broadcast', 'partitioned' or 'auto', got "
                 f"{self.bloom_transport!r}"
             )
-        if not self.use_bloom and self.seen_filter == "bloom":
-            self.seen_filter = "exact"
 
 
 def score_expr(hash_col) -> F.Column:
@@ -630,25 +629,24 @@ class FrontierEngine:
         cfg = self.config
         if cfg.bloom_transport != "auto":
             return cfg.bloom_transport
-        if self._blooms is not None:
-            size = sum(len(b) for b in self._blooms.values())
-            return "partitioned" if size > cfg.broadcast_budget_bytes else "broadcast"
-        if not self.blooms_table.is_empty():
-            return "partitioned"
-        # no filter state yet (fresh engine / post-resume): start broadcast,
-        # reassess from the rebuilt footprint next wave
-        return "broadcast"
+        if self._blooms is None:
+            if not self.blooms_table.is_empty():
+                return "partitioned"
+            # no driver copy (fresh engine, post-resume, or driver-tier
+            # waves, which keep none): the footprint decides, so build it
+            self._build_seen_blooms()
+        size = sum(len(b) for b in self._blooms.values())
+        return "partitioned" if size > cfg.broadcast_budget_bytes else "broadcast"
 
-    def _build_seen_blooms(self, snap=None) -> None:
-        """Full broadcast-tier build from the seen snapshot (``snap`` when
-        the caller has read it): its files' ``url_hash`` column streams
-        through pyarrow one record batch at a time, OR-ed into the bitmaps
-        — no Spark job, and the driver never holds more than one batch
-        plus the bitmaps."""
+    def _build_seen_blooms(self) -> None:
+        """Full broadcast-tier build from the current seen snapshot: its
+        files' ``url_hash`` column streams through pyarrow one record
+        batch at a time, OR-ed into the bitmaps — no Spark job, and the
+        driver never holds more than one batch plus the bitmaps."""
         import pyarrow.parquet as pq
 
         self._blooms = {}
-        snap = self.seen.current_snapshot() if snap is None else snap
+        snap = self.seen.current_snapshot()
         for path in snap.files if snap else []:
             for batch in pq.ParquetFile(path).iter_batches(columns=["url_hash"]):
                 self._bloom_or(
@@ -843,11 +841,12 @@ class FrontierEngine:
         — pyarrow reads, numpy and Python work, one pyarrow file per table
         committed through ``Table._commit`` — and no Spark job. The same
         per-batch functions as the Spark tier (``fetch_batch``,
-        ``bloom.might_contain``, ``dedup.text_signatures``,
-        ``dedup_store.match_pairs``); only the relational glue is
-        written twice, and the Spark tier is its reference. Lookups in the
-        seen, band and docs tables go through their resident indexes,
-        synced to ``snaps`` (the wave's snapshots) where first used.
+        ``dedup.text_signatures``, ``dedup_store.match_pairs``); only the
+        relational glue is written twice, and the Spark tier is its
+        reference. Lookups in the seen, band and docs tables go through
+        their resident indexes, synced to ``snaps`` (the wave's snapshots)
+        where first used; the seen index is exact, so no Bloom runs here
+        (a Bloom a Spark-tier wave built is still kept current at commit).
         Returns the decline reason, having committed nothing, when the
         match trips DRIVER_MATCH_DOC_BUDGET (``"dedup"``) or a sync takes
         the indexes past RESIDENT_INDEX_BYTES (``"index"``)."""
@@ -941,22 +940,13 @@ class FrontierEngine:
         is_new = np.ones(len(disc), dtype=bool)
         seen_snap = snaps[self.seen]
         if has_files(seen_snap):
-            if cfg.seen_filter == "bloom":  # else "exact": cuckoo runs on Spark
-                if self._blooms is None:  # fresh engine / post-resume: full build
-                    self._build_seen_blooms(seen_snap)
-                maybe = bloom_mod.might_contain(hashes, self._blooms, cfg.bloom_buckets)
-            else:
-                maybe = np.ones(len(disc), dtype=bool)
-            if maybe.any():
-                # exact verification of the positives: the seen rows with
-                # their url_hash, from the resident index, url compared
-                if not self._sync_index(self._seen_index, seen_snap):
-                    return "index"
-                rows, _ = self._seen_index.find(hashes[maybe])
-                seen_urls = set(self._seen_index.take(rows, "url"))
-                for i in np.flatnonzero(maybe):
-                    if disc[i][0] in seen_urls:
-                        is_new[i] = False
+            # the seen rows with each discovery's url_hash, from the
+            # resident index, url compared
+            if not self._sync_index(self._seen_index, seen_snap):
+                return "index"
+            rows, _ = self._seen_index.find(hashes)
+            seen_urls = set(self._seen_index.take(rows, "url"))
+            is_new = np.fromiter((r[0] not in seen_urls for r in disc), bool, len(disc))
             mark("probed_count")
         new_rows = [r for r, keep in zip(disc, is_new) if keep]
         new_hashes = hashes[is_new]

@@ -284,6 +284,38 @@ def test_decline_reason_rows(spark, tmp_path, monkeypatch):
     assert eng.transport_log == ["broadcast", "broadcast"]
 
 
+def test_spark_wave_hands_its_bloom_to_driver_waves(spark, tmp_path, runs, oracle):
+    """Driver waves keep no Bloom: the resident seen index is exact. A
+    Spark-tier wave builds the Bloom once from the seen table, and the
+    driver waves after it keep it current, so at the end it equals a
+    fresh build over every seen url_hash."""
+    eng = _engine(spark, tmp_path, content_dedup=False)
+    eng.init_seeds(SEEDS)
+    wave = 0
+    while True:
+        wave += 1
+        with pytest.MonkeyPatch.context() as mp:
+            if wave == 3:
+                assert eng._blooms is None
+                mp.setattr(eng_mod, "DRIVER_WAVE_ROW_BUDGET", 0)
+            if not eng.run_wave(wave).get("scheduled"):
+                break
+    assert wave > 4
+    assert eng.tiers == {"spark:rows": 1, "driver": wave - 1}
+    seen = eng.seen.read().select("url_hash", "url").collect()
+    assert {r["url"] for r in seen} == oracle.seen
+    first: dict = {}
+    for r in eng.schedule.read().collect():
+        first[r["url"]] = min(first.get(r["url"], r["wave"]), r["wave"])
+    assert first == oracle.wave_of
+    assert eng._blooms == bloom_mod.blooms_from_hashes(
+        [r["url_hash"] for r in seen], eng.config.bloom_buckets
+    )
+    # a crawl that stays on the driver tier never builds one
+    driver_only = runs("driver", "flag")
+    assert set(driver_only.tiers) == {"driver"} and driver_only._blooms is None
+
+
 @pytest.mark.parametrize(
     "module,gate",
     [
