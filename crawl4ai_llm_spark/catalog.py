@@ -6,9 +6,17 @@ has no Iceberg runtime jar and no network, so the same contract is provided
 by partitioned Parquet directories plus a JSON *manifest log*: every commit
 writes new parquet files under ``data/`` and then atomically publishes a new
 manifest (snapshot id, list of live files, counters) via rename. Readers
-resolve the latest manifest and read exactly its file list — giving the
+resolve HEAD and read exactly its manifest's file list — giving the
 atomic-commit, read-committed, resume-from-snapshot semantics the north rule
 requires, with a one-line swap to Iceberg when the jar is present.
+
+A commit is optimistic: it names the snapshot it read (its parent) and
+publishes the child id only if no other writer published it first, else it
+raises ``StorageError`` (SURVEY.md X4; the reference's JSON index is
+last-writer-wins). Published manifests never change, so each ``Table``
+keeps the last one it read or published and re-parses a manifest only when
+HEAD names another one — a call on a table nobody else writes reads HEAD
+and nothing else of the log.
 
 Why not plain ``df.write.parquet(mode="append")``: a killed job would leave
 half-written files visible to the next reader. The manifest makes a wave's
@@ -287,9 +295,15 @@ class Table:
     place — a commit only publishes a new file list (``expire_snapshots``
     deletes files, never edits them). So a file's decoded rows stay valid
     for as long as the file is live, which is what ``read_file``'s memo
-    relies on: it keeps decoded files by path, filled on read only, drops
-    an entry as soon as its file leaves the current snapshot, and holds at
-    most FILE_MEMO_BYTES of Arrow data (least recently read out first).
+    relies on: it keeps decoded files by path, filled by reads and by
+    ``commit_arrow_buckets`` (each file it writes, in the form a read
+    decodes it to), drops an entry as soon as its file leaves the current
+    snapshot, and holds at most FILE_MEMO_BYTES of Arrow data (least
+    recently read out first).
+
+    ``current_snapshot`` returns the cached snapshot while HEAD names the
+    same manifest, so callers share it: they must not edit its ``files``
+    or ``counters`` in place (every commit builds new ones).
     """
 
     def __init__(
@@ -306,6 +320,10 @@ class Table:
         self.data_dir = os.path.join(root, "data")
         self.meta_dir = os.path.join(root, "meta")
         self._memo = _FileMemo()
+        # (manifest identity, Snapshot, {file: bucket} or None) of the last
+        # snapshot read or published; one tuple, so threads never see a
+        # torn pair
+        self._head: tuple | None = None
         try:
             os.makedirs(self.data_dir, exist_ok=True)
             os.makedirs(self.meta_dir, exist_ok=True)
@@ -322,19 +340,71 @@ class Table:
     def _head_path(self) -> str:
         return os.path.join(self.meta_dir, "HEAD")
 
-    def current_snapshot(self) -> Snapshot | None:
+    def _manifest_path(self, snapshot_id: int) -> str:
+        return os.path.join(self.meta_dir, f"snap-{snapshot_id}.json")
+
+    def _read_head(self) -> int | None:
+        """The snapshot id HEAD names, None before the first commit."""
         try:
             with open(self._head_path()) as f:
-                sid = int(f.read().strip())
+                return int(f.read().strip())
         except FileNotFoundError:
-            self._memo.retain([])
             return None
+
+    def _manifest_key(self, snapshot_id: int) -> tuple:
+        """What identifies one published manifest file: its id, inode,
+        mtime and size — a dropped and re-created table that reaches the
+        same id again has a different file."""
+        st = os.stat(self._manifest_path(snapshot_id))
+        return snapshot_id, st.st_ino, st.st_mtime_ns, st.st_size
+
+    def current_snapshot(self) -> Snapshot | None:
+        """The snapshot HEAD names: one HEAD read, plus a manifest parse
+        only when HEAD names another manifest than the cached one."""
+        sid = self._read_head()
+        if sid is None:
+            self._remember(None)
+            return None
+        key = self._manifest_key(sid)
+        cached = self._head
+        if cached is not None and cached[0] == key:
+            return cached[1]
         snap = self.snapshot(sid)
-        self._memo.retain(snap.files)  # a file that left the snapshot leaves the memo
+        self._remember(snap, key)
         return snap
 
+    def _remember(self, snap: Snapshot | None, key: tuple | None = None, buckets=None) -> None:
+        """Cache ``snap`` as the current snapshot — on a bucketed table
+        with each live file's bucket, parsed only for files the previous
+        one did not hold and the caller (``buckets``) does not know — and
+        shed every memo entry whose file left it."""
+        if snap is None:
+            self._head = None
+            self._memo.retain([])
+            return
+        bucket_of = None
+        if self.bucket_by is not None:
+            old = (self._head[2] if self._head is not None else None) or {}
+            new = buckets or {}
+            bucket_of = {
+                f: new[f] if f in new else old[f] if f in old else self._file_bucket(f)
+                for f in snap.files
+            }
+        self._head = (key, snap, bucket_of)
+        self._memo.retain(snap.files)
+
+    def file_buckets(self, snap: Snapshot) -> dict[str, int | None]:
+        """{file: bucket id, None for a legacy unbucketed file} over the
+        snapshot's files, in its file order — cached for a bucketed
+        table's current snapshot, so ``_file_bucket`` runs once per file,
+        not once per call."""
+        cached = self._head
+        if cached is not None and cached[1] is snap and cached[2] is not None:
+            return cached[2]
+        return {f: self._file_bucket(f) for f in snap.files}
+
     def snapshot(self, snapshot_id: int) -> Snapshot:
-        with open(os.path.join(self.meta_dir, f"snap-{snapshot_id}.json")) as f:
+        with open(self._manifest_path(snapshot_id)) as f:
             d = json.load(f)
         return Snapshot(d["snapshot_id"], d["files"], d.get("counters", {}), d.get("parent_id"))
 
@@ -363,9 +433,19 @@ class Table:
                 n += 1
         return n
 
-    def _publish(self, snap: Snapshot) -> None:
+    def _publish(self, snap: Snapshot, buckets: dict | None = None) -> None:
+        """Publish ``snap``, the child of the snapshot HEAD named when the
+        caller read it (id ``snap.snapshot_id - 1``; none for id 1).
+
+        The manifest is hard-linked into place, which fails if its id is
+        already published: another writer committed since the caller's
+        read, and this commit raises ``StorageError`` naming both ids
+        instead of overwriting it. The one exception is a manifest HEAD
+        never reached — left by a publish killed before its pointer swap —
+        which is replaced, as it always was. ``buckets``: the new files'
+        bucket ids, when the caller knows them."""
+        path = self._manifest_path(snap.snapshot_id)
         try:
-            path = os.path.join(self.meta_dir, f"snap-{snap.snapshot_id}.json")
             tmp = path + f".tmp-{uuid.uuid4().hex}"
             with open(tmp, "w") as f:
                 # dumps, not dump: dump streams through the pure-Python
@@ -380,12 +460,25 @@ class Table:
                         }
                     )
                 )
-            os.replace(tmp, path)  # atomic manifest write
+            try:
+                os.link(tmp, path)  # atomic, and only if the id is free
+                os.unlink(tmp)
+            except FileExistsError:
+                head = self._read_head()
+                if head != (snap.snapshot_id - 1 or None):
+                    os.unlink(tmp)
+                    from crawl4ai_llm_spark.errors import StorageError
+
+                    raise StorageError(
+                        f"commit conflict on {self.root}: read snapshot "
+                        f"{snap.snapshot_id - 1 or None}, HEAD is now {head}"
+                    ) from None
+                os.replace(tmp, path)  # an orphan of a killed publish
             head_tmp = self._head_path() + f".tmp-{uuid.uuid4().hex}"
             with open(head_tmp, "w") as f:
                 f.write(str(snap.snapshot_id))
             os.replace(head_tmp, self._head_path())  # atomic pointer swap
-            self._memo.retain(snap.files)
+            self._remember(snap, self._manifest_key(snap.snapshot_id), buckets)
         except OSError as e:
             from crawl4ai_llm_spark.errors import StorageConnectionError
 
@@ -435,7 +528,11 @@ class Table:
         return int(m.group(1)) if m else None
 
     def _commit(
-        self, files: list[str], counters: dict[str, int] | None, parent: Snapshot | None
+        self,
+        files: list[str],
+        counters: dict[str, int] | None,
+        parent: Snapshot | None,
+        buckets: dict | None = None,
     ) -> Snapshot:
         """Publish ``files`` as the live set of a new child of ``parent``
         (the snapshot the caller read before writing) — every commit but
@@ -446,7 +543,7 @@ class Table:
             counters or {},
             parent.snapshot_id if parent else None,
         )
-        self._publish(snap)
+        self._publish(snap, buckets)
         return snap
 
     def _write_arrow(self, table, spark_schema=None) -> str:
@@ -608,7 +705,7 @@ class Table:
         files = snap.files
         if buckets is not None:
             files = [
-                f for f in files if (b := self._file_bucket(f)) is None or b in buckets
+                f for f, b in self.file_buckets(snap).items() if b is None or b in buckets
             ]
             if not files:
                 return None
@@ -654,10 +751,8 @@ class Table:
         memoized (see the class docstring) — under ``schema`` when given,
         as a dataset scan with that schema reads the file (``conform``);
         the memo keeps that form too, so a scan whose schema did not
-        change conforms nothing again. Only reads fill the memo: a
-        commit's own table is not the table its file decodes to (INT96
-        stamps read back as ns). A file larger than FILE_MEMO_BYTES is
-        decoded, not kept."""
+        change conforms nothing again. A file larger than FILE_MEMO_BYTES
+        is decoded, not kept."""
         entry = self._memo.get(path)
         if entry is not None:
             decoded, shaped, _ = entry
@@ -694,12 +789,12 @@ class Table:
         legacy layout into the bucketed one (store-level entry point:
         ProductStore.compact)."""
         parent = self.current_snapshot()
-        old = parent.files if parent else []
-        if any(self._file_bucket(f) is None for f in old):
+        old = self.file_buckets(parent) if parent else {}
+        if None in old.values():
             raise ValueError(
                 "replace_buckets on a table with unbucketed files — compact first"
             )
-        keep = [f for f in old if self._file_bucket(f) not in buckets]
+        keep = [f for f, b in old.items() if b not in buckets]
         files = self._write_files(df)
         for f in files:
             if self._file_bucket(f) not in buckets:
@@ -711,6 +806,7 @@ class Table:
         tables: dict,
         replace: bool,
         counters: dict[str, int] | None = None,
+        parent: Snapshot | None = None,
     ) -> Snapshot:
         """Driver-side bucketed commit WITHOUT a Spark job — the Arrow
         sibling of append_pylist (no job) and replace_buckets (bucket
@@ -718,12 +814,18 @@ class Table:
         rows; each non-empty one becomes ONE ``_bucket=K/part-0.parquet``.
         ``replace=True`` drops the listed buckets' current files (an empty
         table then empties its bucket); ``replace=False`` appends.
+        ``parent``: the snapshot the caller read the rows from (default:
+        the current one); the commit raises ``StorageError`` if another
+        writer committed after it (``_publish``).
 
         Files match what Spark writes for the same rows: INT96 timestamps
         and no stored Arrow or Spark row schema, so a ``mergeSchema`` read
         derives every file's types from the same parquet physical schema.
-        Same invariants as replace_buckets: refuses a table with legacy
-        unbucketed files, and raises ValueError for any row whose
+        Each file also enters the decoded-file memo as a read would decode
+        it (the footer's types: INT96 as ``timestamp[ns]``, its
+        nullability, no schema metadata), so the next read of it decodes
+        nothing. Same invariants as replace_buckets: refuses a table with
+        legacy unbucketed files, and raises ValueError for any row whose
         ``pmod(hash(col), n)`` (``hashing.spark_buckets``) is not the
         bucket it is filed under, a null key included."""
         import pyarrow.parquet as pq
@@ -731,9 +833,10 @@ class Table:
         from crawl4ai_llm_spark.frontier.hashing import spark_buckets
 
         col, n = self.bucket_by
-        parent = self.current_snapshot()
-        old = parent.files if parent else []
-        if any(self._file_bucket(f) is None for f in old):
+        if parent is None:
+            parent = self.current_snapshot()
+        old = self.file_buckets(parent) if parent else {}
+        if None in old.values():
             raise ValueError(
                 "commit_arrow_buckets on a table with unbucketed files — compact first"
             )
@@ -744,21 +847,29 @@ class Table:
                 key = keys[int(wrong[0])].as_py()
                 raise ValueError(f"row {key!r} does not belong in bucket {k}")
         out_dir = os.path.join(self.data_dir, f"commit-{uuid.uuid4().hex}")
-        files = []
+        written = {}  # path -> (bucket, the file's rows as a read decodes them)
         for k, t in sorted(tables.items()):
             if t.num_rows == 0:
                 continue
             path = os.path.join(out_dir, f"_bucket={k}", "part-0.parquet")
             os.makedirs(os.path.dirname(path))
+            t = t.replace_schema_metadata(None)
+            footer: list = []
             pq.write_table(
-                t.replace_schema_metadata(None),
+                t,
                 path,
                 use_deprecated_int96_timestamps=True,
                 store_schema=False,
+                metadata_collector=footer,
             )
-            files.append(path)
-        keep = [f for f in old if self._file_bucket(f) not in tables] if replace else old
-        return self._commit(keep + files, counters, parent)
+            written[path] = k, t.cast(footer[0].schema.to_arrow_schema()).combine_chunks()
+        keep = [f for f, b in old.items() if b not in tables] if replace else list(old)
+        snap = self._commit(
+            keep + list(written), counters, parent, {f: k for f, (k, _) in written.items()}
+        )
+        for path, (_, decoded) in written.items():
+            self._memo.put(path, decoded, decoded)
+        return snap
 
     def is_empty(self) -> bool:
         return not has_files(self.current_snapshot())

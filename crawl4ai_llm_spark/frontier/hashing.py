@@ -10,7 +10,8 @@ hash, SURVEY.md §8.3 ruling). Two forms of the same function:
 - ``spark_hash_strs``: the numpy kernel the engine's driver tiers use, a
   whole string column per call (a pyarrow string array's offsets and
   data buffer, or a list of str). ``spark_buckets`` is the one
-  driver-side bucket rule, ``pmod(hash, n)``, built on it.
+  driver-side bucket rule, ``pmod(hash, n)``: the scalar form for a few
+  values, the kernel for more.
 
 Public algorithm (Austin Appleby, public domain).
 """
@@ -166,10 +167,20 @@ def spark_hash_strs(values) -> np.ndarray:
     return out
 
 
+# inputs up to this many values hash one by one with spark_hash_str: the
+# kernel's numpy set-up (~140 us) costs more than ~5 us a short string
+SCALAR_HASH_MAX = 16
+
+
 def spark_buckets(values, n: int) -> np.ndarray:
     """The driver-side bucket rule: ``pmod(hash(value), n)`` per value, as
     ``Table._write_files`` files a row under ``_bucket=K/`` — int64, and
-    -1 for a null, which no bucket holds."""
+    -1 for a null, which no bucket holds. Up to SCALAR_HASH_MAX values
+    take the scalar ``spark_hash_str``, more the kernel."""
+    if len(values) <= SCALAR_HASH_MAX:
+        if not isinstance(values, list) or not all(isinstance(v, str) for v in values):
+            values = _string_array(values).to_pylist()
+        return np.array([-1 if v is None else spark_hash_str(v) % n for v in values], np.int64)
     arr = _string_array(values)
     out = np.mod(spark_hash_strs(arr).astype(np.int64), n)
     if arr.null_count:

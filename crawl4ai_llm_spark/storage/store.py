@@ -35,10 +35,15 @@ the sort run in Arrow/Python, and ``Table.commit_arrow_buckets`` commits
 one file per touched bucket — no Spark job at all (a one-row write as
 Spark jobs costs 4-8 jobs and ~0.5-1 s of scheduling; a list, 4 jobs and
 ~0.35 s). It reads through the table's decoded-file memo
-(``Table.read_file``): data files are immutable, so a live file is
-decoded once per store, not once per call — a point read takes ~1 ms,
-a one-row update or delete ~4-5 ms (BENCH.md "ProductStore: decoded-file
-memo and numpy bucket hashing"). Whatever that tier cannot reproduce
+(``Table.read_file``), which each driver-tier commit also fills with the
+files it wrote: data files are immutable, so a live file is decoded at
+most once per store, and a file the store wrote itself never. Each call
+reads HEAD once and reuses the table's cached snapshot, and a write
+commits against the snapshot its read saw (a concurrent writer's commit
+makes it raise ``StorageError``). On the store bench's 10k rows a point
+read takes ~0.5 ms, a one-row save, update or delete ~2.5-4 ms and a
+filtered list page ~2.5-4 ms (BENCH.md "ProductStore: one snapshot per
+call"). Whatever that tier cannot reproduce
 exactly — an empty store or bucket, a legacy or over-budget bucket or
 table, unifiable-schema failures, new keys, caller metadata,
 content-hash ids, values it does not type like Spark, dotted filter or
@@ -145,6 +150,34 @@ def _arrow_cell(v: Any, typ) -> Any:
             v = v.replace(tzinfo=timezone.utc)
         return v.astimezone().replace(tzinfo=None)
     return v
+
+
+def _column_values(col, typ) -> list:
+    """One Arrow column's values as ``_arrow_cell`` shapes them, converted
+    by column: primitives as ``to_pylist`` gives them, each distinct
+    timestamp once (a batch shares one stamp), a struct one field column
+    at a time; maps and lists cell by cell."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if pa.types.is_struct(typ):
+        arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+        names = [f.name for f in typ]
+        fields = [_column_values(c, f.type) for c, f in zip(arr.flatten(), typ)]
+        if fields:
+            rows = [dict(zip(names, vals)) for vals in zip(*fields)]
+        else:
+            rows = [{} for _ in range(len(arr))]
+        if arr.null_count:
+            rows = [r if ok else None for r, ok in zip(rows, arr.is_valid().to_pylist())]
+        return rows
+    if pa.types.is_timestamp(typ):
+        distinct = pc.unique(col)
+        shaped = [_arrow_cell(v, typ) for v in distinct.to_pylist()]
+        return [shaped[i] for i in pc.index_in(col, value_set=distinct).to_pylist()]
+    if pa.types.is_map(typ) or pa.types.is_list(typ) or pa.types.is_large_list(typ):
+        return [_arrow_cell(v, typ) for v in col.to_pylist()]
+    return col.to_pylist()
 
 
 def _spark_type(v: Any):
@@ -432,8 +465,11 @@ class ProductStore:
         # the incoming partition order for a driver-created batch
         return Window.orderBy(F.monotonically_increasing_id())
 
-    def _next_seq(self) -> int:
-        snap = self.table.current_snapshot()
+    def _next_seq(self, snap=None) -> int:
+        """The first ``_seq`` a save gives, by the counters of ``snap`` (the
+        snapshot the caller read; default: the current one)."""
+        if snap is None:
+            snap = self.table.current_snapshot()
         return int(snap.counters.get("max_seq", 0)) + 1 if snap else 1
 
     def save_product(self, product: dict[str, Any], validate: bool = False) -> str:
@@ -730,7 +766,9 @@ class ProductStore:
         write: bool = False,
         where=None,
     ):
-        """Driver-side pyarrow read — (fallback reason, data).
+        """Driver-side pyarrow read — (fallback reason, data, snapshot):
+        the snapshot is the one read (None for an empty table), so the
+        caller's commit names it as its parent and reads HEAD no more.
 
         Reads only the files of the ids' buckets (plus legacy unbucketed
         files, which may hold any id): the files' schemas unify (the
@@ -744,7 +782,8 @@ class ProductStore:
         ``ids=None`` is the whole-table mode of list_products: every live
         file, the files' row counts summed against ARROW_LIST_MAX_ROWS,
         and ``where(schema)`` — given the whole table's unified schema —
-        returns (reason, filter expression) for the rows to keep.
+        returns (reason, conditions); data is then (every row, conditions)
+        for the caller to filter.
 
         In all three modes the schemas and row counts, then the rows, come
         from the table's decoded-file memo (``Table.file_footer`` /
@@ -768,53 +807,54 @@ class ProductStore:
 
         snap = self.table.current_snapshot()
         if snap is None or not snap.files:
-            return "empty", None
-        if write and any(Table._file_bucket(f) is None for f in snap.files):
-            return "legacy", None
+            return "empty", None, snap
+        file_buckets = self.table.file_buckets(snap)
+        if write and None in file_buckets.values():
+            return "legacy", None, snap
         files = snap.files
         if ids is not None:
             buckets = self._buckets_of(ids)
-            files = [f for f in files if (b := Table._file_bucket(f)) is None or b in buckets]
+            files = [f for f, b in file_buckets.items() if b is None or b in buckets]
         if len(files) > self.ARROW_LOOKUP_MAX_FILES:
-            return "files", None
+            return "files", None, snap
         if not files:
-            return None, None
+            return None, None, snap
         try:
             footers = [self.table.file_footer(f) for f in files]
             schema = pa.unify_schemas([s for s, _ in footers])
-            expr = None
             if ids is None:
                 if sum(n for _, n in footers) > self.ARROW_LIST_MAX_ROWS:
-                    return "rows", None
-                reason, expr = where(schema)
+                    return "rows", None, snap
+                reason, conds = where(schema)
                 if reason is not None:
-                    return reason, None
+                    return reason, None, snap
             tables = [self.table.read_file(f, schema) for f in files]
             if ids is None:
-                tbl = pa.concat_tables(tables)
-                return None, tbl if expr is None else tbl.filter(expr)
+                return None, (pa.concat_tables(tables), conds), snap
             if not whole_buckets:
                 tbl = pa.concat_tables(tables)
-                return None, tbl.filter(pc.is_in(tbl.column("id"), pa.array(ids, pa.string())))
+                wanted = pc.is_in(tbl.column("id"), pa.array(ids, pa.string()))
+                return None, tbl.filter(wanted), snap
             parts: dict[int, list] = {}
             for f, t in zip(files, tables):
-                parts.setdefault(Table._file_bucket(f), []).append(t)
-            return None, {k: pa.concat_tables(v) for k, v in parts.items()}
+                parts.setdefault(file_buckets[f], []).append(t)
+            return None, {k: pa.concat_tables(v) for k, v in parts.items()}, snap
         except (OSError, pa.ArrowException):
             # un-unifiable schemas, a warehouse URI pyarrow can't open though
             # Spark can, or a file vacuumed between current_snapshot() and
             # the footer read — all degrade to the Spark path, never crash
-            return "schema", None
+            return "schema", None, snap
 
     @staticmethod
     def _rows(tbl) -> list[dict[str, Any]]:
-        """Arrow rows → records in Row.asDict(recursive) shape, in order."""
-        cols = [
-            (n, c.type, c.to_pylist())
-            for n, c in zip(tbl.schema.names, tbl.columns)
-            if n != "_seq"
-        ]
-        return [{n: _arrow_cell(v[i], t) for n, t, v in cols} for i in range(tbl.num_rows)]
+        """Arrow rows → records in Row.asDict(recursive) shape, in order,
+        converted a column at a time (``_column_values``)."""
+        names, cols = [], []
+        for n, c in zip(tbl.schema.names, tbl.columns):
+            if n != "_seq":
+                names.append(n)
+                cols.append(_column_values(c, c.type))
+        return [dict(zip(names, vals)) for vals in zip(*cols)]
 
     def _spark_tier(self, reason: str) -> None:
         self.tiers[f"spark:{reason}"] += 1
@@ -869,7 +909,7 @@ class ProductStore:
         inferred = {k: _common_type(p.get(k) for p in products) for k in keys}
         if None in inferred.values():
             return self._spark_tier("type")
-        reason, existing = self._arrow_scan(ids, write=True)
+        reason, existing, snap = self._arrow_scan(ids, write=True)
         if reason is None and existing is None:
             reason = "empty"  # no stored file in these buckets to type against
         if reason is not None:
@@ -883,7 +923,7 @@ class ProductStore:
         if seq_type is None or not pa.types.is_integer(seq_type):
             return self._spark_tier("schema")
         n = len(products)
-        next_seq = self._next_seq()
+        next_seq = self._next_seq(snap)
         stamp = pa.array([_utc_now()] * n, pa.timestamp("us"))
         names = keys + ([] if "id" in keys else ["id"]) + ["metadata", "_seq"]
         try:
@@ -911,6 +951,7 @@ class ProductStore:
             {int(k): batch.take(np.flatnonzero(buckets == k)) for k in np.unique(buckets)},
             replace=False,
             counters={"max_seq": next_seq + n - 1},
+            parent=snap,
         )
         return ids
 
@@ -926,7 +967,7 @@ class ProductStore:
         if updates is not None and any("metadata" in u for u in updates.values()):
             self._spark_tier("metadata")
             return False
-        reason, tables = self._arrow_scan(ids, whole_buckets=True, write=True)
+        reason, tables, snap = self._arrow_scan(ids, whole_buckets=True, write=True)
         if reason is not None:
             self._spark_tier(reason)
             return False
@@ -950,9 +991,7 @@ class ProductStore:
         self.tiers["driver"] += 1
         if missing:
             raise ProductNotFoundError(missing)
-        self.table.commit_arrow_buckets(
-            out, replace=True, counters=self.table.current_snapshot().counters
-        )
+        self.table.commit_arrow_buckets(out, replace=True, counters=snap.counters, parent=snap)
         return True
 
     def _merge_rows(self, matched, updates: dict[str, dict[str, Any]], now: datetime):
@@ -1004,7 +1043,7 @@ class ProductStore:
         """{id: record} for the stored ids among ``ids`` — the driver-tier
         bucket read when _arrow_scan takes it, else the same bucket-pruned
         read as a Spark scan."""
-        reason, tbl = self._arrow_scan(ids)
+        reason, tbl, _ = self._arrow_scan(ids)
         if reason is None:
             return {r["id"]: r for r in self._rows(tbl)} if tbl is not None else {}
         df = self._df_for_ids(ids)
@@ -1265,12 +1304,12 @@ class ProductStore:
         return page_df, total
 
     def _list_where(self, schema, filters: dict[str, Any] | None, sort_by: str | None):
-        """(reason, expression) for the driver-tier list scan: the filters
-        as one pyarrow expression under the whole table's unified schema,
-        row for row what list_products_df keeps — or why this tier cannot
-        say (``filter`` / ``sort`` / ``schema``)."""
+        """(reason, conditions) for the driver-tier list scan: the filters
+        under the whole table's unified schema as (column, value) pairs a
+        row must all equal — None when no row can match — row for row
+        what list_products_df keeps; or why this tier cannot say
+        (``filter`` / ``sort`` / ``schema``)."""
         import pyarrow as pa
-        import pyarrow.dataset as ds
 
         if "_seq" not in schema.names:
             return "schema", None
@@ -1280,7 +1319,7 @@ class ProductStore:
             # struct/map paths, and Spark's cast-to-string of a number,
             # which formats floats unlike Python
             return "sort", None
-        preds = []
+        conds: list | None = []
         for field, v in (filters or {}).items():
             if (
                 "." in field
@@ -1290,7 +1329,7 @@ class ProductStore:
             ):
                 return "filter", None
             if field not in schema.names or not self._filterable(field):
-                preds.append(ds.scalar(False))  # unknown, or unindexed in compat mode
+                conds = None  # unknown, or unindexed in compat mode
                 continue
             typ = schema.field(field).type
             if pa.types.is_string(typ):
@@ -1303,8 +1342,11 @@ class ProductStore:
                 return "filter", None
             # a type mismatch matches nothing, as _type_compatible rules on
             # Spark; so does None (col = NULL is never true)
-            preds.append(ds.field(field) == v if ok else ds.scalar(False))
-        return None, reduce(lambda a, b: a & b, preds) if preds else None
+            if not ok:
+                conds = None
+            elif conds is not None:
+                conds.append((field, v))
+        return None, conds
 
     def _driver_list(
         self,
@@ -1315,32 +1357,44 @@ class ProductStore:
         sort_order: str,
     ) -> ListResult | None:
         """list_products without a Spark job; None when declined. One
-        whole-table _arrow_scan with the filters pushed down gives
-        ``total``; the rows sort as list_products_df sorts them
-        (``coalesce(key, "")``, then ``_seq`` ascending — a column absent
-        from the table sorts by ``_seq`` alone), and only the page's rows
-        are hydrated."""
+        whole-table _arrow_scan; the filters become one compute mask over
+        their columns, whose true rows give ``total``; only the sort key
+        and ``_seq`` are taken for those rows, and they sort as
+        list_products_df sorts them (``coalesce(key, "")``, then ``_seq``
+        ascending — a column absent from the table sorts by ``_seq``
+        alone). Every other column is taken, and hydrated, for the page's
+        rows alone."""
+        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        reason, tbl = self._arrow_scan(
+        reason, data, _ = self._arrow_scan(
             None, where=lambda schema: self._list_where(schema, filters, sort_by)
         )
         if reason not in (None, "empty"):
             return self._spark_tier(reason)
         self.tiers["driver"] += 1
-        total = tbl.num_rows if tbl is not None else 0
+        rows = np.empty(0, np.int64)
+        if data is not None:
+            tbl, conds = data
+            if conds == []:
+                rows = np.arange(tbl.num_rows)
+            elif conds:
+                mask = reduce(pc.and_, [pc.equal(tbl.column(f), v) for f, v in conds])
+                rows = np.flatnonzero(pc.fill_null(mask, False).to_numpy())
+        total = len(rows)
         start = (page - 1) * page_size
         products: list[dict[str, Any]] = []
         if start < total:
-            cols = {"_seq": tbl.column("_seq")}
+            cols = {"_seq": tbl.column("_seq").take(rows)}
             order = [("_seq", "ascending")]
             if sort_by and sort_by in tbl.schema.names:
-                cols["key"] = pc.coalesce(tbl.column(sort_by), pa.scalar(""))
+                cols["key"] = pc.coalesce(tbl.column(sort_by).take(rows), pa.scalar(""))
                 desc = sort_order.lower() == "desc"
                 order.insert(0, ("key", "descending" if desc else "ascending"))
             idx = pc.sort_indices(pa.table(cols), sort_keys=order)
-            products = self._rows(tbl.take(idx[start : start + page_size]))
+            page_rows = rows[idx[start : start + page_size].to_numpy()]
+            products = self._rows(tbl.take(page_rows))
         return ListResult(products, total, page, page_size, max(1, math.ceil(total / page_size)))
 
     def list_products(

@@ -111,3 +111,37 @@ def test_kernel_and_bucket_rule_equal_spark(spark):
     got = {r["s"]: (r["h"], r["b"]) for r in rows}
     hashes, buckets = spark_hash_strs(values).tolist(), spark_buckets(values, 16).tolist()
     assert [got[v] for v in values] == list(zip(hashes, buckets))
+
+
+def test_bucket_rule_equals_spark_on_both_sides_of_the_scalar_cut(spark, monkeypatch):
+    """``spark_buckets`` hashes up to SCALAR_HASH_MAX values with the
+    scalar ``spark_hash_str`` and more with the kernel; both equal
+    ``pmod(F.hash, n)`` for strings of every byte length 0-9 (every tail
+    length, twice), ASCII and not, and give -1 for a null."""
+    from crawl4ai_llm_spark.frontier import hashing
+
+    rng = random.Random(6)
+    pool = [_of_byte_length(rng, n, high) for n in range(10) for high in (False, True)]
+    pool += ["中", "\U0001F600x", "\x80\x80\x80", None]
+    rows = (
+        spark.createDataFrame([(v,) for v in pool if v is not None], "s string")
+        .select("s", F.pmod(F.hash("s"), F.lit(16)).alias("b"))
+        .collect()
+    )
+    want = {r["s"]: r["b"] for r in rows}
+    want[None] = -1
+    kernel_calls = []
+    kernel = hashing.spark_hash_strs
+    monkeypatch.setattr(
+        hashing, "spark_hash_strs", lambda v: kernel_calls.append(len(v)) or kernel(v)
+    )
+    cut = hashing.SCALAR_HASH_MAX
+    for size in (0, 1, 9, cut, cut + 1, 2 * cut + 5):
+        values = [pool[(size + i) % len(pool)] for i in range(size)]
+        arrow = pa.array(values, pa.string())
+        for form in (values, arrow, pa.chunked_array([arrow])):
+            kernel_calls.clear()
+            got = spark_buckets(form, 16)
+            assert got.dtype == np.int64
+            assert got.tolist() == [want[v] for v in values], (size, type(form))
+            assert bool(kernel_calls) == (size > cut), (size, kernel_calls)
