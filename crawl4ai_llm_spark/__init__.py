@@ -19,8 +19,8 @@ operators   Large-scale training-data pipeline operators: exact + near
             deduplication (MinHash-LSH, SimHash, n-gram Jaccard, embedding
             cosine), similarity search (brute-force + LSH-bucketed ANN),
             pagination envelopes.
-frontier    The crawl-side engine mandated by the north rule: URL-seen set
-            (Bloom + exact verification tier), per-host politeness budgets
+frontier    The crawl-side engine mandated by the north rule: exact URL-seen
+            set (anti-join, or a resident index), per-host politeness budgets
             with hot-host salting, priority-queue wave scheduler, robots
             rules broadcast join, checkpoint/resume.
 """

@@ -670,8 +670,8 @@ class Table:
     def retag(self, counters: dict[str, int]) -> Snapshot | None:
         """Publish a new snapshot with the SAME file list and new counters —
         a metadata-only commit (Iceberg snapshot-properties analog). Used to
-        mark state on a table without touching data, e.g. the frontier
-        engine's deferred-rebuild ``stale`` flag on the Bloom filter table.
+        mark state on a table without touching data, e.g. the content-dedup
+        index's ``stale`` flag (``DedupIndex.mark_stale``).
         No-op (returns None) on an empty table."""
         parent = self.current_snapshot()
         if parent is None:

@@ -80,7 +80,7 @@ class CrawlerConfig:
 
     def to_crawl_config(self, **engine_kwargs):
         """→ frontier CrawlConfig: delay and max_retries carry the
-        reference's verified semantics (SURVEY §2.7 C5/C8); wave/bloom/skew
+        reference's verified semantics (SURVEY §2.7 C5/C8); wave/skew/dedup
         parameters are engine-side and passed through engine_kwargs."""
         from crawl4ai_llm_spark.frontier.engine import CrawlConfig
 

@@ -18,10 +18,9 @@ the config, the manifests and the parquet footers (no Spark job):
     files appended since it last looked, so a wave's lookups cost what the
     wave adds, not the crawl's history. The indexes hold at most
     RESIDENT_INDEX_BYTES together;
-  * the SPARK tier runs it as Spark jobs: waves over the budget, the
-    cuckoo and partitioned-Bloom seen filters, per-page fetch cost
-    (parse_work, fetch_latency_ms), and waves that would trip a dedup
-    gate. ``tiers`` counts both.
+  * the SPARK tier runs it as Spark jobs: waves over the budget, per-page
+    fetch cost (parse_work, fetch_latency_ms), and waves that would trip
+    a dedup gate. ``tiers`` counts both.
 
 Both tiers share every per-batch function (fetch_batch,
 dedup.text_signatures, dedup_store.match_pairs) and write the same rows;
@@ -48,12 +47,10 @@ reference.
      each page's links while it visits the page; no Python stage here),
      are murmur3-hashed, robots-filtered (broadcast join against the tiny
      rules table; ``wg.robots_allows`` on the driver), deduplicated:
-     min(depth) per url within the wave, then checked against the seen
-     set. The Spark tier Bloom-prefilters (bloom.py — no false
-     negatives) and verifies the positives EXACTLY with an anti-join;
-     the driver tier probes the resident seen index by url_hash for
-     every discovery, url compared (an exact in-memory index leaves a
-     Bloom nothing to decide).
+     min(depth) per url within the wave, then checked EXACTLY against
+     the seen set: the Spark tier anti-joins the discoveries with the
+     seen urls (the engine plans that join), the driver tier probes the
+     resident seen index by url_hash for every discovery, url compared.
   5. COMMIT — docs/seen/schedule/frontier/checkpoint snapshots, checkpoint
      LAST; every snapshot is tagged with the wave, so a killed job resumes
      from the last fully-committed wave (``resume()`` rolls each table back
@@ -79,8 +76,6 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from crawl4ai_llm_spark.catalog import Catalog, ResidentIndex, has_files
-from crawl4ai_llm_spark.frontier import bloom as bloom_mod
-from crawl4ai_llm_spark.frontier import cuckoo as cuckoo_mod
 from crawl4ai_llm_spark.frontier import webgraph as wg
 from crawl4ai_llm_spark.frontier.hashing import spark_hash_strs
 from crawl4ai_llm_spark.functions.urls import (
@@ -238,34 +233,6 @@ class CrawlConfig:
     max_depth: int = 5
     max_waves: int = 1000
     n_salts: int = 8
-    # probabilistic seen-set tier ahead of the exact anti-join:
-    # "bloom" (C3, incremental bitmap OR), "cuckoo" (C4's deletable
-    # variant — supports evict-for-recrawl), or "exact" (anti-join only)
-    seen_filter: str = "bloom"
-    bloom_buckets: int = 64
-    # Transport is a SIZE-DEPENDENT tradeoff (both measured, BENCH.md):
-    # - "broadcast" (default): bitmaps collect to the driver and broadcast.
-    #   Probe is map-only; best when per-wave fixed cost matters (sandbox
-    #   wave sizes, latency-bound crawls: 0.84 scaling efficiency vs 0.66
-    #   for partitioned at the 616k-URL scaling run's wave sizes).
-    # - "partitioned": bitmaps live in a snapshot table; probe/update are
-    #   cogrouped Arrow jobs — one extra shuffle per wave, but NOTHING
-    #   transits the driver. Mandatory at 10^10 URLs (~12 GB of filters at
-    #   10 bits/key can't broadcast), and already faster when waves are
-    #   CPU-bound (3,357 vs 3,021 urls/s at local[32], no latency model).
-    # - "auto": encodes that measured tradeoff — per wave, broadcast while
-    #   the filter footprint (non-empty buckets × bitmap bytes) fits
-    #   broadcast_budget_bytes, switching one-way to partitioned once it
-    #   outgrows the budget (filters only grow; the partitioned table's
-    #   existence IS the switched state, surviving kill/resume).
-    # Identical maybe_seen semantics across all three (equality-tested at
-    # the probe level, via full-crawl oracle parity incl. kill/resume, and
-    # via a mid-run auto switch parity test).
-    bloom_transport: str = "broadcast"
-    # "auto" broadcast budget: above this filter footprint the per-wave
-    # driver collect + broadcast costs more than the cogroup shuffle — and
-    # far above it (GBs) the driver/broadcast path is simply not viable
-    broadcast_budget_bytes: int = 64 << 20
     # synthetic per-page parse cost (hash rounds) standing in for the CPU
     # work of real fetch+parse — 0 in parity tests; the scaling benchmark
     # sets it so per-URL compute dominates, as it does in production
@@ -327,18 +294,6 @@ class CrawlConfig:
                 "content_dedup_policy must be 'flag' or 'skip', got "
                 f"{self.content_dedup_policy!r}"
             )
-        # a misspelled seen_filter would silently run the exact-only
-        # anti-join, a misspelled bloom_transport the broadcast tier
-        if self.seen_filter not in ("bloom", "cuckoo", "exact"):
-            raise ValueError(
-                "seen_filter must be 'bloom', 'cuckoo' or 'exact', got "
-                f"{self.seen_filter!r}"
-            )
-        if self.bloom_transport not in ("broadcast", "partitioned", "auto"):
-            raise ValueError(
-                "bloom_transport must be 'broadcast', 'partitioned' or 'auto', got "
-                f"{self.bloom_transport!r}"
-            )
 
 
 def score_expr(hash_col) -> F.Column:
@@ -357,24 +312,12 @@ class FrontierEngine:
         self.docs = self.catalog.table("docs_spans")
         self.schedule = self.catalog.table("schedule")
         self.checkpoints = self.catalog.table("checkpoints")
-        # partitioned-transport Bloom state (bucket, bloom) — snapshot-
-        # committed per wave, so resume() rewinds it with the other tables
-        self.blooms_table = self.catalog.table("seen_blooms")
         # content-dedup audit table: (wave, new_id, orig_id, jaccard) per
         # detected near-duplicate — the per-wave counters the config's
         # content_dedup mode surfaces
         self.dup_pairs = self.catalog.table("content_dups")
         self._dedup_index = None  # lazy — only built when content_dedup is on
         self._robots_df: DataFrame | None = None
-        # incremental per-bucket Bloom bitmaps (C3): OR-ing per-wave deltas
-        # is equivalent to rebuilding from the seen table (bitmap union is
-        # distributive) and keeps the per-wave cost ∝ new URLs, not |seen|
-        self._blooms: dict[int, bytes] | None = None
-        # cuckoo tier (deletable) — bucket→packed table
-        self._cuckoo: dict[int, bytes] | None = None
-        # per-wave resolved bloom transport (observability for the "auto"
-        # mode's switch point; tiny)
-        self.transport_log: list[str] = []
         # per-wave phase walls (run_wave's mark() points) — benches read
         # this to attribute e.g. the content-dedup phase directly
         self.wave_marks: dict[int, dict[str, float]] = {}
@@ -618,57 +561,6 @@ class FrontierEngine:
             "committed_at": datetime.now(timezone.utc),
         }
 
-    def _resolve_transport(self) -> str:
-        """C3 transport decision. "auto" picks from the CURRENT filter
-        footprint: broadcast below ``broadcast_budget_bytes`` (map-only
-        probe — wins short, latency-bound waves), partitioned above it
-        (cogrouped Arrow, nothing transits the driver). One-way in practice:
-        filters only grow, and once the partitioned filter table exists the
-        engine stays on it (its presence IS the switched state, so the
-        decision survives kill/resume without re-measuring)."""
-        cfg = self.config
-        if cfg.bloom_transport != "auto":
-            return cfg.bloom_transport
-        if self._blooms is None:
-            if not self.blooms_table.is_empty():
-                return "partitioned"
-            # no driver copy (fresh engine, post-resume, or driver-tier
-            # waves, which keep none): the footprint decides, so build it
-            self._build_seen_blooms()
-        size = sum(len(b) for b in self._blooms.values())
-        return "partitioned" if size > cfg.broadcast_budget_bytes else "broadcast"
-
-    def _build_seen_blooms(self) -> None:
-        """Full broadcast-tier build from the current seen snapshot: its
-        files' ``url_hash`` column streams through pyarrow one record
-        batch at a time, OR-ed into the bitmaps — no Spark job, and the
-        driver never holds more than one batch plus the bitmaps."""
-        import pyarrow.parquet as pq
-
-        self._blooms = {}
-        snap = self.seen.current_snapshot()
-        for path in snap.files if snap else []:
-            for batch in pq.ParquetFile(path).iter_batches(columns=["url_hash"]):
-                self._bloom_or(
-                    bloom_mod.blooms_from_hashes(
-                        batch.column(0).to_numpy(), self.config.bloom_buckets
-                    )
-                )
-
-    def _bloom_or(self, delta: dict[int, bytes]) -> None:
-        import numpy as np
-
-        if self._blooms is None:
-            self._blooms = {}
-        for b, bm in delta.items():
-            cur = self._blooms.get(b)
-            if cur is None:
-                self._blooms[b] = bm
-            else:  # vectorized bitmap union — this runs on the driver
-                self._blooms[b] = np.bitwise_or(
-                    np.frombuffer(cur, dtype=np.uint8), np.frombuffer(bm, dtype=np.uint8)
-                ).tobytes()
-
     # ------------------------------------------------------------------ tiers
 
     def run_wave(self, wave: int) -> dict[str, int]:
@@ -683,19 +575,16 @@ class FrontierEngine:
         wave's tables' snapshots are read once, here; commits read their
         own parents."""
         cfg = self.config
-        transport = self._resolve_transport() if cfg.seen_filter == "bloom" else None
-        if transport is not None:
-            self.transport_log.append(transport)
         tables = [self.frontier, self.seen]
         if cfg.content_dedup:
             tables += [self.docs, self.dedup_index().minhash_bands]
         snaps = {t: t.current_snapshot() for t in tables}
-        tier = self._wave_tier(transport, snaps)
+        tier = self._wave_tier(snaps)
         stats = self._run_wave_driver(wave, snaps) if tier == "driver" else None
         if isinstance(stats, str):  # declined mid-wave, nothing committed
             tier, stats = f"spark:{stats}", None
         if stats is None:
-            stats = self._run_wave_spark(wave, transport)
+            stats = self._run_wave_spark(wave)
         self.tiers[tier] += 1
         if "fetched" in stats and os.environ.get("CRAWL_WAVE_TIMING"):
             import json
@@ -707,7 +596,6 @@ class FrontierEngine:
                         "marks": self.wave_marks[wave],
                         "scheduled": stats["scheduled"],
                         "fetched": stats["fetched"],
-                        "transport": transport,
                         "tier": tier,
                     }
                 ),
@@ -778,11 +666,10 @@ class FrontierEngine:
         cold = sum(self._rows_of(index.cold(_files(snaps[t]))) for t, index in self._indexes())
         return pending, pending + cold
 
-    def _wave_tier(self, transport: str | None, snaps: dict) -> str:
+    def _wave_tier(self, snaps: dict) -> str:
         """"driver", or "spark:<reason>" for a wave the driver tier
-        declines: the filter only the Spark tier runs (cuckoo,
-        partitioned Bloom), per-page fetch cost that executor parallelism
-        exists for, more rows to decode (``_rows_to_decode``) than
+        declines: per-page fetch cost that executor parallelism exists
+        for, more rows to decode (``_rows_to_decode``) than
         DRIVER_WAVE_ROW_BUDGET, or a dedup gate the wave's match would
         trip on the Spark tier's driver path. ``snaps``: the wave's
         snapshots (``run_wave``). From manifests and parquet footers; no
@@ -791,8 +678,6 @@ class FrontierEngine:
         from crawl4ai_llm_spark.operators import dedup_store as ds
 
         cfg = self.config
-        if cfg.seen_filter == "cuckoo" or transport == "partitioned":
-            return "spark:filter"
         if cfg.parse_work or cfg.fetch_latency_ms:
             return "spark:fetch"
         pending, rows = self._rows_to_decode(snaps)
@@ -845,11 +730,10 @@ class FrontierEngine:
         relational glue is written twice, and the Spark tier is its
         reference. Lookups in the seen, band and docs tables go through
         their resident indexes, synced to ``snaps`` (the wave's snapshots)
-        where first used; the seen index is exact, so no Bloom runs here
-        (a Bloom a Spark-tier wave built is still kept current at commit).
-        Returns the decline reason, having committed nothing, when the
-        match trips DRIVER_MATCH_DOC_BUDGET (``"dedup"``) or a sync takes
-        the indexes past RESIDENT_INDEX_BYTES (``"index"``)."""
+        where first used. Returns the decline reason, having committed
+        nothing, when the match trips DRIVER_MATCH_DOC_BUDGET
+        (``"dedup"``) or a sync takes the indexes past
+        RESIDENT_INDEX_BYTES (``"index"``)."""
         import time
 
         import numpy as np
@@ -949,7 +833,6 @@ class FrontierEngine:
             is_new = np.fromiter((r[0] not in seen_urls for r in disc), bool, len(disc))
             mark("probed_count")
         new_rows = [r for r, keep in zip(disc, is_new) if keep]
-        new_hashes = hashes[is_new]
         new_links = pa.Table.from_pylist(
             [dict(zip(FRONTIER_COLS, r)) for r in new_rows], schema=fschema
         )
@@ -1051,8 +934,7 @@ class FrontierEngine:
                 counters=idx.ingest_counters(n_fetched - len(skip), tag, snaps[idx.minhash_bands]),
                 spark_schema=BAND_ROW_SCHEMA,
             )
-        if cfg.seen_filter == "bloom" and self._blooms is not None:
-            self._bloom_or(bloom_mod.blooms_from_hashes(new_hashes, cfg.bloom_buckets))
+        # (the mark keeps its name: perfbench's wave.commit_s reads it)
         mark("table_commits+filter_delta")
         self.checkpoints.append_pylist(
             [self._cp_row(wave, {
@@ -1070,7 +952,7 @@ class FrontierEngine:
 
     # ------------------------------------------------------------------ spark tier
 
-    def _run_wave_spark(self, wave: int, transport: str | None) -> dict[str, int]:
+    def _run_wave_spark(self, wave: int) -> dict[str, int]:
         """The Spark tier of ``run_wave`` — the reference for the driver
         tier, and the tier for waves too large for the driver."""
         import time as _time
@@ -1150,8 +1032,8 @@ class FrontierEngine:
             "url", "url_hash", "host", "depth", (F.col("attempt") + 1).alias("attempt"), "score"
         )
 
-        # --- discovery (C1/C2/C10 + dedup C3/C4): links are canonical
-        # already (the fetch batch canonicalized them) ---
+        # --- discovery (C1/C2/C10 + the exact seen check, C4): links are
+        # canonical already (the fetch batch canonicalized them) ---
         discovered = (
             results.where(F.col("ok"))
             .select(F.col("depth").alias("parent_depth"), F.explode("links").alias("url"))
@@ -1164,77 +1046,11 @@ class FrontierEngine:
             self._with_frontier_cols(discovered)
         )
         seen_df = self.seen.read()
-        bloom_bc = None
-        probed = None
-        probe_cache = None  # the cached df to unpersist after commit
-        new_filters = None  # partitioned transport: next filter table rows
-        if cfg.seen_filter in ("bloom", "cuckoo") and seen_df is not None:
-            if cfg.seen_filter == "bloom" and transport == "partitioned":
-                self._blooms = None  # auto switch mid-run: free the driver copy
-                bsnap = self.blooms_table.current_snapshot()
-                if bsnap is not None and bsnap.counters.get("stale"):
-                    # deferred evict rebuild: any number of evictions since
-                    # the last wave cost one full-corpus rebuild, here
-                    self.blooms_table.overwrite(
-                        bloom_mod.update_filter_rows(
-                            seen_df.select("url_hash"), None, cfg.bloom_buckets
-                        ),
-                        counters={"wave": self.last_committed_wave()},
-                    )
-                filters_df = self.blooms_table.read()
-                if filters_df is None:  # fresh engine / post-resume: full build
-                    self.blooms_table.overwrite(
-                        bloom_mod.update_filter_rows(
-                            seen_df.select("url_hash"), None, cfg.bloom_buckets
-                        ),
-                        counters={"wave": self.last_committed_wave()},
-                    )
-                    filters_df = self.blooms_table.read()
-                # ONE cogrouped job probes AND produces the next filter
-                # table — the r03 shape re-read the filter table in a
-                # second cogroup at commit time, a full extra job per wave
-                combined = bloom_mod.probe_update_cogrouped(
-                    discovered, filters_df, cfg.bloom_buckets
-                ).cache()
-                combined.count()
-                mark("probed_count")
-                probe_cache = combined
-                probed = combined.where(F.col("bloom").isNull()).drop("bucket", "bloom")
-                new_filters = combined.where(F.col("bloom").isNotNull()).select(
-                    "bucket", "bloom"
-                )
-            else:
-                if cfg.seen_filter == "bloom":
-                    if self._blooms is None:  # fresh engine / post-resume: full build
-                        self._build_seen_blooms()
-                    probed, bloom_bc = bloom_mod.probe_expr(
-                        discovered, self._blooms, cfg.bloom_buckets
-                    )
-                else:
-                    if self._cuckoo is None:  # fresh engine / post-resume: full build
-                        self._cuckoo = cuckoo_mod.update_filters(
-                            seen_df.select("url_hash"), None, cfg.bloom_buckets
-                        )
-                    probed, bloom_bc = cuckoo_mod.probe_expr(
-                        discovered, self._cuckoo, cfg.bloom_buckets
-                    )
-                # cache AND materialize: the two branches below would
-                # otherwise race the unpopulated cache and duplicate the
-                # whole canonicalize→probe chain
-                probed = probed.cache()
-                probed.count()
-                mark("probed_count")
-                probe_cache = probed
-            definitely_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-            candidates = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-            # exact verification tier (C4): only Bloom-positive candidates
-            # pay the anti-join against the seen table
-            verified_new = candidates.join(seen_df.select("url"), "url", "left_anti")
-            new_links = definitely_new.unionByName(verified_new)
-        elif seen_df is not None:
-            new_links = discovered.join(seen_df.select("url"), "url", "left_anti")
-        else:
-            new_links = discovered
+        new_links = (
+            discovered
+            if seen_df is None
+            else discovered.join(seen_df.select("url"), "url", "left_anti")
+        )
         new_links = new_links.select(
             "url", "url_hash", "host", "depth", "attempt", "score"
         ).cache()
@@ -1255,9 +1071,9 @@ class FrontierEngine:
         # CONCURRENT Spark jobs — wall time is the max, not the sum.
         k = cfg.commit_partitions or self.spark.sparkContext.defaultParallelism
         wave_tag = {"wave": wave}
-        # materialize the discovery cache once, full width; the hashes it
-        # returns are the broadcast Bloom tier's delta (no job of its own)
-        new_hashes = new_links.select("url_hash").toArrow().column(0).to_numpy()
+        # materialize the discovery cache once, full width, before the
+        # commit pool's jobs read it
+        new_links.count()
         mark("new_links_count")
 
         # --- content near-dup match (backward-only: wave docs vs the index
@@ -1399,28 +1215,7 @@ class FrontierEngine:
         def commit_frontier():
             self.frontier.overwrite(next_frontier.coalesce(k), counters=wave_tag)
 
-        def update_seen_filter():
-            # independent of the table writes (reads only cached inputs),
-            # so it rides the same pool — wall time is max(commits, filter
-            # delta), not the sum
-            if cfg.seen_filter == "bloom" and transport == "partitioned":
-                # the probe cogroup already produced the next filter rows
-                # (probe_update_cogrouped) — this is a write from cache,
-                # no second cogroup, no second filter-table scan.
-                # new_filters is None when the wave ran with NO seen table
-                # (probe branch skipped): nothing to commit — the next
-                # wave's probe does a fresh full build from the seen table
-                # this wave is committing (code-review r04 finding)
-                if new_filters is not None:
-                    self.blooms_table.overwrite(new_filters, counters=wave_tag)
-            elif cfg.seen_filter == "bloom" and self._blooms is not None:
-                self._bloom_or(bloom_mod.blooms_from_hashes(new_hashes, cfg.bloom_buckets))
-            elif cfg.seen_filter == "cuckoo" and self._cuckoo is not None:
-                self._cuckoo = cuckoo_mod.update_filters(
-                    new_links, self._cuckoo, cfg.bloom_buckets
-                )
-
-        with ThreadPoolExecutor(max_workers=6) as pool:
+        with ThreadPoolExecutor(max_workers=5) as pool:
             futures = [
                 pool.submit(fn)
                 for fn in (
@@ -1428,12 +1223,12 @@ class FrontierEngine:
                     commit_seen,
                     commit_schedule,
                     commit_frontier,
-                    update_seen_filter,
                     commit_content_dedup,
                 )
             ]
             for f in futures:
                 f.result()
+        # (the mark keeps its name: perfbench's wave.commit_s reads it)
         mark("table_commits+filter_delta")
         # checkpoint LAST, written driver-side (16 rows don't need a job)
         self.checkpoints.append_pylist(
@@ -1451,10 +1246,6 @@ class FrontierEngine:
         new_links.unpersist()
         for c in dup_caches:  # per-wave plans are unique — CacheManager
             c.unpersist()  # never reclaims them (r04 leak discipline)
-        if probe_cache is not None:
-            probe_cache.unpersist()
-        if bloom_bc is not None:
-            bloom_bc.destroy()
         return stats
 
     def _canon_rows(self, urls: list[str], depth: int = 0) -> DataFrame:
@@ -1467,11 +1258,8 @@ class FrontierEngine:
         )
 
     def evict_from_seen(self, urls: list[str]) -> int:
-        """Forget URLs (the recrawl path): remove from the seen table and
-        DELETE their fingerprints from the cuckoo tier — the operation a
-        Bloom filter cannot express (with seen_filter="bloom" the bitmap is
-        rebuilt from the remaining seen table instead). The next organic
-        discovery of these URLs re-enqueues them."""
+        """Forget URLs (the recrawl path): remove them from the seen
+        table. The next organic discovery of these URLs re-enqueues them."""
         wave = self.last_committed_wave()
         rows = self._canon_rows(urls).cache()
         n = rows.count()
@@ -1479,25 +1267,6 @@ class FrontierEngine:
         if seen_df is not None:
             remaining = seen_df.join(rows.select("url"), "url", "left_anti")
             self.seen.overwrite(remaining, counters={"wave": wave})
-        if self.config.seen_filter == "cuckoo" and self._cuckoo is not None:
-            self._cuckoo = cuckoo_mod.update_filters(
-                rows.select("url_hash"), self._cuckoo, self.config.bloom_buckets, delete=True
-            )
-        elif self.config.seen_filter == "bloom":
-            self._blooms = None  # bloom can't delete — rebuild from seen
-            if not self.blooms_table.is_empty():
-                # DEFERRED rebuild (ADVICE r03): a pre-evict filter is still
-                # CORRECT — it merely over-includes the evicted URLs (false
-                # positives, which the exact anti-join verifies anyway). So
-                # N evictions pay zero rebuilds here; the table is tagged
-                # ``stale`` and run_wave rebuilds it ONCE from the remaining
-                # seen set at the next probe. Tagging — not dropping —
-                # matters for "auto": the table's non-emptiness IS the
-                # one-way-switch state, and a dropped table would make
-                # _resolve_transport fall back to broadcast and collect the
-                # entire multi-GB filter set onto the driver.
-                snap = self.blooms_table.current_snapshot()
-                self.blooms_table.retag({**snap.counters, "stale": 1})
         rows.unpersist()
         return n
 
@@ -1510,34 +1279,13 @@ class FrontierEngine:
         if seen_df is not None:
             rows = rows.join(seen_df.select("url"), "url", "left_anti")
         rows = rows.cache()
-        # materializes the cache; the hashes feed the broadcast Bloom tier
-        hashes = rows.select("url_hash").toArrow().column(0).to_numpy()
-        n = len(hashes)
+        n = rows.count()  # materializes the cache both commits read
         pending = self.frontier.read()
         merged = rows if pending is None else pending.unionByName(rows)
         self.frontier.overwrite(merged, counters={"wave": wave})
         self.seen.append(
             rows.select("url_hash", "url", F.lit(wave).alias("wave")), counters={"wave": wave}
         )
-        if self.config.seen_filter == "cuckoo" and self._cuckoo is not None:
-            self._cuckoo = cuckoo_mod.update_filters(
-                rows.select("url_hash"), self._cuckoo, self.config.bloom_buckets
-            )
-        elif self.config.seen_filter == "bloom" and self._resolve_transport() == "partitioned":
-            if self.blooms_table.read() is not None:
-                # carry a pending ``stale`` tag through (the evicted keys are
-                # still OR-ed into the bitmaps this delta-update carries —
-                # the deferred rebuild at the next probe must still happen)
-                bsnap = self.blooms_table.current_snapshot()
-                stale = {"stale": 1} if bsnap and bsnap.counters.get("stale") else {}
-                self.blooms_table.overwrite(
-                    bloom_mod.update_filter_rows(
-                        rows.select("url_hash"), self.blooms_table.read(), self.config.bloom_buckets
-                    ),
-                    counters={"wave": wave, **stale},
-                )
-        elif self.config.seen_filter == "bloom" and self._blooms is not None:
-            self._bloom_or(bloom_mod.blooms_from_hashes(hashes, self.config.bloom_buckets))
         rows.unpersist()
         return n
 
@@ -1560,22 +1308,15 @@ class FrontierEngine:
         if self.config.content_dedup:
             idx = self.dedup_index()
             dedup_tables = [self.dup_pairs, idx.minhash_bands, idx.sign_bands]
+        tables = (self.docs, self.seen, self.schedule, self.frontier, *dedup_tables)
         # a kill between a manifest tmp-write and its atomic rename leaves
         # orphaned *.tmp-* files; resume is single-writer, so sweep them here
-        for tbl in (self.checkpoints, self.docs, self.seen, self.schedule,
-                    self.frontier, self.blooms_table, *dedup_tables):
+        for tbl in (self.checkpoints, *tables):
             tbl.clean_stale_tmp()
         committed = self.last_committed_wave()
-        self._blooms = None  # rebuild from the (possibly rolled-back) seen table
-        self._cuckoo = None
         if committed < 0:
             return -1
-        # blooms_table included: a partitioned-transport filter snapshot
-        # NEWER than the committed wave would only over-include (false
-        # positives, exact-verified anyway), but rolling it back keeps the
-        # filter exactly in sync with the seen table
-        for tbl in (self.docs, self.seen, self.schedule, self.frontier,
-                    self.blooms_table, *dedup_tables):
+        for tbl in tables:
             snap = tbl.current_snapshot()
             if snap is None or int(snap.counters.get("wave", 0)) <= committed:
                 continue

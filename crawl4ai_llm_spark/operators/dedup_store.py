@@ -460,8 +460,8 @@ class DedupIndex:
         # ~2.3 s per wave — and Spark REBUILDS it for every action that
         # re-executes the plan — where collecting the batch's packed
         # (key, band) int64s and searchsorted-probing the stored scan
-        # map-side costs ~1 s once (same transport pattern as the
-        # frontier's Bloom broadcast tier, but exact). The stored table is
+        # map-side costs ~1 s once (an exact membership test shipped to
+        # the map side). The stored table is
         # still never shuffled; the probe is a map over its parquet scan.
         # Above the gate (batch no longer ≪ corpus) the plain shuffle
         # join is the right plan.

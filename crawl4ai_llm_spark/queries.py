@@ -150,7 +150,7 @@ def q_join_revenue_topn(spark: SparkSession, sf: str) -> DataFrame:
     so the fact table joins against a ~5× smaller single-column build side
     and only matching line items reach the aggregation. Top-10 is
     TakeOrdered, no full sort. At scale the orders⋈cust reduction is the
-    Bloom/semi-join pre-filter; locally both joins broadcast under the
+    semi-join pre-filter; locally both joins broadcast under the
     threshold — the one shuffle left is the groupBy's."""
     cust = load_table(spark, sf, "customer").where(F.col("c_mktsegment") == "BUILDING")
     orders = load_table(spark, sf, "orders")

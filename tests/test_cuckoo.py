@@ -1,120 +1,21 @@
-"""Cuckoo-filter tier: insert/delete/probe invariants + engine parity."""
+"""Compaction and evict/recrawl on small crawls of the ``ck-42`` graph.
+
+The module is named for the cuckoo seen filter its first tests covered.
+The filter is gone (the seen check is the exact anti-join on the Spark
+tier and the resident seen index on the driver tier); these two engine
+tests remain.
+"""
 
 from __future__ import annotations
 
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
-from crawl4ai_llm_spark.frontier import cuckoo as ck
+from crawl4ai_llm_spark.frontier import engine as eng_mod
 from crawl4ai_llm_spark.frontier import webgraph as wg
 from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
 
-from tests.oracle_crawler import simulate
-
-
-def test_cuckoo_core_invariants():
-    cf = ck.CuckooFilter()
-    keys = (np.arange(20000, dtype=np.int64) * 2654435761) - 10**12
-    assert cf.insert(keys) == 0  # no overflow at this load factor
-    assert cf.contains(keys).all()  # zero false negatives
-    fresh = keys + 1
-    fp_rate = cf.contains(fresh).mean()
-    assert fp_rate < 0.01, f"false-positive rate {fp_rate}"
-    # deletion actually removes
-    assert cf.delete(keys[:5000]) == 5000
-    assert not cf.contains(keys[:5000]).any() or cf.contains(keys[:5000]).mean() < 0.01
-    assert cf.contains(keys[5000:]).all()  # others untouched
-    # serialization roundtrip
-    cf2 = ck.CuckooFilter.from_bytes(cf.to_bytes())
-    assert (cf2.contains(keys[5000:])).all()
-
-
-def test_saturation_degrades_to_always_maybe():
-    """A filter pushed past capacity must NEVER produce a false negative:
-    the saturated bucket is marked and probes maybe_seen=True for all keys
-    (routing them through the exact anti-join) instead of silently dropping
-    the keys whose inserts failed."""
-    cf = ck.CuckooFilter()
-    # capacity is N_BUCKETS*SLOTS = 65536; push well past it
-    keys = (np.arange(80000, dtype=np.int64) * 2654435761) - 10**12
-    failed = cf.insert(keys)
-    assert failed > 0  # the overload actually saturated it
-    packed = cf.to_bytes() + ck._SATURATED
-    assert ck.is_saturated(packed)
-    assert not ck.is_saturated(cf.to_bytes())
-    # from_bytes strips the sentinel cleanly
-    assert ck.CuckooFilter.from_bytes(packed).table.shape == cf.table.shape
-
-
-def test_saturated_bucket_probe_and_update(spark):
-    # force saturation through the distributed path: 1 partition, >capacity keys
-    seen = spark.range(0, 70000).select((F.col("id") * 7919 - 4000).alias("url_hash"))
-    filters = ck.update_filters(seen, None, n_partitions=1)
-    assert ck.saturated_buckets(filters) == [0]
-    # EVERY key probes maybe_seen=True — including ones whose insert failed
-    probed, bc = ck.probe_expr(seen, filters, n_partitions=1)
-    assert probed.where(~F.col("maybe_seen")).count() == 0
-    bc.destroy()
-    # never-inserted keys also probe True (degraded, not wrong)
-    fresh = spark.range(200000, 200100).select((F.col("id") * 7919).alias("url_hash"))
-    probed2, bc2 = ck.probe_expr(fresh, filters, n_partitions=1)
-    assert probed2.where(~F.col("maybe_seen")).count() == 0
-    bc2.destroy()
-    # further updates keep the bucket saturated
-    delta = spark.range(70000, 71000).select((F.col("id") * 7919 - 4000).alias("url_hash"))
-    filters2 = ck.update_filters(delta, filters, n_partitions=1)
-    assert ck.saturated_buckets(filters2) == [0]
-
-
-def test_distributed_update_and_probe(spark):
-    seen = spark.range(0, 8000).select((F.col("id") * 7919 - 4000).alias("url_hash"))
-    filters = ck.update_filters(seen, None, n_partitions=8)
-    probed, bc = ck.probe_expr(seen, filters, n_partitions=8)
-    assert probed.where(~F.col("maybe_seen")).count() == 0  # no false negatives
-    bc.destroy()
-    # incremental delta insert
-    delta = spark.range(8000, 9000).select((F.col("id") * 7919 - 4000).alias("url_hash"))
-    filters2 = ck.update_filters(delta, filters, n_partitions=8)
-    probed2, bc2 = ck.probe_expr(delta, filters2, n_partitions=8)
-    assert probed2.where(~F.col("maybe_seen")).count() == 0
-    bc2.destroy()
-    # distributed delete
-    filters3 = ck.update_filters(delta, filters2, n_partitions=8, delete=True)
-    probed3, bc3 = ck.probe_expr(delta, filters3, n_partitions=8)
-    assert probed3.where(F.col("maybe_seen")).count() < 20  # only fp remain
-    bc3.destroy()
-
-
 SPEC = wg.GraphSpec(n_hosts=8, pages_per_host=25, hot_factor=5, max_links=8, seed="ck-42")
 SEEDS = wg.seed_urls(SPEC, n_seeds=10)
-CFG = dict(delay=1.0, wave_seconds=16.0, max_retries=3, max_depth=3, max_waves=40)
-
-
-def test_cuckoo_engine_matches_oracle(spark, tmp_path):
-    oracle = simulate(SPEC, SEEDS, **CFG)
-    eng = FrontierEngine(
-        spark,
-        str(tmp_path / "ck_wh"),
-        CrawlConfig(
-            delay=CFG["delay"],
-            wave_seconds=CFG["wave_seconds"],
-            max_retries=CFG["max_retries"],
-            max_depth=CFG["max_depth"],
-            max_waves=CFG["max_waves"],
-            seen_filter="cuckoo",
-            bloom_buckets=8,
-            graph=SPEC,
-        ),
-    )
-    eng.run(seeds=SEEDS)
-    got = {r["url"] for r in eng.seen.read().select("url").collect()}
-    assert got == oracle.seen
-    waves = {
-        r["url"]: r["wave"]
-        for r in eng.schedule.read().groupBy("url").agg(F.min("wave").alias("wave")).collect()
-    }
-    assert waves == oracle.wave_of
 
 
 def test_compaction_preserves_state(spark, tmp_path):
@@ -127,7 +28,7 @@ def test_compaction_preserves_state(spark, tmp_path):
             wh,
             CrawlConfig(
                 wave_seconds=16.0, max_depth=3, max_waves=40,
-                compact_every=compact_every, bloom_buckets=8, graph=SPEC,
+                compact_every=compact_every, graph=SPEC,
             ),
         )
         eng.run(seeds=SEEDS)
@@ -143,18 +44,15 @@ def test_compaction_preserves_state(spark, tmp_path):
     assert len(b.seen.current_snapshot().files) < len(a.seen.current_snapshot().files)
 
 
-def test_evict_and_recrawl(spark, tmp_path):
+def test_evict_and_recrawl(spark, tmp_path, monkeypatch):
+    """evict_from_seen + enqueue on the Spark tier (the row budget patched
+    to 0): the evicted URLs leave the seen table and the next wave
+    recrawls exactly them."""
+    monkeypatch.setattr(eng_mod, "DRIVER_WAVE_ROW_BUDGET", 0)
     eng = FrontierEngine(
         spark,
         str(tmp_path / "ev_wh"),
-        CrawlConfig(
-            wave_seconds=16.0,
-            max_depth=3,
-            max_waves=40,
-            seen_filter="cuckoo",
-            bloom_buckets=8,
-            graph=SPEC,
-        ),
+        CrawlConfig(wave_seconds=16.0, max_depth=3, max_waves=40, graph=SPEC),
     )
     eng.run(seeds=SEEDS)
     fetched = [r["doc_id"] for r in eng.docs.read().select("doc_id").limit(3).collect()]
@@ -173,3 +71,4 @@ def test_evict_and_recrawl(spark, tmp_path):
     }
     assert set(fetched) <= sched  # recrawled exactly the evicted urls
     assert eng.docs.read().count() >= n_docs_before  # re-fetched docs appended
+    assert set(eng.tiers) == {"spark:rows"}

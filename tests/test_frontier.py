@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from crawl4ai_llm_spark.frontier import engine as eng_mod
 from crawl4ai_llm_spark.frontier import webgraph as wg
 from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
 
@@ -161,162 +162,6 @@ def test_resume_backfills_legacy_docs_wave_column(spark, tmp_path):
     assert eng2.docs.read().where(F.col("wave") > committed).count() > 0
 
 
-def test_partitioned_bloom_probe_matches_broadcast(spark):
-    """The executor-resident (cogrouped) Bloom tier must agree bit-for-bit
-    with the broadcast tier: same bitmaps, same maybe_seen output."""
-    from crawl4ai_llm_spark.frontier import bloom as bm
-
-    seen = spark.range(0, 6000).select(
-        ((F.col("id") * 2654435761) % 1000000007 - 500000000).alias("url_hash")
-    )
-    n = 16
-    # bitmaps: distributed build (broadcast tier) vs cogrouped update tier
-    broadcast_filters = bm.build_blooms(seen, n)
-    rows = bm.update_filter_rows(seen.select("url_hash"), None, n).collect()
-    part_filters = {r["bucket"]: bytes(r["bloom"]) for r in rows}
-    assert part_filters == broadcast_filters
-    # probe: members + fresh keys, both tiers, identical verdicts per key
-    mix = seen.unionByName(
-        spark.range(0, 3000).select((F.col("id") * 7919 + 13).alias("url_hash"))
-    )
-    got_b, bc = bm.probe_expr(mix, broadcast_filters, n)
-    b_map = {r["url_hash"]: r["maybe_seen"] for r in got_b.collect()}
-    bc.destroy()
-    filters_df = spark.createDataFrame(
-        [(k, v) for k, v in part_filters.items()], "bucket int, bloom binary"
-    )
-    got_p = bm.probe_cogrouped(mix, filters_df, n)
-    p_map = {r["url_hash"]: r["maybe_seen"] for r in got_p.collect()}
-    assert p_map == b_map
-    # incremental update carries untouched buckets through unchanged
-    delta = spark.range(100000, 100200).select((F.col("id") * 31).alias("url_hash"))
-    rows2 = bm.update_filter_rows(delta, filters_df, n).collect()
-    assert {r["bucket"] for r in rows2} == set(part_filters)  # complete table
-    probed2 = bm.probe_cogrouped(delta, spark.createDataFrame(
-        [(r["bucket"], bytes(r["bloom"])) for r in rows2], "bucket int, bloom binary"
-    ), n)
-    assert probed2.where(~F.col("maybe_seen")).count() == 0  # no false negatives
-
-
-def test_partitioned_bloom_engine_matches_oracle(spark, tmp_path, oracle):
-    """Full crawl with bloom_transport='partitioned': nothing transits the
-    driver, final seen set still exactly equals the oracle, and the filter
-    table participates in kill/resume."""
-    wh = str(tmp_path / "pbloom_wh")
-    cfg = CrawlConfig(
-        delay=CFG["delay"],
-        wave_seconds=CFG["wave_seconds"],
-        max_retries=CFG["max_retries"],
-        max_depth=CFG["max_depth"],
-        max_waves=3,
-        bloom_transport="partitioned",
-        graph=SPEC,
-    )
-    eng = FrontierEngine(spark, wh, cfg)
-    eng.run(seeds=SEEDS)  # "crash" after wave 3
-    eng2 = FrontierEngine(spark, wh, CrawlConfig(**{**cfg.__dict__, "max_waves": CFG["max_waves"]}))
-    assert eng2.resume() == 3
-    eng2.run(seeds=None, max_waves=CFG["max_waves"])
-    got = {r["url"] for r in eng2.seen.read().select("url").collect()}
-    assert got == oracle.seen
-    # the filter table reflects the final seen set (no false negatives)
-    filters_df = eng2.blooms_table.read()
-    assert filters_df is not None
-    from crawl4ai_llm_spark.frontier import bloom as bm
-
-    probed = bm.probe_cogrouped(
-        eng2.seen.read().select("url_hash"), filters_df, eng2.config.bloom_buckets
-    )
-    assert probed.where(~F.col("maybe_seen")).count() == 0
-
-
-def test_auto_transport_switches_mid_run_with_parity(spark, tmp_path, oracle):
-    """bloom_transport='auto' must START on broadcast (filter footprint
-    under the budget: 15 seed buckets × 16 KiB), SWITCH one-way to
-    partitioned once the footprint outgrows broadcast_budget_bytes, and the
-    crawl's final seen set must still exactly equal the oracle — the
-    transport choice is pure mechanism, never semantics."""
-    wh = str(tmp_path / "auto_wh")
-    cfg = CrawlConfig(
-        delay=CFG["delay"],
-        wave_seconds=CFG["wave_seconds"],
-        max_retries=CFG["max_retries"],
-        max_depth=CFG["max_depth"],
-        max_waves=CFG["max_waves"],
-        bloom_transport="auto",
-        # seeds fill ~15 of 64 buckets (~245 KiB) — under budget; after
-        # wave 1's discoveries most buckets are non-empty (~1 MiB) — over
-        broadcast_budget_bytes=400_000,
-        graph=SPEC,
-    )
-    eng = FrontierEngine(spark, wh, cfg)
-    eng.run(seeds=SEEDS)
-    assert eng.transport_log[0] == "broadcast"
-    assert "partitioned" in eng.transport_log, eng.transport_log
-    sw = eng.transport_log.index("partitioned")
-    assert all(t == "partitioned" for t in eng.transport_log[sw:]), "switch must be one-way"
-    got = {r["url"] for r in eng.seen.read().select("url").collect()}
-    assert got == oracle.seen
-    # the switched state survives kill/resume: a fresh engine resolves
-    # straight to partitioned from the filter table's existence
-    eng2 = FrontierEngine(spark, wh, cfg)
-    eng2.resume()
-    assert eng2._resolve_transport() == "partitioned"
-
-
-def test_evict_keeps_partitioned_filter_state(spark, tmp_path):
-    """evict_from_seen on a partitioned/switched-auto run must keep the
-    filter table alive, not drop it: a dropped table would make auto's next
-    wave fall back to a driver-side broadcast rebuild of the entire filter
-    set (the regime the budget ruled out) and break the one-way-switch
-    invariant (code-review r03 finding). The rebuild itself is DEFERRED
-    (ADVICE r03): N evictions tag the table ``stale`` at zero rebuild cost
-    — a stale filter only over-includes the evicted keys, which the exact
-    anti-join verifies anyway — and the next wave's probe rebuilds once."""
-    wh = str(tmp_path / "evict_part_wh")
-    cfg = CrawlConfig(
-        delay=CFG["delay"],
-        wave_seconds=CFG["wave_seconds"],
-        max_retries=CFG["max_retries"],
-        max_depth=CFG["max_depth"],
-        max_waves=2,
-        bloom_transport="auto",
-        broadcast_budget_bytes=1,  # switch immediately
-        graph=SPEC,
-    )
-    eng = FrontierEngine(spark, wh, cfg)
-    eng.run(seeds=SEEDS)
-    assert eng.transport_log[-1] == "partitioned"
-    pre_evict_snap = eng.blooms_table.current_snapshot().snapshot_id
-    victims = [r["url"] for r in eng.seen.read().limit(3).collect()]
-    # three separate evictions: each must cost a metadata-only commit (same
-    # file list), never a filter rebuild
-    for v in victims:
-        assert eng.evict_from_seen([v]) == 1
-    # filter table survives (tagged stale, not dropped) → auto stays partitioned
-    assert not eng.blooms_table.is_empty()
-    assert eng._resolve_transport() == "partitioned"
-    snap = eng.blooms_table.current_snapshot()
-    assert snap.counters.get("stale") == 1
-    assert snap.files == eng.blooms_table.snapshot(pre_evict_snap).files
-    # the stale filter still has no false negatives on the remaining seen set
-    from crawl4ai_llm_spark.frontier import bloom as bm
-
-    probed = bm.probe_cogrouped(
-        eng.seen.read().select("url_hash"), eng.blooms_table.read(), cfg.bloom_buckets
-    )
-    assert probed.where(~F.col("maybe_seen")).count() == 0
-    # the next wave's probe performs the ONE deferred rebuild and clears the tag
-    eng.run_wave(eng.last_committed_wave() + 1)
-    snap2 = eng.blooms_table.current_snapshot()
-    assert not snap2.counters.get("stale")
-    assert snap2.files != snap.files  # actually rebuilt
-    probed2 = bm.probe_cogrouped(
-        eng.seen.read().select("url_hash"), eng.blooms_table.read(), cfg.bloom_buckets
-    )
-    assert probed2.where(~F.col("maybe_seen")).count() == 0
-
-
 def test_resume_survives_torn_manifest_tmp(spark, tmp_path, oracle):
     """A crash BETWEEN the manifest tmp-write and its atomic rename leaves a
     snap-N.json.tmp-<uuid> file in meta/. snapshots() must ignore it (it was
@@ -349,3 +194,82 @@ def test_resume_survives_torn_manifest_tmp(spark, tmp_path, oracle):
     eng2.run(seeds=None, max_waves=CFG["max_waves"])
     got_seen = {r["url"] for r in eng2.seen.read().select("url").collect()}
     assert got_seen == oracle.seen
+
+
+def _run_waves(eng, first: int, last: int | None = None) -> list[str]:
+    """Run waves ``first``.. until ``last`` or one schedules nothing;
+    each wave's tier."""
+    log, wave = [], first
+    while last is None or wave <= last:
+        before = eng.tiers.copy()
+        out = eng.run_wave(wave)
+        (tier,) = eng.tiers - before
+        log.append(tier)
+        if not out.get("scheduled"):
+            break
+        wave += 1
+    return log
+
+
+def _assert_seen_and_waves(eng, oracle) -> None:
+    assert {r["url"] for r in eng.seen.read().select("url").collect()} == oracle.seen
+    got_waves = {
+        r["url"]: r["wave"]
+        for r in eng.schedule.read().groupBy("url").agg(F.min("wave").alias("wave")).collect()
+    }
+    assert got_waves == oracle.wave_of
+
+
+def test_partitioned_bloom_engine_matches_oracle(spark, tmp_path, monkeypatch, oracle):
+    """Every wave on the Spark tier (the row budget patched to 0), where
+    the exact anti-join is the seen check: a "crash" after wave 3 and a
+    resume, and the crawl still equals the oracle. (Named for the
+    partitioned Bloom transport that once kept this crawl off the driver.)"""
+    monkeypatch.setattr(eng_mod, "DRIVER_WAVE_ROW_BUDGET", 0)
+    wh = str(tmp_path / "spark_resume_wh")
+    cfg = CrawlConfig(
+        delay=CFG["delay"],
+        wave_seconds=CFG["wave_seconds"],
+        max_retries=CFG["max_retries"],
+        max_depth=CFG["max_depth"],
+        max_waves=3,
+        graph=SPEC,
+    )
+    eng = FrontierEngine(spark, wh, cfg)
+    eng.run(seeds=SEEDS)  # "crash" after wave 3
+    eng2 = FrontierEngine(spark, wh, CrawlConfig(**{**cfg.__dict__, "max_waves": CFG["max_waves"]}))
+    assert eng2.resume() == 3
+    eng2.run(seeds=None, max_waves=CFG["max_waves"])
+    _assert_seen_and_waves(eng2, oracle)
+    assert set(eng.tiers) == set(eng2.tiers) == {"spark:rows"}
+
+
+def test_auto_transport_switches_mid_run_with_parity(spark, tmp_path, monkeypatch, oracle):
+    """Whether a wave's rows go through the driver or the executors is the
+    engine's choice per wave, not a setting. Under a row budget that the
+    seeds fit and the grown seen set does not, the crawl STARTS on the
+    driver tier and SWITCHES one-way to the Spark tier: a Spark wave's seen
+    rows are not in the resident index, so every later wave has more rows
+    to decode than the budget. A "crash" after wave 3 and a resume keep
+    the switch, and the crawl still equals the oracle."""
+    monkeypatch.setattr(eng_mod, "DRIVER_WAVE_ROW_BUDGET", 100)
+    wh = str(tmp_path / "auto_wh")
+    cfg = CrawlConfig(
+        delay=CFG["delay"],
+        wave_seconds=CFG["wave_seconds"],
+        max_retries=CFG["max_retries"],
+        max_depth=CFG["max_depth"],
+        max_waves=CFG["max_waves"],
+        graph=SPEC,
+    )
+    eng = FrontierEngine(spark, wh, cfg)
+    eng.init_seeds(SEEDS)
+    log = _run_waves(eng, 1, 3)
+    assert log[0] == "driver"
+    assert "spark:rows" in log, log
+    sw = log.index("spark:rows")
+    assert all(t == "spark:rows" for t in log[sw:]), "switch must be one-way"
+    eng2 = FrontierEngine(spark, wh, cfg)
+    assert eng2.resume() == 3
+    assert set(_run_waves(eng2, 4)) == {"spark:rows"}
+    _assert_seen_and_waves(eng2, oracle)

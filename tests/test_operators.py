@@ -5,7 +5,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from crawl4ai_llm_spark.frontier import bloom as bloom_mod
 from crawl4ai_llm_spark.frontier.hashing import spark_hash_str
 from crawl4ai_llm_spark.functions.urls import _canonicalize_one
 from crawl4ai_llm_spark.operators import dedup, similarity
@@ -28,27 +27,6 @@ def test_canonicalizer_rules():
     assert f("ftp://h/x") is None
     assert f("not a url") is None
     assert f(None) is None
-
-
-def test_bloom_no_false_negatives(spark):
-    seen = spark.range(0, 5000).select(
-        (F.col("id") * 2654435761 % 1000000007 - 500000000).alias("url_hash")
-    )
-    blooms = bloom_mod.build_blooms(seen, n_buckets=16)
-    probed, bc = bloom_mod.probe_expr(seen, blooms, n_buckets=16)
-    # every member must probe positive — zero false negatives
-    assert probed.where(~F.col("maybe_seen")).count() == 0
-    bc.destroy()
-
-
-def test_bloom_filters_most_nonmembers(spark):
-    seen = spark.range(0, 5000).select((F.col("id") * 7919).alias("url_hash"))
-    blooms = bloom_mod.build_blooms(seen, n_buckets=16)
-    fresh = spark.range(0, 5000).select((F.col("id") * 7919 + 1).alias("url_hash"))
-    probed, bc = bloom_mod.probe_expr(fresh, blooms, n_buckets=16)
-    fp = probed.where(F.col("maybe_seen")).count() / 5000
-    assert fp < 0.05, f"false-positive rate too high: {fp}"
-    bc.destroy()
 
 
 def test_simhash_band_blocking_is_exhaustive(spark, sf_dir):

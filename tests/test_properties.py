@@ -1,4 +1,4 @@
-"""Property-based tests (hypothesis) for the URL/hash/filter invariants."""
+"""Property-based tests (hypothesis) for the URL/hash/signature invariants."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from crawl4ai_llm_spark.frontier.cuckoo import CuckooFilter
 from crawl4ai_llm_spark.frontier.hashing import murmur3_32
 from crawl4ai_llm_spark.functions.urls import _canonicalize_one
 
@@ -57,18 +56,6 @@ def test_murmur3_range_and_determinism(b):
     h = murmur3_32(b)
     assert -(2**31) <= h < 2**31
     assert murmur3_32(b) == h
-
-
-@given(st.lists(st.integers(min_value=-(2**62), max_value=2**62), min_size=1, max_size=200, unique=True))
-@settings(max_examples=100, deadline=None)
-def test_cuckoo_membership_property(keys):
-    cf = CuckooFilter()
-    arr = np.array(keys, dtype=np.int64)
-    assert cf.insert(arr) == 0
-    assert cf.contains(arr).all()  # no false negatives, ever
-    cf.delete(arr)
-    # after deleting everything inserted, table is empty again
-    assert cf.table.sum() == 0
 
 
 @given(
@@ -127,22 +114,6 @@ def test_minhash_vectorized_signature_matches_reference(gram_hash_lists):
                 ((MINHASH_A[i] * g + MINHASH_B[i]) % M64) >> SIG_SHIFT for g in grams
             )
             assert vec[d, i] == expect
-
-
-@given(st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1), min_size=1, max_size=300, unique=True))
-@settings(max_examples=100, deadline=None)
-def test_bloom_bitmap_core_no_false_negatives(keys):
-    """The shared bitmap core of BOTH bloom transports: members of a
-    bitmap built via _positions always probe positive."""
-    from crawl4ai_llm_spark.frontier import bloom as bm
-
-    h = np.array(keys, dtype=np.int64)
-    bits = np.zeros(bm.M_BITS, dtype=bool)
-    bits[bm._positions(h).ravel().astype(np.int64)] = True
-    packed = np.packbits(bits).tobytes()
-    # probe exactly as both transports do
-    bits2 = np.unpackbits(np.frombuffer(packed, dtype=np.uint8))
-    assert bits2[bm._positions(h)].all(axis=1).all()
 
 
 @given(

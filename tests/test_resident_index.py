@@ -267,8 +267,7 @@ def test_indexes_follow_every_table_change(spark, tmp_path):
 
 def test_seen_hash_collision_keeps_url_new(spark, tmp_path):
     """A seen row with a discovered URL's url_hash but another url: the
-    Bloom filter and the index both hit, and the url compare still keeps
-    the discovered URL new."""
+    index hits, and the url compare still keeps the discovered URL new."""
     plain = _engine(spark, tmp_path / "plain", content_dedup=False)
     plain.init_seeds(SEEDS)
     plain.run_wave(1)

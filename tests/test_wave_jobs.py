@@ -1,8 +1,7 @@
 """A crawl wave's Spark job budget on each tier, and the driver-side work
-that replaced jobs: the driver tier's zero-job waves, Bloom bitmaps built
-with numpy on the driver, out-links canonicalized inside the fetch batch,
-and catalog reads that take their schema from the first file's footer
-instead of an inference job.
+that replaced jobs: the driver tier's zero-job waves, out-links
+canonicalized inside the fetch batch, and catalog reads that take their
+schema from the first file's footer instead of an inference job.
 
 Jobs are counted by job-id range through the status tracker (the same rule
 as ``perfbench/tracer.py``), so jobs launched from the engine's commit
@@ -16,12 +15,9 @@ import io
 import json
 import random
 
-import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from crawl4ai_llm_spark.frontier import bloom as bloom_mod
 from crawl4ai_llm_spark.frontier import engine as eng_mod
 from crawl4ai_llm_spark.frontier import webgraph as wg
 from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
@@ -34,10 +30,9 @@ SPEC = wg.GraphSpec(
 CFG = dict(delay=1.0, wave_seconds=16.0, max_retries=3, max_depth=4)
 SEEDS = wg.seed_urls(SPEC, n_seeds=10)
 # jobs of one steady content-dedup wave (wave 2: the near-dup index is
-# non-empty, so the driver-tier match runs) on SPEC: 27 since Bloom upkeep,
-# link canonicalization and read schemas left Spark (37 before), plus a
-# margin of 2
-WAVE_JOB_BUDGET = 27 + 2
+# non-empty, so the driver-tier match runs) on SPEC: 25, plus a margin
+# of 2
+WAVE_JOB_BUDGET = 25 + 2
 
 
 class JobCounter:
@@ -79,24 +74,26 @@ def jobs(spark):
 def two_waves(spark, tmp_path_factory, jobs):
     """Seeds + two content-dedup waves on the Spark tier (the driver tier's
     row budget patched to 0) with CRAWL_WAVE_TIMING on; records
-    each wave's job count, its stdout and the plan of the frame the Bloom
-    probe receives (the discovered links)."""
+    each wave's job count, its stdout and the plan of the frame the seen
+    anti-join receives (the discovered links)."""
     eng = FrontierEngine(
         spark, str(tmp_path_factory.mktemp("wave_jobs")),
         CrawlConfig(**CFG, graph=SPEC, content_dedup=True),
     )
     eng.init_seeds(SEEDS)
     plans = []
-    probe_expr = bloom_mod.probe_expr
+    frame = type(spark.range(1))
+    join = frame.join
 
-    def spy(df, *a, **kw):
-        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
-        return probe_expr(df, *a, **kw)
+    def spy(df, other, on=None, how=None):
+        if on == "url" and how == "left_anti":  # the wave's seen check
+            plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return join(df, other, on, how)
 
     out = {"jobs": [], "stats": [], "stdout": io.StringIO(), "plans": plans, "engine": eng}
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(eng_mod, "DRIVER_WAVE_ROW_BUDGET", 0)  # the Spark tier
-        mp.setattr(bloom_mod, "probe_expr", spy)
+        mp.setattr(frame, "join", spy)
         mp.setenv("CRAWL_WAVE_TIMING", "1")
         for wave in (1, 2):
             with jobs.count() as rec, contextlib.redirect_stdout(out["stdout"]):
@@ -107,7 +104,7 @@ def two_waves(spark, tmp_path_factory, jobs):
 
 def test_wave_job_budget(two_waves):
     """A steady content-dedup wave stays within its job budget, and the
-    discovered links reach the Bloom probe with no Python stage left in
+    discovered links reach the seen anti-join with no Python stage left in
     their plan (canonicalization happened in the fetch batch)."""
     assert 0 < two_waves["jobs"][1] <= WAVE_JOB_BUDGET, two_waves["jobs"]
     assert len(two_waves["plans"]) == 2
@@ -123,7 +120,7 @@ def test_wave_timing_is_one_json_line_per_wave(two_waves):
     for rec, stats in zip(recs, two_waves["stats"]):
         assert rec["scheduled"] == stats["scheduled"] > 0
         assert rec["fetched"] == stats["fetched"] > 0
-        assert rec["transport"] == "broadcast"
+        assert set(rec) == {"wave", "marks", "scheduled", "fetched", "tier"}
         assert rec["marks"] == two_waves["engine"].wave_marks[rec["wave"]]
         assert {"fetch+lineage", "new_links_count", "checkpoint"} <= set(rec["marks"])
 
@@ -227,56 +224,6 @@ def test_read_schema_follows_first_file(spark, tmp_path, monkeypatch, later_sort
     assert got.schema == spark.read.parquet(*files).schema
     assert got.columns == ["doc_id", "n"] + (["wave"] if later_sorts_first else [])
     assert sorted(r["doc_id"] for r in got.collect()) == ["a", "b"]
-
-
-def _reference_build_blooms(seen, n_buckets):
-    """The former distributed build: a shuffle on the bucket, then one
-    numpy bitmap per group inside applyInPandas."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.zeros(bloom_mod.M_BITS, dtype=bool)
-        pos = bloom_mod._positions(pdf["url_hash"].to_numpy())
-        bits[pos.ravel().astype(np.int64)] = True
-        return pd.DataFrame(
-            {"bucket": [int(pdf["bucket"].iloc[0])], "bloom": [np.packbits(bits).tobytes()]}
-        )
-
-    rows = (
-        seen.select("url_hash", F.pmod(F.col("url_hash"), F.lit(n_buckets)).alias("bucket"))
-        .groupBy("bucket")
-        .applyInPandas(build, "bucket int, bloom binary")
-        .collect()
-    )
-    return {r["bucket"]: bytes(r["bloom"]) for r in rows}
-
-
-@pytest.mark.parametrize(
-    "n_hashes,n_buckets", [(0, 64), (40, 64), (3000, 64), (3000, 13), (500, 1)]
-)
-def test_blooms_from_hashes_equals_distributed_build(spark, jobs, n_hashes, n_buckets):
-    """Byte-for-byte the bitmaps of the former applyInPandas build, for
-    seeded int64 hashes of both signs (40 hashes leave most of 64 buckets
-    empty; 13 buckets is not a power of two)."""
-    rng = np.random.default_rng(n_hashes * 100 + n_buckets)
-    hashes = rng.integers(-(2**63), 2**63 - 1, size=n_hashes, dtype=np.int64)
-    hashes[: n_hashes // 3] = rng.integers(-(2**31), 2**31, size=n_hashes // 3)
-    seen = spark.createDataFrame(pd.DataFrame({"url_hash": hashes}), "url_hash long")
-    want = _reference_build_blooms(seen, n_buckets)
-    got = bloom_mod.blooms_from_hashes(hashes, n_buckets)
-    assert got == want
-    if 0 < n_hashes < n_buckets:
-        assert len(got) < n_buckets  # some buckets are empty
-    # streamed in slices and OR-ed, as the engine's first build does
-    eng = FrontierEngine.__new__(FrontierEngine)
-    eng._blooms = {}
-    for part in np.array_split(hashes, 3):
-        eng._bloom_or(bloom_mod.blooms_from_hashes(part, n_buckets))
-    assert eng._blooms == want
-    # the DataFrame entry point collects the hashes: at most one job (a
-    # local relation may collect without one), and no shuffle stage
-    with jobs.count() as rec:
-        assert bloom_mod.build_blooms(seen, n_buckets) == want
-    assert rec["jobs"] <= 1 and rec["stages"] == rec["jobs"]
 
 
 def test_fetch_returns_canonical_links(spark, tmp_path):

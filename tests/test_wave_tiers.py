@@ -17,7 +17,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from crawl4ai_llm_spark.frontier import bloom as bloom_mod
 from crawl4ai_llm_spark.frontier import engine as eng_mod
 from crawl4ai_llm_spark.frontier import webgraph as wg
 from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
@@ -248,7 +247,7 @@ def test_torn_driver_wave_resumes(spark, tmp_path, runs, oracle):
 
 
 def test_exact_seen_filter_runs_on_driver(spark, tmp_path, oracle):
-    eng = _engine(spark, tmp_path, seen_filter="exact", content_dedup=False)
+    eng = _engine(spark, tmp_path, content_dedup=False)
     eng.run(seeds=SEEDS)
     assert set(eng.tiers) == {"driver"}
     assert {r["url"] for r in eng.seen.read().collect()} == oracle.seen
@@ -257,8 +256,8 @@ def test_exact_seen_filter_runs_on_driver(spark, tmp_path, oracle):
 @pytest.mark.parametrize(
     "kw,reason",
     [
-        (dict(seen_filter="cuckoo"), "spark:filter"),
-        (dict(bloom_transport="partitioned"), "spark:filter"),
+        (dict(), "driver"),
+        (dict(parse_work=0, fetch_latency_ms=0.0), "driver"),
         (dict(parse_work=1), "spark:fetch"),
         (dict(fetch_latency_ms=0.01), "spark:fetch"),
     ],
@@ -268,8 +267,6 @@ def test_decline_reason(spark, tmp_path, kw, reason):
     eng.init_seeds(SEEDS)
     eng.run_wave(1)
     assert eng.tiers == {reason: 1}
-    want_log = [] if kw.get("seen_filter") == "cuckoo" else [kw.get("bloom_transport", "broadcast")]
-    assert eng.transport_log == want_log
 
 
 def test_decline_reason_rows(spark, tmp_path, monkeypatch):
@@ -281,14 +278,14 @@ def test_decline_reason_rows(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(eng_mod, "DRIVER_WAVE_ROW_BUDGET", 10**9)
     eng.run_wave(2)
     assert eng.tiers == {"spark:rows": 1, "driver": 1}
-    assert eng.transport_log == ["broadcast", "broadcast"]
 
 
-def test_spark_wave_hands_its_bloom_to_driver_waves(spark, tmp_path, runs, oracle):
-    """Driver waves keep no Bloom: the resident seen index is exact. A
-    Spark-tier wave builds the Bloom once from the seen table, and the
-    driver waves after it keep it current, so at the end it equals a
-    fresh build over every seen url_hash."""
+def test_spark_wave_hands_its_bloom_to_driver_waves(spark, tmp_path, oracle):
+    """A Spark-tier wave among driver waves hands its seen rows to the
+    driver waves after it: they probe a resident seen index that covers
+    what the Spark wave wrote, and the crawl equals the oracle. (Named for
+    the Bloom filter the Spark wave once handed over; the seen check is
+    exact on both tiers now.)"""
     eng = _engine(spark, tmp_path, content_dedup=False)
     eng.init_seeds(SEEDS)
     wave = 0
@@ -296,7 +293,6 @@ def test_spark_wave_hands_its_bloom_to_driver_waves(spark, tmp_path, runs, oracl
         wave += 1
         with pytest.MonkeyPatch.context() as mp:
             if wave == 3:
-                assert eng._blooms is None
                 mp.setattr(eng_mod, "DRIVER_WAVE_ROW_BUDGET", 0)
             if not eng.run_wave(wave).get("scheduled"):
                 break
@@ -308,12 +304,10 @@ def test_spark_wave_hands_its_bloom_to_driver_waves(spark, tmp_path, runs, oracl
     for r in eng.schedule.read().collect():
         first[r["url"]] = min(first.get(r["url"], r["wave"]), r["wave"])
     assert first == oracle.wave_of
-    assert eng._blooms == bloom_mod.blooms_from_hashes(
-        [r["url_hash"] for r in seen], eng.config.bloom_buckets
-    )
-    # a crawl that stays on the driver tier never builds one
-    driver_only = runs("driver", "flag")
-    assert set(driver_only.tiers) == {"driver"} and driver_only._blooms is None
+    index = eng._seen_index
+    assert index.n_rows == len(seen)
+    found = index.take(index.find([r["url_hash"] for r in seen])[0], "url")
+    assert sorted(found) == sorted(r["url"] for r in seen)
 
 
 @pytest.mark.parametrize(
@@ -416,25 +410,6 @@ def test_text_signatures_equal_two_udf_chain(spark):
         assert list(got[i]) == sig
 
 
-def test_might_contain_equals_probe_expr(spark):
-    """The shared Bloom probe gives probe_expr's verdicts, which equal the
-    independent cogrouped probe's; members are always positive."""
-    rng = np.random.default_rng(3)
-    members = rng.integers(-(2**31), 2**31, size=2000)
-    blooms = bloom_mod.blooms_from_hashes(members[:1500], 13)
-    probe = np.concatenate([members, rng.integers(-(2**31), 2**31, size=2000)])
-    df = spark.createDataFrame(pd.DataFrame({"url_hash": probe}), "url_hash long")
-    out, bc = bloom_mod.probe_expr(df, blooms, 13)
-    want = {r["url_hash"]: r["maybe_seen"] for r in out.collect()}
-    bc.destroy()
-    filters = spark.createDataFrame(list(blooms.items()), "bucket int, bloom binary")
-    cogrouped = bloom_mod.probe_cogrouped(df, filters, 13).collect()
-    assert {r["url_hash"]: r["maybe_seen"] for r in cogrouped} == want
-    got = bloom_mod.might_contain(probe, blooms, 13)
-    assert {int(h): bool(m) for h, m in zip(probe, got)} == want
-    assert got[:1500].all() and not got.all()
-
-
 def test_wave_timing_line_names_the_tier(spark, tmp_path, monkeypatch, capsys):
     monkeypatch.setenv("CRAWL_WAVE_TIMING", "1")
     eng = _engine(spark, tmp_path)
@@ -453,18 +428,14 @@ def test_wave_timing_line_names_the_tier(spark, tmp_path, monkeypatch, capsys):
 @pytest.mark.parametrize(
     "kw",
     [
-        dict(seen_filter="blom"), dict(seen_filter="Bloom"), dict(seen_filter=""),
-        dict(bloom_transport="broadcst"), dict(bloom_transport="PARTITIONED"),
-        dict(bloom_transport=None),
+        dict(seen_filter="bloom"), dict(seen_filter="exact"),
+        dict(bloom_transport="broadcast"), dict(bloom_transport="partitioned"),
+        dict(bloom_buckets=64), dict(broadcast_budget_bytes=1 << 20),
     ],
 )
 def test_crawl_config_rejects_unknown_filter_and_transport(kw):
-    with pytest.raises(ValueError, match=next(iter(kw))):
+    """The probabilistic seen filters are gone with their four switches: a
+    config that still sets one, even to its old default, fails naming the
+    field."""
+    with pytest.raises(TypeError, match=next(iter(kw))):
         CrawlConfig(**kw)
-
-
-@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo", "exact"])
-@pytest.mark.parametrize("transport", ["broadcast", "partitioned", "auto"])
-def test_crawl_config_accepts_known_filters(seen_filter, transport):
-    cfg = CrawlConfig(seen_filter=seen_filter, bloom_transport=transport)
-    assert (cfg.seen_filter, cfg.bloom_transport) == (seen_filter, transport)

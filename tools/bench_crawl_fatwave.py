@@ -24,9 +24,9 @@ instant-fetch worst case. `--tiers` instead crawls each scale twice with
 content dedup on, every wave forced onto one ``run_wave`` tier (driver,
 then Spark), and reports per-wave walls against the rows the tier
 decision counts (the pending frontier plus the files the resident
-indexes do not cover yet) and the bytes those indexes hold after the
-wave: the DRIVER_WAVE_ROW_BUDGET crossover and the RESIDENT_INDEX_BYTES
-footprint (``--waves``: stop each leg after N waves, default 8). Writes
+indexes do not cover yet), the Spark jobs each wave ran, and the bytes
+those indexes hold after the wave: the DRIVER_WAVE_ROW_BUDGET crossover
+and the RESIDENT_INDEX_BYTES footprint (``--waves``: stop each leg after N waves, default 8). Writes
 one JSON line per leg + a final summary JSON line; healthy-box evidence
 for BENCH.md's tables.
 """
@@ -122,6 +122,19 @@ def run_leg(spark, scale: int, dedup_on: bool, latency_ms: float = 0.0) -> dict:
     }
 
 
+def _next_job_id(spark, first: int | None = None) -> int:
+    """The id the next Spark job will get (the listener bus drained
+    first), scanning from ``first`` or from the newest job the status
+    tracker still reports."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    j = max(tracker.getJobIdsForGroup(None), default=-1) + 1 if first is None else first
+    while tracker.getJobInfo(j) is not None:
+        j += 1
+    return j
+
+
 def run_tier_leg(spark, scale: int, tier: str, max_waves: int = 8,
                  max_wave_s: float = 150.0) -> dict:
     """One content-dedup crawl of the scale's graph with every wave on one
@@ -129,8 +142,9 @@ def run_tier_leg(spark, scale: int, tier: str, max_waves: int = 8,
     0). Per wave: the rows the tier decision counts (``_rows_to_decode``,
     from parquet footers), the rows the frontier, seen and band tables
     hold (what the gate counted before the resident indexes), the
-    scheduled URLs, the wall and the resident index bytes after the wave.
-    A leg stops after ``max_waves`` or a wave longer than ``max_wave_s``."""
+    scheduled URLs, the wall, the Spark jobs it ran and the resident
+    index bytes after the wave. A leg stops after ``max_waves`` or a wave
+    longer than ``max_wave_s``."""
     from crawl4ai_llm_spark.frontier import engine as eng_mod
     from crawl4ai_llm_spark.frontier import webgraph as wg
     from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
@@ -150,6 +164,7 @@ def run_tier_leg(spark, scale: int, tier: str, max_waves: int = 8,
                 snaps = {t: t.current_snapshot() for t in (eng.frontier, eng.seen, eng.docs, bands)}
                 rows = eng._rows_to_decode(snaps)[1]
                 held = sum(eng._live_rows(t) for t in (eng.frontier, eng.seen, bands))
+                first_job = _next_job_id(spark)
                 t0 = time.time()
                 stats = eng.run_wave(w)
                 wall = time.time() - t0
@@ -157,6 +172,7 @@ def run_tier_leg(spark, scale: int, tier: str, max_waves: int = 8,
                     break
                 waves.append({"wave": w, "rows": rows, "held_rows": held,
                               "scheduled": stats["scheduled"], "wall_sec": round(wall, 2),
+                              "jobs": _next_job_id(spark, first_job) - first_job,
                               "resident_bytes": eng.resident_index_bytes()})
                 if wall > max_wave_s:
                     break
@@ -181,7 +197,7 @@ def tiers_main(spark, scales: list[int], max_waves: int) -> None:
             rows.append({"scale": scale, "wave": d["wave"], "rows": d["rows"],
                          "held_rows": d["held_rows"], "scheduled": d["scheduled"],
                          "driver_sec": d["wall_sec"], "spark_sec": s["wall_sec"],
-                         "resident_bytes": d["resident_bytes"]})
+                         "spark_jobs": s["jobs"], "resident_bytes": d["resident_bytes"]})
     spark_wins = [r["rows"] for r in rows if r["spark_sec"] < r["driver_sec"]]
     print(json.dumps({"summary": rows,
                       "crossover_rows": min(spark_wins) if spark_wins else None}))

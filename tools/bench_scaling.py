@@ -40,13 +40,12 @@ from crawl4ai_llm_spark.frontier.engine import CrawlConfig, FrontierEngine
 eng_mod.DRIVER_WAVE_ROW_BUDGET = 0
 cpus = int(sys.argv[1])
 quick = sys.argv[2] == "1"
-transport = sys.argv[3]
 spark = get_spark(app_name=f"scaling-{{cpus}}", master=f"local[{{cpus}}]",
                   shuffle_partitions=max(cpus, 8))
 if quick:
     spec = wg.GraphSpec(n_hosts=200, pages_per_host=300, hot_factor=25,
                         max_links=12, seed="scaling-42")
-    n_seeds, max_waves, buckets = 2000, 4, 64
+    n_seeds, max_waves = 2000, 4
 else:
     # ~600k-URL graph: waves of 10^5 URLs — the steady-state regime the
     # north-star metric describes (per-wave fixed cost amortized). The hot
@@ -57,14 +56,8 @@ else:
     # the scaling property under test.
     spec = wg.GraphSpec(n_hosts=400, pages_per_host=1500, hot_factor=40,
                         max_links=12, seed="scaling-42")
-    n_seeds, max_waves, buckets = 20000, 6, 128
-cfg = CrawlConfig(wave_seconds=36000.0, max_depth=5, max_waves=max_waves,
-                  bloom_buckets=buckets, graph=spec,
-                  # default: broadcast transport wins at these wave sizes
-                  # (it is NOT the 10^10-URL transport though — pass
-                  # --transport partitioned to evidence the fused
-                  # probe+update cogroup's scaling, VERDICT r03 #2)
-                  bloom_transport=transport,
+    n_seeds, max_waves = 20000, 6
+cfg = CrawlConfig(wave_seconds=36000.0, max_depth=5, max_waves=max_waves, graph=spec,
                   fetch_latency_ms=0.0 if quick else 80.0,
                   async_concurrency=24)
 with tempfile.TemporaryDirectory() as tmp:
@@ -95,13 +88,13 @@ spark.stop()
 STEAL_FRAC_MAX = 0.02
 
 
-def run_level(cpus: int, quick: bool, transport: str = "broadcast") -> dict:
+def run_level(cpus: int, quick: bool) -> dict:
     from tools.boxstate import InRun
 
     script = CHILD.format(repo=REPO)
     with InRun() as box:
         out = subprocess.run(
-            [sys.executable, "-c", script, str(cpus), "1" if quick else "0", transport],
+            [sys.executable, "-c", script, str(cpus), "1" if quick else "0"],
             capture_output=True,
             text=True,
             timeout=3600,
@@ -134,7 +127,6 @@ def main() -> None:
     full load, so 8→32 cannot evidence ENGINE scaling; 4→16 raw ceiling is
     0.86."""
     quick = "--quick" in sys.argv
-    transport = "partitioned" if "--transport=partitioned" in sys.argv else "broadcast"
     # box-state controls bracket each level (same discipline as bench.py —
     # the r05 0.754 broadcast run that looked like a regression measured
     # sys_frac 0.76 right after: a sick box, not the engine)
@@ -143,7 +135,7 @@ def main() -> None:
 
     ctl0 = cpu_state_control()
     print("control (pre local[4]):", ctl0, flush=True)
-    r8 = run_level(4, quick, transport)
+    r8 = run_level(4, quick)
     print("local[4]: ", r8, flush=True)
     if not quick:
         import time
@@ -151,7 +143,7 @@ def main() -> None:
         time.sleep(90)  # let clocks/thermals settle between levels
     ctl1 = cpu_state_control()
     print("control (pre local[16]):", ctl1, flush=True)
-    r32 = run_level(16, quick, transport)
+    r32 = run_level(16, quick)
     print("local[16]:", r32)
     ctl2 = cpu_state_control()
     print("control (post):", ctl2, flush=True)
@@ -173,15 +165,10 @@ def main() -> None:
 
     waves8 = ", ".join(f"w{w['wave']}:{w['scheduled']}@{w['seconds']}s" for w in r8.get("waves", []))
     waves32 = ", ".join(f"w{w['wave']}:{w['scheduled']}@{w['seconds']}s" for w in r32.get("waves", []))
-    title = (
-        "## Scaling evidence (north rule, measured by tools/bench_scaling.py)"
-        if transport == "broadcast"
-        else "## Scaling evidence — partitioned Bloom transport (fused probe+update cogroup)"
-    )
     section = f"""
-{title}
+## Scaling evidence (north rule, measured by tools/bench_scaling.py)
 
-Transport: `bloom_transport="{transport}"`. Same crawl job (seeded graph `scaling-42`, identical input and seeds) at two
+Same crawl job (seeded graph `scaling-42`, identical input and seeds) at two
 parallelism levels, fresh JVM per level. N=4 and 4N=16 cores are used (not
 8/32) because this box's 32 cores clock down under full load: the measured
 raw-CPU ceiling for 8→32 hashing processes is 0.69 — no engine could
@@ -235,11 +222,7 @@ box state this number was measured under).
     path = os.path.join(REPO, "BENCH.md")
     with open(path) as f:
         content = f.read()
-    pattern = (
-        r"\n## Scaling evidence \(north rule[^\n]*\n(?:(?!\n## ).)*"
-        if transport == "broadcast"
-        else r"\n## Scaling evidence — partitioned[^\n]*\n(?:(?!\n## ).)*"
-    )
+    pattern = r"\n## Scaling evidence \(north rule[^\n]*\n(?:(?!\n## ).)*"
     content = re.sub(pattern, "\n", content, flags=re.DOTALL)
     # keep the section ordered before any later evidence sections by
     # appending at the end (BENCH.md is organized chronologically)

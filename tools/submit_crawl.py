@@ -26,16 +26,6 @@ def main() -> None:
     ap.add_argument("--n-hosts", type=int, default=200)
     ap.add_argument("--pages-per-host", type=int, default=300)
     ap.add_argument("--wave-seconds", type=float, default=3600.0)
-    ap.add_argument("--seen-filter", default="bloom", choices=["bloom", "cuckoo", "exact"])
-    ap.add_argument(
-        "--bloom-transport",
-        default="broadcast",
-        choices=["broadcast", "partitioned", "auto"],
-        help="partitioned = filters in a snapshot table, cogrouped probe/update "
-        "(the 10^10-URL shape; nothing transits the driver). broadcast is "
-        "faster at small wave sizes. auto switches one-way at the broadcast "
-        "budget; see CrawlConfig.bloom_transport",
-    )
     ap.add_argument("--resume", action="store_true")
     args = ap.parse_args()
 
@@ -51,8 +41,6 @@ def main() -> None:
     cfg = CrawlConfig(
         wave_seconds=args.wave_seconds,
         max_waves=args.max_waves,
-        seen_filter=args.seen_filter,
-        bloom_transport=args.bloom_transport,
         graph=spec,
     )
     eng = FrontierEngine(spark, args.warehouse, cfg)
